@@ -220,14 +220,16 @@ object BpeTrainer {
     require(maxBatch >= 1, s"maxBatch must be positive, got $maxBatch")
     val spark = docs.sparkSession
     import spark.implicits._
-    var cur = wordTypes(docs, idCol, tokens)
+    val seed = wordTypes(docs, idCol, tokens)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cur.count()
-    // checkpoint-block handle of the CURRENT round's table (None while
-    // cur is still the persisted seed): each round releases its
-    // predecessor's blocks after the successor materializes
-    var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] =
-      None
+    var cur = seed
+    // No action of its own materializes a table: each batch's first
+    // collect (the top-k) computes `cur` into its cache or checkpoint
+    // blocks, and only then is the table `cur` was computed from
+    // released. `freeCur` frees cur's own storage; `freeInput` frees its
+    // input's, and is safe to run once cur is materialized.
+    var freeCur: () => Unit = () => seed.unpersist()
+    var freeInput: () => Unit = () => ()
     val merges =
       scala.collection.mutable.ListBuffer.empty[(Long, String, String, Long)]
     var jobs = 0L
@@ -241,6 +243,8 @@ object BpeTrainer {
         .orderBy(col("pf").desc, col("s1"), col("s2")).limit(want)
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      freeInput()
+      freeInput = () => ()
       if (top.isEmpty) {
         pairs.unpersist()
         done = true
@@ -304,29 +308,29 @@ object BpeTrainer {
         // rerun starts over) is the standard one for iterative
         // refinement — a production run pointing at a reliable
         // checkpoint dir would use RDD.checkpoint with the same shape.
-        val applied = applyMerges(cur, accepted.map(t => (t._1, t._2)).toSeq)
-        val nextRdd = applied.rdd
+        val next = applyMerges(cur, accepted.map(t => (t._1, t._2)).toSeq)
+        val nextRdd = next.rdd
         nextRdd.localCheckpoint()
-        nextRdd.count()
-        if (prevRdd.isEmpty) cur.unpersist() // the seed word-type cache
-        prevRdd.foreach(_.unpersist(false))
-        prevRdd = Some(nextRdd)
-        cur = spark.createDataFrame(nextRdd, applied.schema)
+        freeInput = freeCur
+        freeCur = () => nextRdd.unpersist(false)
+        cur = spark.createDataFrame(nextRdd, next.schema)
         jobs += 1
       }
     }
     lastBatchedJobs.set(jobs)
     // hand the caller a type table whose unpersist() actually frees it:
     // re-cache the final table under Dataset caching, then release the
-    // last checkpoint's blocks (safe in-order: the cache materializes
-    // during count(), before the source blocks go)
+    // last checkpoint's blocks and, if the loop ended on a merge, its
+    // input's (safe in-order: both caches materialize during count(),
+    // before the source blocks go)
     val types =
-      if (prevRdd.isEmpty) cur // still the persisted seed
+      if (jobs == 0) cur // still the persisted seed
       else {
         val t = cur.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         t.count()
-        prevRdd.foreach(_.unpersist(false))
+        freeCur()
+        freeInput()
         t
       }
     (merges.toSeq.toDF("round", "s1", "s2", "pf"), types)

@@ -1,7 +1,11 @@
 package graft.ext
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a candidate-pair graph — the step that turns
@@ -11,32 +15,53 @@ import org.apache.spark.storage.StorageLevel
   * A~B and B~C leaves {A,C} both alive even though they are transitively
   * the same document.
   *
-  * Algorithm: min-label propagation. Every node starts labeled with
-  * itself; each round every node takes the min over its own label and its
-  * neighbors' labels; fixpoint = every node carries the component minimum.
-  * Rounds needed = graph diameter. Near-dup graphs are short-diameter by
-  * construction (components are quasi-cliques — documents that all share
-  * LSH buckets), so propagation beats the O(log² n) alternating-star
-  * algorithm (Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC '14) in practice while staying two shuffles per round.
-  * For adversarial long-chain graphs raise `maxIters`; the loop FAILS
-  * LOUDLY rather than returning silently-unconverged labels.
+  * Algorithm: contract, then finish on the driver or in a distributed
+  * loop (Łącki, Mirrokni, Włodarczyk, "Connected Components at Scale via
+  * Local Contractions", arXiv:1807.10727, which extends Kiveris et al.,
+  * "Connected Components in MapReduce and Beyond", SoCC '14):
+  *
+  *  1. Local contraction: one pass over the raw pairs runs a union-find
+  *     per partition (roots = minimum id) and emits `(node, localRoot)`
+  *     for every node the partition saw, roots and self-paired nodes
+  *     included. Every pair is unioned inside its partition and every
+  *     emitted edge joins two nodes of one component, so components are
+  *     preserved; the output is one row per (partition, node), not per
+  *     edge — for quasi-clique near-dup graphs far fewer than |E|.
+  *  2. Driver finish: when the contracted graph holds at most
+  *     `driverFinishEdges` rows, one action caches it and brings it to
+  *     the driver, which finishes the union-find locally and returns a
+  *     local frame. Small graphs pay no per-round job at all.
+  *  3. Otherwise the distributed loop runs on the contracted graph:
+  *     min-label propagation (the default; rounds = diameter, which
+  *     contraction only shortens) or alternating large-star/small-star
+  *     (O(log² n) rounds regardless of diameter). For adversarial
+  *     long-chain graphs raise `maxIters` or pick the star; the loop
+  *     FAILS LOUDLY rather than returning silently-unconverged labels.
   *
   * Scale design (100 TB story):
-  *  - Per round: one equi-join (edges ⋈ labels, hash shuffle on node) +
-  *    one min-aggregation (map-side combinable). Both linear in |E|.
+  *  - Contraction is one narrow pass: no shuffle, O(nodes per partition)
+  *    memory per task. The loop's edge build (symmetrize, repartition on
+  *    src) runs on its output, never on the raw pairs.
+  *  - The driver budget bounds what one action may move to the driver
+  *    (1M id pairs ≈ 16 MB, far under `spark.driver.maxResultSize`).
+  *  - Per loop round: one equi-join (edges ⋈ labels, hash shuffle on
+  *    node) + one min-aggregation (map-side combinable). Both linear in
+  *    the contracted |E|.
   *  - The edge list is persisted once; each round's label frame is
   *    persisted and the previous round's released, so round k+1 plans
   *    against a materialized cache, never a k-deep lazy lineage.
   *  - Convergence check rides the SAME action that materializes the
-  *    round (a changed-label count), so rounds cost no extra pass.
+  *    round (a label sum), so rounds cost no extra pass.
   *  - Only nodes that appear in some pair participate: cluster state is
   *    O(duplicated docs), not O(corpus) — at 100 TB the duplicate graph
   *    is orders of magnitude smaller than the corpus itself.
   */
 object Clustering {
 
-  /** Strategy selector for [[connectedComponents]]. */
+  /** Strategy selector for the distributed loop of
+    * [[connectedComponents]]; graphs within the driver budget never
+    * reach it.
+    */
   sealed trait CcStrategy
   object CcStrategy {
     /** Min-label propagation — rounds = graph diameter. The default:
@@ -54,39 +79,138 @@ object Clustering {
     case object AlternatingStar extends CcStrategy
   }
 
+  /** Default contracted-graph size (rows) up to which
+    * [[connectedComponents]] finishes on the driver: 1M (node, root)
+    * long pairs, about 16 MB.
+    */
+  val DriverFinishEdges: Long = 1L << 20
+
+  /** Which finish the most recent [[connectedComponents]] call in this
+    * thread took, "driver" or "loop" — measurement plumbing for the
+    * scale probe and the specs, never consulted by the operators.
+    */
+  val lastFinish = new java.lang.ThreadLocal[String] {
+    override def initialValue(): String = ""
+  }
+
   /** `pairs(d1, d2)` → `(doc_id, cluster_id)` where cluster_id is the
     * minimum doc id of the connected component. Only ids present in some
     * pair appear (singletons are trivially their own cluster — callers
-    * union them in if needed, see [[clusterDedup]]).
+    * union them in if needed, see [[clusterDedup]]); a pair with a null
+    * id names no document and is ignored. Ids must be integral; the
+    * output keeps their type (the wider of the two columns').
     *
-    * Each round's label frame is re-rooted at its cached RDD
-    * (`createDataFrame(rdd, schema)`): `labels` is referenced twice per
-    * round (own-label union, neighbor join), so persist alone — which
-    * caches data but leaves the logical plan intact — would double the
-    * plan per round and go exponential in analysis cost. Re-rooting
-    * truncates the plan to a leaf, the standard shape for iterative
-    * Spark algorithms. The RETURNED frame stays backed by its cached RDD
-    * for the caller's action(s).
-    *
-    * Convergence detection: labels only ever DECREASE (each round takes
-    * a min over a superset that includes the old label), so the exact
-    * label sum strictly decreases until the fixpoint and is equal iff no
-    * label moved. Comparing sums costs one map-side-combinable aggregate
-    * on the frame the round must materialize anyway — where a
-    * changed-row check would add a whole extra join against the previous
-    * round's labels. decimal(38,0) keeps the sum exact (id sums overflow
-    * a long at corpus scale).
+    * `driverFinishEdges` is the contracted-graph size up to which the
+    * driver finishes the job (0 forces the distributed loop);
+    * `maxIters` and `strategy` govern that loop, and `onRounds` gets its
+    * round count (0 when the driver finished).
     */
   def connectedComponents(pairs: DataFrame, d1: String = "d1",
       d2: String = "d2", maxIters: Int = 25,
+      driverFinishEdges: Long = DriverFinishEdges,
       strategy: CcStrategy = CcStrategy.MinLabel,
-      onRounds: Int => Unit = _ => ()): DataFrame =
-    strategy match {
-      case CcStrategy.MinLabel =>
-        minLabelCC(pairs, d1, d2, maxIters, onRounds)
-      case CcStrategy.AlternatingStar =>
-        alternatingStarCC(pairs, d1, d2, maxIters, onRounds)
+      onRounds: Int => Unit = _ => ()): DataFrame = {
+    val idType = integralIdType(pairs, d1, d2)
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val contracted = contract(pairs, d1, d2)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // both finishes return frames backed by their own storage (a local
+    // relation, or the loop's materialized caches)
+    val labels = try collectWithin(contracted, driverFinishEdges) match {
+      case Some(edges) =>
+        lastFinish.set("driver")
+        onRounds(0)
+        val uf = new MinRootUnionFind
+        edges.foreach { case (a, b) => uf.union(a, b) }
+        uf.labels.toSeq.toDF("doc_id", "cluster_id")
+      case None =>
+        lastFinish.set("loop")
+        val graph = contracted.toDF("node", "root")
+        strategy match {
+          case CcStrategy.MinLabel => minLabelCC(graph, maxIters, onRounds)
+          case CcStrategy.AlternatingStar =>
+            alternatingStarCC(graph, maxIters, onRounds)
+        }
+    } finally contracted.unpersist()
+    labels.select(col("doc_id").cast(idType).as("doc_id"),
+      col("cluster_id").cast(idType).as("cluster_id"))
+  }
+
+  /** The id type both columns widen to; anything but an integral type
+    * fails here, by name, instead of deep inside the loop's label sum.
+    */
+  private def integralIdType(pairs: DataFrame, d1: String,
+      d2: String): DataType = {
+    val types = pairs.select(col(d1), col(d2)).schema.map(_.dataType)
+    types.zip(Seq(d1, d2)).foreach { case (t, c) =>
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"connectedComponents needs integral ids; column $c is " +
+          t.catalogString)
     }
+    types.maxBy(_.defaultSize)
+  }
+
+  /** Union-find over long ids whose every root is its set's minimum id,
+    * with path compression.
+    */
+  private final class MinRootUnionFind {
+    private val parent = mutable.LongMap.empty[Long]
+
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+
+    /** (node, root) for every node seen, each root as (root, root). */
+    def labels: Array[(Long, Long)] =
+      parent.keys.toArray.map(n => (n, find(n)))
+  }
+
+  /** Local contraction: per partition, union every pair and emit each
+    * node seen with its partition-local minimum root.
+    */
+  private def contract(pairs: DataFrame, d1: String,
+      d2: String): RDD[(Long, Long)] =
+    pairs.select(col(d1).cast(LongType), col(d2).cast(LongType))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val uf = new MinRootUnionFind
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) uf.union(r.getLong(0), r.getLong(1))
+        }
+        uf.labels.iterator
+      }
+
+  /** One action that materializes `contracted`'s cache and returns its
+    * rows when there are at most `budget` of them. A partition ships its
+    * rows only while it holds at most its even share of the budget, and
+    * otherwise just its count, so the action never moves more than
+    * `budget` rows; a skewed graph that still fits pays one more collect,
+    * from the cache. `take`-style probing would instead scan the
+    * partitions in growing waves, one job each.
+    */
+  private def collectWithin(contracted: RDD[(Long, Long)],
+      budget: Long): Option[Array[(Long, Long)]] = {
+    val share = budget / math.max(1, contracted.getNumPartitions)
+    val parts = contracted.sparkContext.runJob(contracted,
+      (it: Iterator[(Long, Long)]) => {
+        val rows = mutable.ArrayBuffer.empty[(Long, Long)]
+        var n = 0L
+        it.foreach { e => n += 1; if (n <= share) rows += e }
+        (n, if (n <= share) rows.toArray else null)
+      })
+    if (parts.map(_._1).sum > budget) None
+    else if (parts.forall(_._2 != null)) Some(parts.flatMap(_._2))
+    else Some(contracted.collect())
+  }
 
   /** Plan-truncation helper for iterative algorithms: persist the frame's
     * RDD and re-root a new frame at it. Persist alone caches data but
@@ -94,7 +218,7 @@ object Clustering {
     * round doubles the plan every round and goes exponential in analysis
     * cost; re-rooting truncates to a leaf.
     */
-  private def rooted(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+  private def rooted(df: DataFrame): (DataFrame, RDD[org.apache.spark.sql.Row]) = {
     val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     // persist caches DATA but every task still serializes the full
     // nested RDD lineage; past ~60 rounds that chain overflows the task
@@ -110,9 +234,32 @@ object Clustering {
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
 
-  private def minLabelCC(pairs: DataFrame, d1: String,
-      d2: String, maxIters: Int,
-      onRounds: Int => Unit = _ => ()): DataFrame = {
+  /** Min-label propagation over the contracted graph `(node, root)`.
+    *
+    * Each round's label frame is re-rooted at its cached RDD
+    * (`createDataFrame(rdd, schema)`): `labels` is referenced twice per
+    * round (own-label union, neighbor join), so persist alone — which
+    * caches data but leaves the logical plan intact — would double the
+    * plan per round and go exponential in analysis cost. Re-rooting
+    * truncates the plan to a leaf, the standard shape for iterative
+    * Spark algorithms. The RETURNED frame stays backed by its cached RDD
+    * for the caller's action(s).
+    *
+    * Every node starts at the least of its local roots, an id of its own
+    * component no larger than its own, so the fixpoint is still the
+    * component minimum.
+    *
+    * Convergence detection: labels only ever DECREASE (each round takes
+    * a min over a superset that includes the old label), so the exact
+    * label sum strictly decreases until the fixpoint and is equal iff no
+    * label moved. Comparing sums costs one map-side-combinable aggregate
+    * on the frame the round must materialize anyway — where a
+    * changed-row check would add a whole extra join against the previous
+    * round's labels. decimal(38,0) keeps the sum exact (id sums overflow
+    * a long at corpus scale).
+    */
+  private def minLabelCC(graph: DataFrame, maxIters: Int,
+      onRounds: Int => Unit): DataFrame = {
     // persist PRE-PARTITIONED on the join key: every round equi-joins
     // edges on src, and an unpartitioned cache re-shuffles the full
     // |E|-sized edge set once per round (rounds × the largest byte
@@ -120,17 +267,14 @@ object Clustering {
     // outputPartitioning, so the per-round join only exchanges the
     // label side (O(nodes), re-rooted each round) — guide §2.4's
     // "operations keyed the same way share one exchange".
-    val edges = pairs
-      .select(col(d1).as("src"), col(d2).as("dst"))
-      .union(pairs.select(col(d2).as("src"), col(d1).as("dst")))
-      .distinct()
+    val star = graph.where(col("node") =!= col("root"))
+    val edges = star.select(col("node").as("src"), col("root").as("dst"))
+      .union(star.select(col("root").as("src"), col("node").as("dst")))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     var (labels, labelsRdd) = rooted(
-      edges.select(col("src").as("node"))
-        .distinct()
-        .withColumn("label", col("node")))
+      graph.groupBy("node").agg(min("root").as("label")))
 
     // coalesce: sum over ZERO rows is null — an empty pair set (a clean
     // corpus) must converge on round 1 with sum 0, not NPE in compareTo
@@ -172,13 +316,15 @@ object Clustering {
   }
 
   /** Alternating large-star/small-star (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC '14, Algorithm 4).
+    * Components in MapReduce and Beyond", SoCC '14, Algorithm 4) over
+    * the contracted graph `(node, root)`.
     * Converges in O(log² n) rounds INDEPENDENT of graph diameter — the
     * opt-in strategy for adversarial long-chain graphs where min-label
     * propagation (rounds = diameter) would hit `maxIters`.
     *
     * Edge set is kept CANONICAL throughout: (src, dst) with src > dst,
-    * distinct, no self-loops. Per round:
+    * distinct, no self-loops — which every contracted non-root row
+    * already is (its root is a partition-local minimum). Per round:
     *  - large-star: every node u computes m = min(Γ⁺(u)) over the
     *    symmetric neighborhood and re-points each LARGER neighbor
     *    v > u at m (one groupBy + one join on src);
@@ -201,21 +347,14 @@ object Clustering {
     * as [[minLabelCC]]; same output contract (every node appearing in
     * some pair, labeled with its component minimum).
     */
-  private def alternatingStarCC(pairs: DataFrame, d1: String,
-      d2: String, maxIters: Int,
-      onRounds: Int => Unit = _ => ()): DataFrame = {
-    val sym = pairs
-      .select(col(d1).as("src"), col(d2).as("dst"))
-      .union(pairs.select(col(d2).as("src"), col(d1).as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private def alternatingStarCC(graph: DataFrame, maxIters: Int,
+      onRounds: Int => Unit): DataFrame = {
     // node universe is fixed up front: self-paired nodes carry no
     // canonical edge but must still appear in the output (as their own
-    // cluster), exactly as in min-label. Materialize it NOW — sym is
-    // unpersisted before the caller's first action, and a lazy nodes
-    // frame would recompute the corpus-sized symmetrize+distinct then.
-    val (nodes, nodesRdd) = rooted(
-      sym.select(col("src").as("node")).distinct())
+    // cluster), exactly as in min-label. Materialize it NOW — the
+    // contracted graph is unpersisted before the caller's first action,
+    // and a lazy nodes frame would recompute the contraction then.
+    val (nodes, nodesRdd) = rooted(graph.select(col("node")).distinct())
     nodesRdd.count()
 
     def largeStar(e: DataFrame): DataFrame = {
@@ -241,7 +380,8 @@ object Clustering {
     }
 
     var (edges, edgesRdd) = rooted(
-      sym.where(col("src") > col("dst")))
+      graph.where(col("node") =!= col("root"))
+        .select(col("node").as("src"), col("root").as("dst")).distinct())
     var edgeCount = edges.count()
     var converged = edgeCount == 0L
     var iters = 0
@@ -257,7 +397,7 @@ object Clustering {
       iters += 1
     }
     if (!converged) {
-      edgesRdd.unpersist(); nodesRdd.unpersist(); sym.unpersist()
+      edgesRdd.unpersist(); nodesRdd.unpersist()
       throw new IllegalStateException(
         s"alternatingStarCC did not converge in $maxIters rounds — " +
           "raise maxIters (expected O(log² n) rounds)")
@@ -265,14 +405,12 @@ object Clustering {
     onRounds(iters)
     // star fixpoint: every non-root points at exactly its component
     // minimum; roots (and self-paired singletons) don't appear as src
-    val out = nodes
+    nodes
       .join(edges.groupBy("src").agg(min(col("dst")).as("_lab"))
           .withColumnRenamed("src", "node"),
         Seq("node"), "left")
       .select(col("node").as("doc_id"),
         coalesce(col("_lab"), col("node")).as("cluster_id"))
-    sym.unpersist()
-    out
   }
 
   /** Fuzzy dedup, completed: keep every document that is either outside

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, NullType}
 
 /** Native fused forms of the quantized-vector arithmetic in
   * graft.ext.Similarity (exact integer dot product, squared L2 norm,
@@ -82,13 +82,16 @@ private[functions] object QVecTypeCheck {
     * a runtime error instead of an analysis-time type error.
     * (ExpectsInputTypes is not implementable outside Spark —
     * AbstractDataType is private[sql] — so the check is hand-rolled;
-    * element nullability is accepted, matching the null-mirroring
-    * evaluation.)
+    * element nullability and an untyped NULL argument are accepted,
+    * matching the null-mirroring evaluation.)
     */
   def check(fn: String, children: Seq[Expression]): TypeCheckResult = {
+    def accepted(t: DataType): Boolean = t match {
+      case ArrayType(LongType, _) | NullType => true
+      case _ => false
+    }
     val bad = children.zipWithIndex.collectFirst {
-      case (c, i) if !c.dataType.isInstanceOf[ArrayType] ||
-          c.dataType.asInstanceOf[ArrayType].elementType != LongType =>
+      case (c, i) if !accepted(c.dataType) =>
         s"argument ${i + 1} of $fn requires array<bigint>, got " +
           c.dataType.catalogString
     }
@@ -112,9 +115,12 @@ private[functions] trait QVecBinary extends BinaryExpression {
   override protected def nullSafeEval(a: Any, b: Any): Any =
     evalArrays(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
+  // an untyped NULL argument binds no ArrayData parameter of the static
+  // call: generate the NULL result directly, as eval does
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
+    if (children.exists(_.dataType == NullType)) ExprCode.forNullValue(dataType)
+    else nullSafeCodeGen(ctx, ev, (a, b) => {
       s"""
          |java.lang.Long ${ev.value}_r = $staticCall($a, $b);
          |if (${ev.value}_r == null) {
@@ -159,7 +165,8 @@ case class QNorm2(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
+    if (child.dataType == NullType) ExprCode.forNullValue(dataType)
+    else nullSafeCodeGen(ctx, ev, a => {
       s"""
          |java.lang.Long ${ev.value}_r = graft.functions.QVec.norm2($a);
          |if (${ev.value}_r == null) {

@@ -630,8 +630,9 @@ object ExtQueries {
         .orderBy("d1", "d2")
     }),
 
-    // Pairs → clusters: connected components (min-label propagation)
-    // over the verified LSH near-dup pair graph. A~B and B~C put
+    // Pairs → clusters: connected components (local contraction, then
+    // a driver or min-label finish) over the verified LSH near-dup pair
+    // graph. A~B and B~C put
     // {A,B,C} in ONE cluster labeled by its min doc id — the transitive
     // closure pairwise dedup misses. Oracle = recursive CTE.
     "q_neardup_cluster" -> ((s, dir) => {
@@ -645,12 +646,14 @@ object ExtQueries {
     // small-star strategy (the opt-in for adversarial long-diameter
     // graphs) — SAME oracle as q_neardup_cluster, so the strategy's
     // equivalence to min-label is proven by DuckDB hash, not just the
-    // random-graph parity spec.
+    // random-graph parity spec. A zero driver budget forces the
+    // distributed star loop: this graph would otherwise finish on the
+    // driver and the oracle would never see the strategy.
     "q_cluster_star" -> ((s, dir) => {
       val pairs = NearDup.lshNearDupPairs(docsWithTokens(s, dir),
         col("doc_id"), TA.distinctTokens(col("text")), bands = 4,
         rowsPerBand = 2, maxBucket = 10, minJaccard = 0.6)
-      Clustering.connectedComponents(pairs,
+      Clustering.connectedComponents(pairs, driverFinishEdges = 0,
         strategy = Clustering.CcStrategy.AlternatingStar).orderBy("doc_id")
     }),
 
@@ -3008,7 +3011,7 @@ object ExtQueries {
     * reach(doc, lab) = every label in doc's component (edges are
     * symmetrized; UNION dedups so the recursion terminates), so
     * min(lab) per doc is the component minimum — the same fixpoint
-    * Clustering.connectedComponents propagates to.
+    * Clustering.connectedComponents returns.
     */
   private def ccCtes: String =
     s"""$lshPairsCtes,

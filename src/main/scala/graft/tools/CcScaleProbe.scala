@@ -19,17 +19,22 @@ import graft.ext.Clustering.CcStrategy
   *    components of 32 nodes, each a ring + chords (diameter ≤ ~4);
   *    n scales with the factor.
   *  - LONG PATH (the adversarial shape): one path of n nodes —
-  *    diameter n-1, min-label's worst case by construction.
+  *    diameter n-1, min-label's worst case by construction when laid
+  *    out so that no partition holds a run of it (the scattered layout
+  *    below); contiguous slices contract to one star per partition.
   *
-  * For each (shape, size, strategy): rounds to converge, wall seconds,
-  * and cumulative shuffle write during the run (the scale currency).
+  * For each (shape, size, strategy): the finish that ran (`driver` or
+  * `loop`, see Clustering.connectedComponents), rounds to converge, wall
+  * seconds, and cumulative shuffle write during the run (the scale
+  * currency).
   * Min-label on paths is priced only while affordable (rounds = path
   * length; the probe caps it and records the projection instead of
   * burning hours proving linearity twice).
   *
-  * Run: sbt "runMain graft.tools.CcScaleProbe [factor]" — factor
+  * Run: sbt "runMain graft.tools.CcScaleProbe [factor] [loop]" — factor
   * scales the quasi-clique corpus (default decades 1/10/100 are all
-  * run when no factor is given).
+  * run when no factor is given); `loop` sets the driver budget to 0 so
+  * every run takes the distributed loop.
   */
 object CcScaleProbe {
 
@@ -64,15 +69,15 @@ object CcScaleProbe {
   }
 
   private def run(name: String, pairs: DataFrame, strategy: CcStrategy,
-      maxIters: Int, listener: ShuffleListener): Unit = {
-    val spark = pairs.sparkSession
+      maxIters: Int, budget: Long, listener: ShuffleListener): Unit = {
     var rounds = -1
     val before = listener.written.get
     val t0 = System.nanoTime()
     val result =
       try {
         val cc = Clustering.connectedComponents(pairs, maxIters = maxIters,
-          strategy = strategy, onRounds = rounds = _)
+          driverFinishEdges = budget, strategy = strategy,
+          onRounds = rounds = _)
         val agg = cc.agg(count(lit(1)), countDistinct(col("cluster_id")))
           .head()
         s"nodes=${agg.getLong(0)} comps=${agg.getLong(1)}"
@@ -85,13 +90,16 @@ object CcScaleProbe {
     // equivalent, same as ScaleProbe's snapshot settle)
     Thread.sleep(300)
     val shuffleMb = (listener.written.get - before) / 1e6
-    println(f"$name%-42s rounds=$rounds%4d wall=$wall%8.2fs " +
+    val path = Clustering.lastFinish.get()
+    println(f"$name%-42s path=$path%-6s rounds=$rounds%4d wall=$wall%8.2fs " +
       f"shuffleWrite=$shuffleMb%10.1f MB  $result")
   }
 
   def main(args: Array[String]): Unit = {
     val factors: Seq[Long] = args.headOption.filter(_.forall(_.isDigit))
       .map(f => Seq(f.toLong)).getOrElse(Seq(1L, 10L, 100L))
+    val budget =
+      if (args.contains("loop")) 0L else Clustering.DriverFinishEdges
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -106,27 +114,34 @@ object CcScaleProbe {
       val n = 10000L * f
       val qc = quasiClique(spark, n)
       run(s"quasi-clique n=$n minlabel", qc, CcStrategy.MinLabel, 25,
-        listener)
+        budget, listener)
       run(s"quasi-clique n=$n star", qc, CcStrategy.AlternatingStar, 25,
-        listener)
+        budget, listener)
     }
-    // the adversarial decade sweep: path length doubles; min-label's
-    // rounds (and wall) double with it while star's stay ~log²
+    // the adversarial decade sweep: path length doubles. range() lays
+    // the path out in contiguous slices, which local contraction
+    // collapses to one star per partition; the scattered layout
+    // (round-robin over 8 partitions) leaves contraction almost nothing,
+    // so min-label's rounds (and wall) double with the length there
+    // while star's stay ~log²
     for (len <- Seq(64L, 128L, 256L)) {
       val p = longPath(spark, len)
-      run(s"long-path n=$len minlabel", p, CcStrategy.MinLabel,
-        len.toInt + 2, listener)
-      run(s"long-path n=$len star", p, CcStrategy.AlternatingStar, 25,
-        listener)
+      for ((layout, pairs) <- Seq("" -> p, " scattered" -> p.repartition(8))) {
+        run(s"long-path$layout n=$len minlabel", pairs, CcStrategy.MinLabel,
+          len.toInt + 2, budget, listener)
+        run(s"long-path$layout n=$len star", pairs,
+          CcStrategy.AlternatingStar, 25, budget, listener)
+      }
     }
-    // at scale, min-label on a long path is priced by PROJECTION: its
-    // per-round cost is flat (measure 3 capped rounds), rounds = n-1
+    // at scale, min-label on an uncontracted long path is priced by
+    // PROJECTION: its per-round cost is flat (measure 3 capped rounds),
+    // rounds = n-1
     for (len <- Seq(100000L, 1000000L)) {
       val p = longPath(spark, len)
-      run(s"long-path n=$len minlabel(cap=3 rounds, DNF expected)", p,
-        CcStrategy.MinLabel, 3, listener)
+      run(s"long-path n=$len minlabel(cap=3 rounds)", p,
+        CcStrategy.MinLabel, 3, budget, listener)
       run(s"long-path n=$len star", p, CcStrategy.AlternatingStar, 30,
-        listener)
+        budget, listener)
     }
     spark.stop()
   }

@@ -86,4 +86,31 @@ class QVecSpec extends AnyFunSuite with SparkTestBase {
     assert(row.getLong(0) == 1000L * 1000 + 500L * 500 + 250L * 250)
     assert(row.getLong(1) == row.getLong(0))
   }
+
+  test("the SQL forms reject non-bigint vectors at analysis and mirror a NULL argument") {
+    GraftFunctions.register(spark)
+    // a range source keeps the inputs non-foldable, so the NULL cases
+    // run the generated code, not constant folding
+    spark.range(1)
+      .selectExpr("array(id + 1, id - 2) AS v", "array(1, 2) AS iv", "id AS n")
+      .createOrReplaceTempView("qvec_types")
+    for ((expr, got) <- Seq(
+        s"${GraftFunctions.QDotName}(iv, v)" -> "array<int>",
+        s"${GraftFunctions.QD2Name}(v, n)" -> "bigint",
+        s"${GraftFunctions.QNorm2Name}(iv)" -> "array<int>")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $expr FROM qvec_types")
+      }
+      assert(e.getMessage.contains(s"requires array<bigint>, got $got"),
+        s"$expr: ${e.getMessage}")
+    }
+    val row = spark.sql(
+      s"""SELECT ${GraftFunctions.QDotName}(v, v),
+         |  ${GraftFunctions.QD2Name}(NULL, v),
+         |  ${GraftFunctions.QNorm2Name}(NULL),
+         |  ${GraftFunctions.QDotName}(v, NULL)
+         |FROM qvec_types""".stripMargin).head()
+    assert(row.getLong(0) == 5L)
+    assert((1 to 3).forall(row.isNullAt), s"NULL must mirror: $row")
+  }
 }
