@@ -3,7 +3,7 @@ package graft.ext
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -26,11 +26,16 @@ import org.apache.spark.storage.StorageLevel
   *     included. Every pair is unioned inside its partition and every
   *     emitted edge joins two nodes of one component, so components are
   *     preserved; the output is one row per (partition, node), not per
-  *     edge — for quasi-clique near-dup graphs far fewer than |E|.
+  *     edge — far fewer than |E| where a partition holds many pairs of
+  *     one component, about 2|E| where it holds few (hash-partitioned
+  *     LSH pairs at battery sizes: 0.97-0.99 × 2|E|, SCALING.md). A
+  *     union-find that reaches [[ContractFlushNodes]] nodes is emitted
+  *     and restarted, which bounds a task's heap at the cost of
+  *     contraction.
   *  2. Driver finish: when the contracted graph holds at most
   *     `driverFinishEdges` rows, one action caches it and brings it to
   *     the driver, which finishes the union-find locally and returns a
-  *     local frame. Small graphs pay no per-round job at all.
+  *     driver-built frame. Small graphs pay no per-round job at all.
   *  3. Otherwise the distributed loop runs on the contracted graph:
   *     min-label propagation (the default; rounds = diameter, which
   *     contraction only shortens) or alternating large-star/small-star
@@ -39,11 +44,16 @@ import org.apache.spark.storage.StorageLevel
   *     FAILS LOUDLY rather than returning silently-unconverged labels.
   *
   * Scale design (100 TB story):
-  *  - Contraction is one narrow pass: no shuffle, O(nodes per partition)
-  *    memory per task. The loop's edge build (symmetrize, repartition on
-  *    src) runs on its output, never on the raw pairs.
+  *  - Contraction is one narrow pass: no shuffle, at most
+  *    [[ContractFlushNodes]] union-find nodes in memory per task. The
+  *    loop's edge build (symmetrize, repartition on src) runs on its
+  *    output, never on the raw pairs.
   *  - The driver budget bounds what one action may move to the driver
   *    (1M id pairs ≈ 16 MB, far under `spark.driver.maxResultSize`).
+  *    On 4 cores CcScaleProbe measured the driver finish ahead of the
+  *    loop at every size it ran, up to 8M contracted rows (SCALING.md
+  *    "Round 23"), so the budget is set by driver memory, not by a
+  *    speed crossover.
   *  - Per loop round: one equi-join (edges ⋈ labels, hash shuffle on
   *    node) + one min-aggregation (map-side combinable). Both linear in
   *    the contracted |E|.
@@ -81,16 +91,29 @@ object Clustering {
 
   /** Default contracted-graph size (rows) up to which
     * [[connectedComponents]] finishes on the driver: 1M (node, root)
-    * long pairs, about 16 MB.
+    * long pairs, about 16 MB collected. A driver-memory bound: the
+    * driver finish beat the loop at every size measured, 8x past it.
     */
   val DriverFinishEdges: Long = 1L << 20
 
-  /** Which finish the most recent [[connectedComponents]] call in this
-    * thread took, "driver" or "loop" — measurement plumbing for the
-    * scale probe and the specs, never consulted by the operators.
+  /** Node count at which a contraction task emits its union-find and
+    * starts a fresh one, bounding the task's map at about 20 MB of heap
+    * however large the partition.
     */
-  val lastFinish = new java.lang.ThreadLocal[String] {
-    override def initialValue(): String = ""
+  val ContractFlushNodes: Int = 1 << 18
+
+  /** The finish a [[connectedComponents]] call took, "driver" or
+    * "loop", and the contracted graph's row count (-1 when a zero
+    * driver budget skipped the count).
+    */
+  final case class Finish(path: String, contractedRows: Long)
+
+  /** The [[Finish]] of the most recent [[connectedComponents]] call in
+    * this thread — measurement plumbing for the scale probe and the
+    * specs, never consulted by the operators.
+    */
+  val lastFinish = new java.lang.ThreadLocal[Finish] {
+    override def initialValue(): Finish = Finish("", -1L)
   }
 
   /** `pairs(d1, d2)` → `(doc_id, cluster_id)` where cluster_id is the
@@ -101,9 +124,9 @@ object Clustering {
     * output keeps their type (the wider of the two columns').
     *
     * `driverFinishEdges` is the contracted-graph size up to which the
-    * driver finishes the job (0 forces the distributed loop);
-    * `maxIters` and `strategy` govern that loop, and `onRounds` gets its
-    * round count (0 when the driver finished).
+    * driver finishes the job (0 forces the distributed loop, even on
+    * empty input); `maxIters` and `strategy` govern that loop, and
+    * `onRounds` gets its round count (0 when the driver finished).
     */
   def connectedComponents(pairs: DataFrame, d1: String = "d1",
       d2: String = "d2", maxIters: Int = 25,
@@ -115,17 +138,17 @@ object Clustering {
     import spark.implicits._
     val contracted = contract(pairs, d1, d2)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // both finishes return frames backed by their own storage (a local
-    // relation, or the loop's materialized caches)
+    // both finishes return frames backed by their own storage (the
+    // driver's id arrays, or the loop's materialized caches)
     val labels = try collectWithin(contracted, driverFinishEdges) match {
-      case Some(edges) =>
-        lastFinish.set("driver")
+      case (rows, Some(parts)) =>
+        lastFinish.set(Finish("driver", rows))
         onRounds(0)
         val uf = new MinRootUnionFind
-        edges.foreach { case (a, b) => uf.union(a, b) }
-        uf.labels.toSeq.toDF("doc_id", "cluster_id")
-      case None =>
-        lastFinish.set("loop")
+        for (p <- parts; i <- p.indices by 2) uf.union(p(i), p(i + 1))
+        driverFrame(spark, uf.labels.toArray)
+      case (rows, None) =>
+        lastFinish.set(Finish("loop", rows))
         val graph = contracted.toDF("node", "root")
         strategy match {
           case CcStrategy.MinLabel => minLabelCC(graph, maxIters, onRounds)
@@ -135,6 +158,25 @@ object Clustering {
     } finally contracted.unpersist()
     labels.select(col("doc_id").cast(idType).as("doc_id"),
       col("cluster_id").cast(idType).as("cluster_id"))
+  }
+
+  /** The driver finish's `(doc_id, cluster_id)` rows as a frame over
+    * flat node and root arrays, one slice per default-parallelism task.
+    * Not a local relation: each consumer ships a local relation's rows
+    * into its tasks at about 3.4 µs apiece (3.4 s per downstream join
+    * at 1M rows, against 0.5 s here), and on the `floors` benchmark's
+    * small graphs it was no faster (SCALING.md "Round 23").
+    */
+  private[graft] def driverFrame(spark: SparkSession,
+      labels: Array[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val slice = labels.length / sc.defaultParallelism + 1
+    val slices = labels.grouped(slice)
+      .map(g => (g.map(_._1), g.map(_._2))).toSeq
+    sc.parallelize(slices, math.max(1, slices.size))
+      .flatMap { case (nodes, roots) => nodes.iterator.zip(roots.iterator) }
+      .toDF("doc_id", "cluster_id")
   }
 
   /** The id type both columns widen to; anything but an integral type
@@ -157,6 +199,8 @@ object Clustering {
   private final class MinRootUnionFind {
     private val parent = mutable.LongMap.empty[Long]
 
+    def size: Int = parent.size
+
     def find(x: Long): Long = {
       var r = parent.getOrElseUpdate(x, x)
       while (parent(r) != r) r = parent(r)
@@ -170,47 +214,67 @@ object Clustering {
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
 
-    /** (node, root) for every node seen, each root as (root, root). */
-    def labels: Array[(Long, Long)] =
-      parent.keys.toArray.map(n => (n, find(n)))
+    /** (node, root) for every node seen, each root as (root, root).
+      * Lazy: path compression only rewrites values of existing keys,
+      * which never moves an entry under the key iterator.
+      */
+    def labels: Iterator[(Long, Long)] =
+      parent.keysIterator.map(n => (n, find(n)))
   }
 
-  /** Local contraction: per partition, union every pair and emit each
-    * node seen with its partition-local minimum root.
+  /** Local contraction: per partition, union the pairs and emit each
+    * node seen with its minimum root. A union-find that reaches
+    * `flushNodes` nodes is emitted and replaced by a fresh one; every
+    * row it emitted still joins two nodes of one component, so a flush
+    * costs contraction, never correctness.
     */
-  private def contract(pairs: DataFrame, d1: String,
-      d2: String): RDD[(Long, Long)] =
+  private[ext] def contract(pairs: DataFrame, d1: String, d2: String,
+      flushNodes: Int = ContractFlushNodes): RDD[(Long, Long)] =
     pairs.select(col(d1).cast(LongType), col(d2).cast(LongType))
       .queryExecution.toRdd.mapPartitions { rows =>
-        val uf = new MinRootUnionFind
-        rows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) uf.union(r.getLong(0), r.getLong(1))
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { rs =>
+          val uf = new MinRootUnionFind
+          while (rs.hasNext && uf.size < flushNodes) {
+            val r = rs.next()
+            if (!r.isNullAt(0) && !r.isNullAt(1))
+              uf.union(r.getLong(0), r.getLong(1))
+          }
+          uf.labels
         }
-        uf.labels.iterator
       }
 
-  /** One action that materializes `contracted`'s cache and returns its
-    * rows when there are at most `budget` of them. A partition ships its
-    * rows only while it holds at most its even share of the budget, and
-    * otherwise just its count, so the action never moves more than
-    * `budget` rows; a skewed graph that still fits pays one more collect,
-    * from the cache. `take`-style probing would instead scan the
-    * partitions in growing waves, one job each.
+  /** One action that materializes `contracted`'s cache and counts it,
+    * returning the count and, when it is within `budget`, the rows as
+    * flat per-partition (node, root, node, root, ...) arrays. A
+    * partition ships its rows only while it holds at most its even
+    * share of the budget, and otherwise just its count, so the action
+    * never moves more than `budget` rows; a skewed graph that still fits
+    * pays one more collect, from the cache. `take`-style probing would
+    * instead scan the partitions in growing waves, one job each. A zero
+    * budget runs no action at all (count -1).
     */
   private def collectWithin(contracted: RDD[(Long, Long)],
-      budget: Long): Option[Array[(Long, Long)]] = {
-    val share = budget / math.max(1, contracted.getNumPartitions)
-    val parts = contracted.sparkContext.runJob(contracted,
-      (it: Iterator[(Long, Long)]) => {
-        val rows = mutable.ArrayBuffer.empty[(Long, Long)]
+      budget: Long): (Long, Option[Array[Array[Long]]]) =
+    if (budget <= 0) (-1L, None)
+    else {
+      val sc = contracted.sparkContext
+      val share = budget / math.max(1, contracted.getNumPartitions)
+      def flat(it: Iterator[(Long, Long)], limit: Long) = {
+        val buf = new mutable.ArrayBuilder.ofLong
         var n = 0L
-        it.foreach { e => n += 1; if (n <= share) rows += e }
-        (n, if (n <= share) rows.toArray else null)
-      })
-    if (parts.map(_._1).sum > budget) None
-    else if (parts.forall(_._2 != null)) Some(parts.flatMap(_._2))
-    else Some(contracted.collect())
-  }
+        it.foreach { case (a, b) =>
+          n += 1; if (n <= limit) { buf += a; buf += b }
+        }
+        (n, if (n <= limit) buf.result() else null)
+      }
+      val parts = sc.runJob(contracted,
+        (it: Iterator[(Long, Long)]) => flat(it, share))
+      val rows = parts.map(_._1).sum
+      if (rows > budget) (rows, None)
+      else if (parts.forall(_._2 != null)) (rows, Some(parts.map(_._2)))
+      else (rows, Some(sc.runJob(contracted,
+        (it: Iterator[(Long, Long)]) => flat(it, Long.MaxValue)._2)))
+    }
 
   /** Plan-truncation helper for iterative algorithms: persist the frame's
     * RDD and re-root a new frame at it. Persist alone caches data but

@@ -39,7 +39,7 @@ class ClusteringSpec extends AnyFunSuite with SparkTestBase {
       want: Map[Long, Long], maxIters: Int = 25): Unit =
     for ((finish, budget) <- Finishes; s <- Strategies) {
       assert(cc(pairs, maxIters, budget, s) == want, s"$finish/$s")
-      assert(Clustering.lastFinish.get() == finish, s"$finish/$s")
+      assert(Clustering.lastFinish.get().path == finish, s"$finish/$s")
     }
 
   /** A path's pairs over two partitions, split by the parity of their
@@ -128,8 +128,25 @@ class ClusteringSpec extends AnyFunSuite with SparkTestBase {
       for ((finish, budget) <- Finishes; s <- Strategies) {
         assert(ccOf(df, budget = budget, strategy = s) === want,
           s"trial $trial $finish/$s: $pairs")
-        assert(Clustering.lastFinish.get() == finish)
+        assert(Clustering.lastFinish.get().path == finish)
       }
+    }
+  }
+
+  test("a tiny contraction flush size still preserves every component") {
+    // flushing every 3 nodes splits each partition's union-find many
+    // times over (more rows than the default flush emits); the
+    // contracted rows must still span exactly the pairs' components
+    val rnd = new scala.util.Random(31)
+    for (trial <- 1 to 3) {
+      val pairs = Seq.fill(80)(
+        (rnd.nextInt(60).toLong + 1, rnd.nextInt(60).toLong + 1))
+      val df = pairs.toDF("d1", "d2").repartition(8)
+      val contracted = Clustering.contract(df, "d1", "d2", flushNodes = 3)
+        .collect().toSeq
+      assert(reference(contracted) === reference(pairs), s"trial $trial")
+      assert(contracted.length > Clustering.contract(df, "d1", "d2").count(),
+        s"trial $trial")
     }
   }
 
@@ -138,9 +155,11 @@ class ClusteringSpec extends AnyFunSuite with SparkTestBase {
       Map(5L -> 5L, 9L -> 5L, 2L -> 2L, 7L -> 2L, 3L -> 2L, 11L -> 11L))
     assertAllFinishes(Seq((4L, 4L)), Map(4L -> 4L))
     val empty = Seq.empty[(Long, Long)].toDF("d1", "d2")
-    for ((_, budget) <- Finishes; s <- Strategies)
+    for ((finish, budget) <- Finishes; s <- Strategies) {
       assert(Clustering.connectedComponents(empty,
         driverFinishEdges = budget, strategy = s).count() === 0L)
+      assert(Clustering.lastFinish.get().path == finish, s"$finish/$s")
+    }
   }
 
   test("int and long ids keep their type in the output schema") {
