@@ -117,6 +117,23 @@ object Bench {
     s"""{"metric":"total","value":${f3(total)},"unit":"sec","cpu_sec":${f3(cpuTotal)},"queries":$qs,"cpu":$cpuJson,"passes":$passJson,"failed":$failedJson,"sf":"$sfDir"}"""
   }
 
+  /** Cores the resolved master runs tasks on, which stamps the per-core
+    * sidecar: `local` 1, `local[N]` and `local[N,F]` N, `local[*]` the
+    * host's processors, `local-cluster[n,c,m]` n*c, and for any other
+    * master the parallelism the context reports.
+    */
+  def masterCores(master: String, reported: => Int): Int = {
+    val LocalN = raw"local\[\s*([0-9]+|\*)\s*(?:,\s*[0-9]+\s*)?\]".r
+    val LocalCluster = raw"local-cluster\[\s*([0-9]+)\s*,\s*([0-9]+)\s*,\s*[0-9]+\s*\]".r
+    master match {
+      case "local" => 1
+      case LocalN("*") => Runtime.getRuntime.availableProcessors()
+      case LocalN(n) => n.toInt
+      case LocalCluster(n, c) => n.toInt * c.toInt
+      case _ => reported
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -269,8 +286,12 @@ object Bench {
     // clobbered the 32-core per-query map, leaving PERF per_query/
     // scaling empty). A per-cpus filename keeps both runs' complete
     // artifacts on disk for the round's comparison.
+    // stamped with the cores the session really got, which need not be
+    // SPARK_GRAFT_CPUS under an explicit SPARK_GRAFT_MASTER
+    val stampCores = masterCores(spark.sparkContext.master,
+      spark.sparkContext.defaultParallelism)
     val stamped = new java.io.File(graft.wat.WatFixture.repoRoot,
-      sidecarRel.stripSuffix(".json") + s"_c$cpus.json")
+      sidecarRel.stripSuffix(".json") + s"_c$stampCores.json")
     try {
       java.nio.file.Files.write(stamped.toPath,
         (full + "\n").getBytes("UTF-8"))

@@ -113,6 +113,7 @@ object GraftFunctions {
   val QDotName = "graft_qdot"
   val QNorm2Name = "graft_qnorm2"
   val QD2Name = "graft_qd2"
+  val BucketIdName = "graft_bucket_id"
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
@@ -158,5 +159,17 @@ object GraftFunctions {
     put(QDotName, exprs => QDot(exprs(0), exprs(1)))
     put(QNorm2Name, exprs => QNorm2(exprs.head))
     put(QD2Name, exprs => QD2(exprs(0), exprs(1)))
+    // the bucket id a bucketed write computes, as the write computes it
+    // (`HashPartitioning.partitionIdExpression`): a sort on it satisfies
+    // the writer's required ordering, so the writer adds no sort of its own
+    put(BucketIdName, { exprs =>
+      val n = exprs(1) match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"$BucketIdName bucket count must be an int literal, got $other")
+      }
+      org.apache.spark.sql.catalyst.plans.physical
+        .HashPartitioning(Seq(exprs(0)), n).partitionIdExpression
+    })
   }
 }

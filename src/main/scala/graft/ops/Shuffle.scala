@@ -12,6 +12,14 @@ import org.apache.spark.sql.functions._
   *
   * O2 `repartition(max(256, watCount/500))` round-robins into a bounded
   * file count — same formula as cc2dataset/main.py:260.
+  *
+  * The product no longer runs O1 and O2 as written (they stay as the
+  * reference-shaped operators `q_shuffle` and `q_repartition_count`
+  * price). `Cc2Dataset.dedupRepartitionCount` writes the same
+  * [[outputPartitions]] files as hash buckets on `uid` from
+  * [[writeTasks]] tasks, with a seeded order within each file: one
+  * exchange after dedup instead of a range sample, a range shuffle and
+  * a round-robin shuffle.
   */
 object Shuffle {
 
@@ -22,4 +30,14 @@ object Shuffle {
 
   def repartitionForOutput(df: DataFrame, watCount: Int): DataFrame =
     df.repartition(outputPartitions(watCount))
+
+  /** Write tasks for `files` hash buckets: the largest divisor of `files`
+    * that is at most `max(1, bound)`. A divisor keeps every bucket in
+    * one task, since `pmod(h, files) mod P == pmod(h, P)` when P divides
+    * `files`.
+    */
+  def writeTasks(files: Int, bound: Int): Int = {
+    require(files >= 1, s"files must be >= 1, got $files")
+    (math.min(files, math.max(1, bound)) to 1 by -1).find(files % _ == 0).get
+  }
 }

@@ -2,11 +2,14 @@ package graft.pipeline
 
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
+import java.util.UUID
 import java.util.zip.GZIPInputStream
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{call_function, col, count, lit, xxhash64}
 
+import graft.functions.GraftFunctions
 import graft.ops.{Dedup, PartMerge, Shuffle}
 import graft.wat.WatExtract
 
@@ -47,21 +50,62 @@ final case class Cc2Config(
   */
 object Cc2Dataset {
 
-  /** Dedup → optional seeded shuffle → bounded-file-count repartition →
-    * parquet → recount (cc2dataset/main.py:254-266). One uid hash-shuffle,
-    * one optional range shuffle, one round-robin — the same three
-    * exchanges as the reference, but with AQE free to coalesce/skew-split
-    * them at scale.
+  /** Dedup → bucketed parquet write of `Shuffle.outputPartitions(watCount)`
+    * files → observed row count (cc2dataset/main.py:254-266).
+    *
+    * The output contract is the reference's: F = `max(256, n/500)`
+    * files, unique on `uid`, shuffled, `_SUCCESS`, overwrite. It is
+    * reached with two exchanges and no re-read, where the reference
+    * runs three exchanges and re-reads the output to count it:
+    *  - dedup keeps its map-side partial aggregate (one hash exchange);
+    *  - `repartition(P, uid)` with P a divisor of F
+    *    ([[Shuffle.writeTasks]]), so each of the F buckets
+    *    `pmod(hash(uid), F)` lands whole in one of P tasks, and every
+    *    task writes its F/P bucket files. The cost of the write is per
+    *    task (each deserializes the session's Hadoop configuration), not
+    *    per file, so a few tasks rolling many files beat one task per
+    *    file;
+    *  - file membership is the bucket, and uid is md5(alt+url), so files
+    *    are uniform samples of the output; with `shuffle` the seed orders
+    *    the rows within each file by `xxhash64(uid, seed)`;
+    *  - each task sorts by the writer's own bucket-id expression
+    *    (`graft_bucket_id`), which satisfies the bucketed writer's
+    *    required ordering, so the writer adds no second sort;
+    *  - the returned count is observed on the written rows
+    *    (`Dataset.observe`, collected once per partition in the write's
+    *    result stage), not re-read from the output.
+    * `bucketBy` needs a catalog table, so the write registers an
+    * external table over `outputPath` under a unique name and drops it
+    * afterwards, which leaves the files in place.
     */
   def dedupRepartitionCount(df: DataFrame, outputPath: String, watCount: Int,
       shuffle: Boolean, seed: Long): Long = {
-    val uniques = Dedup.byKey(df, Seq("uid"))
-    val shuffled = if (shuffle) Shuffle.randomShuffle(uniques, seed) else uniques
-    Shuffle.repartitionForOutput(shuffled, watCount)
-      .write.mode("overwrite").parquet(outputPath)
     val spark = df.sparkSession
-    spark.read.parquet(outputPath).count()
+    val files = Shuffle.outputPartitions(watCount)
+    // a cold cluster reports defaultParallelism 2 before its executors
+    // register: the archive count keeps crawl-scale runs at P = F
+    val tasks = Shuffle.writeTasks(files,
+      math.max(watCount, spark.sparkContext.defaultParallelism))
+    val uid = col("uid")
+    GraftFunctions.register(spark)
+    val bucket = call_function(GraftFunctions.BucketIdName, uid, lit(files))
+    val order = if (shuffle) Seq(bucket, xxhash64(uid, lit(seed))) else Seq(bucket)
+    val written = Observation()
+    val out = Dedup.byKey(df, Seq("uid"))
+      .repartition(tasks, uid)
+      .observe(written, count(lit(1)).as("rows"))
+      .sortWithinPartitions(order: _*)
+    val table = s"$OutputTablePrefix${UUID.randomUUID().toString.replace("-", "")}"
+    try out.write.mode("overwrite").format("parquet")
+      .bucketBy(files, "uid").option("path", outputPath).saveAsTable(table)
+    finally spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    written.get("rows").asInstanceOf[Long]
   }
+
+  /** Name prefix of the transient catalog table each output write
+    * registers (unique per write: `newSession()` parts share the catalog).
+    */
+  val OutputTablePrefix = "graft_out_"
 
   /** C1: one part end-to-end (cc2dataset/main.py:269-287). */
   def processOnePart(spark: SparkSession, watFiles: Seq[String],
@@ -169,8 +213,8 @@ object Cc2Dataset {
       outputPath)
 
   /** The batch tail over everything the intake has landed so far:
-    * global dedup → optional seeded shuffle → bounded-file repartition →
-    * `{output}/merged` (identical semantics to the multipart merge).
+    * [[dedupRepartitionCount]] into `{output}/merged` (identical
+    * semantics to the multipart merge).
     */
   def mergeStreamed(spark: SparkSession, outputPath: String, watCount: Int,
       shuffle: Boolean, seed: Long): Long =

@@ -51,4 +51,14 @@ class BenchSpec extends AnyFunSuite with SparkTestBase {
     val art = Bench.renderArtifact(results, failed, "/unused")
     assert(art.contains("\"failed\":{}"))
   }
+
+  test("the sidecar stamp is the resolved master's core count") {
+    def cores(m: String) = Bench.masterCores(m, reported = -1)
+    assert(cores("local") == 1)
+    assert(cores("local[8]") == 8)
+    assert(cores("local[32, 3]") == 32)
+    assert(cores("local[*]") == Runtime.getRuntime.availableProcessors())
+    assert(cores("local-cluster[4,4,4096]") == 16)
+    assert(cores("spark://host:7077") == -1)
+  }
 }

@@ -97,6 +97,16 @@ class PipelineSpec extends AnyFunSuite {
     val spark = factory()
     assert(new File(s"$p2/part_0/_SUCCESS").exists())
     assert(new File(s"$p2/part_1/_SUCCESS").exists())
+    // the concurrent parts' writes share one catalog: each part still
+    // holds one file per populated bucket, and every file one bucket
+    val files = graft.ops.Shuffle.outputPartitions(2)
+    Seq(s"$p2/part_0", s"$p2/part_1", s"$p2/merged").foreach { dir =>
+      val byFile = OutputWriteSpec.fileBuckets(spark, dir, files)
+      assert(byFile.nonEmpty &&
+        byFile.size == OutputWriteSpec.populatedBuckets(spark, dir, files), dir)
+      assert(byFile.values.forall { case (named, held) => held == Set(named) }, dir)
+    }
+    assert(OutputWriteSpec.outputTables(spark).isEmpty)
     val a = spark.read.parquet(s"$p1/merged").select("uid", "url", "alt")
       .collect().map(_.toString).sorted
     val b = spark.read.parquet(s"$p2/merged").select("uid", "url", "alt")

@@ -49,6 +49,12 @@ fi
 # remove the old sidecar first: a failed bench must surface as a
 # missing file, never as a silently-stale artifact passing the checks
 rm -f tools/bench_full_latest.json
+# likewise every UNTRACKED per-core-count sidecar: the snapshot commit
+# below adds tools/bench_full_latest_c*.json, which would otherwise sweep
+# in a stale copy some earlier bench left behind. Tracked ones stay; the
+# bench rewrites the one for its own core count.
+git ls-files --others --exclude-standard -z -- 'tools/bench_full_latest_c*.json' \
+  | xargs -0 -r rm -f --
 SPARK_GRAFT_SF_DIR="$SF_DIR" sbt -batch "runMain graft.Bench" 2>&1 \
   | grep '"metric"' | tail -1 || true
 python3 - <<'EOF'
