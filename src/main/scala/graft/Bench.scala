@@ -118,21 +118,11 @@ object Bench {
   }
 
   /** Cores the resolved master runs tasks on, which stamps the per-core
-    * sidecar: `local` 1, `local[N]` and `local[N,F]` N, `local[*]` the
-    * host's processors, `local-cluster[n,c,m]` n*c, and for any other
-    * master the parallelism the context reports.
+    * sidecar: [[SessionBuilder.masterCores]], and for any other master
+    * the parallelism the context reports.
     */
-  def masterCores(master: String, reported: => Int): Int = {
-    val LocalN = raw"local\[\s*([0-9]+|\*)\s*(?:,\s*[0-9]+\s*)?\]".r
-    val LocalCluster = raw"local-cluster\[\s*([0-9]+)\s*,\s*([0-9]+)\s*,\s*[0-9]+\s*\]".r
-    master match {
-      case "local" => 1
-      case LocalN("*") => Runtime.getRuntime.availableProcessors()
-      case LocalN(n) => n.toInt
-      case LocalCluster(n, c) => n.toInt * c.toInt
-      case _ => reported
-    }
-  }
+  def masterCores(master: String, reported: => Int): Int =
+    SessionBuilder.masterCores(master).getOrElse(reported)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -143,54 +133,7 @@ object Bench {
     // regime a deployment actually hits, which local[*]'s
     // shared-memory pass-through never exercises
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-    if (master.startsWith("local-cluster")) {
-      val mem = master.stripPrefix("local-cluster[").stripSuffix("]")
-        .split(",")(2).trim
-      builder0
-        .config("spark.executor.memory", s"${mem}m")
-        .config("spark.executor.extraClassPath",
-          sys.props.getOrElse("java.class.path", ""))
-    }
-    val spark = builder0
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see SessionBuilder.ExcludedOptimizerRules: InferFiltersFromGenerate
-      // re-evaluates expensive generator expressions in pushed filters
-      .config("spark.sql.optimizer.excludedRules",
-        SessionBuilder.ExcludedOptimizerRules)
-      // generated-class cache (default 100 entries): a battery of 221
-      // queries × several codegen units each evicts constantly, so every
-      // pass re-runs janino + C2 on identical code — pure compile churn
-      // charged to the timed pass (measured: q_bpe_encode pass walls
-      // decay 13.5 → 4.9 s over 12 passes as compilation amortizes).
-      // Sizing the cache to hold the battery is scale-independent: any
-      // long-lived production session re-planning similar queries wants
-      // compiled-code reuse; memory cost is bounded (generated classes,
-      // not data)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // streaming checkpoints in this battery are per-run scratch (wiped
-      // at entry, never resumed); Spark 4.1's per-file checkpoint
-      // checksum writes park every state-store commit on an async
-      // future (thread-dump evidence in OPTIMIZATION_r21.md) — disable
-      // for battery sessions; durable production checkpoints keep it
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      // local scratch checkpoints: rename via FileSystem (File.renameTo)
-      // instead of the FileContext manager, whose local-fs rename forks
-      // a shell subprocess per checkpoint file (see
-      // StreamQueries.withStreamWidth for the thread-dump evidence);
-      // durable HDFS/S3 checkpoints keep the default
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing" +
-          ".FileSystemBasedCheckpointFileManager")
-      // trust the write-time bucket sort on read (safe: Spark still
-      // re-sorts any bucket with more than one file; Bucketing writes
-      // exactly one sorted file per bucket so SMJs stream sort-free)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionBuilder.forMaster(master, cpus.toInt)
     // ERROR, not WARN: the benign bounded-domain WindowExec warning
     // (q_token_budget's <=2001-row class window) repeats per pass and
     // flooded the driver's bounded stdout capture in r10 — the short

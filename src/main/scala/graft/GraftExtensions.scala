@@ -2,36 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.UrlResolve
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions injector — lets any session pick up graft's
-  * native functions without code changes:
+  * native functions (every entry of [[GraftFunctions.Table]]) without
+  * code changes:
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // or, on a session builder: .withExtensions(new GraftExtensions)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("url_resolve"),
-      new ExpressionInfo(classOf[UrlResolve].getName, "url_resolve"),
-      (exprs: Seq[Expression]) => UrlResolve(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("url_resolve_base"),
-      new ExpressionInfo(classOf[UrlResolve].getName, "url_resolve_base"),
-      (exprs: Seq[Expression]) =>
-        UrlResolve(exprs.head, exprs(1), baseFallback = true)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.GraftFunctions.H32Name),
-      new ExpressionInfo(classOf[graft.functions.H32].getName,
-        graft.functions.GraftFunctions.H32Name),
-      (exprs: Seq[Expression]) => graft.functions.H32(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.GraftFunctions.NfcName),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName,
-        graft.functions.GraftFunctions.NfcName),
-      (exprs: Seq[Expression]) => graft.functions.NfcNormalize(exprs.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.Table.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, name), builder))
+    }
 }

@@ -38,11 +38,12 @@ object Main {
     val cores = a.get("num_cores").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val memGb = a.get("mem_gb").map(_.toInt).getOrElse(8)
-    val factory: () => SparkSession = a.get("master") match {
-      case Some(m) if !m.startsWith("local") =>
-        () => SessionBuilder.cluster(m, cores, memGb)
-      case _ => () => SessionBuilder.local(cores, memGb)
-    }
+    // bare `local` (the default) runs on --num_cores; local[N] and
+    // local-cluster[n,c,m] run as their string says; any other master
+    // gets the cluster conf with --num_cores/--mem_gb per executor
+    val master = a.getOrElse("master", "local")
+    val factory: () => SparkSession =
+      () => SessionBuilder.forMaster(master, cores, memGb)
 
     // absent count flags keep Cc2Config's reference-parity defaults
     // (newest 1 index, 100 sampled WATs — README.md:54); the explicit

@@ -308,31 +308,7 @@ object ScaleProbe {
     // degenerate-key fixture variant (see generate): compare its wall
     // against the uniform run at the same volume to price skew
     val hotKey = sys.env.get("SPARK_GRAFT_HOTKEY").contains("1")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // trust the write-time bucket sort on read (safe: Spark still
-      // re-sorts any bucket with more than one file; Bucketing writes
-      // exactly one sorted file per bucket so SMJs stream sort-free)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-    val clusterMode = master.startsWith("local-cluster")
-    if (clusterMode) {
-      // worker memory (MB) from local-cluster[n, c, mem]: executors must
-      // request exactly what the worker offers (default 1g would both
-      // under-use large workers and over-ask small ones)
-      val mem = master.stripPrefix("local-cluster[").stripSuffix("]")
-        .split(",")(2).trim
-      builder
-        .config("spark.executor.memory", s"${mem}m")
-        // forked executor JVMs need the application classes; the driver
-        // fork's full classpath (graft classes + spark jars) is exactly
-        // the right set
-        .config("spark.executor.extraClassPath",
-          sys.props.getOrElse("java.class.path", ""))
-    }
-    val spark = builder.getOrCreate()
+    val spark = SessionBuilder.forMaster(master, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val spill = new SpillListener
     spark.sparkContext.addSparkListener(spill)

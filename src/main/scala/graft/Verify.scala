@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,41 +15,7 @@ object Verify {
     // expression or a partitioning-dependent result shows here, never
     // in local[*])
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see SessionBuilder.ExcludedOptimizerRules: InferFiltersFromGenerate
-      // re-evaluates expensive generator expressions in pushed filters
-      .config("spark.sql.optimizer.excludedRules",
-        SessionBuilder.ExcludedOptimizerRules)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // streaming checkpoints in this battery are per-run scratch (wiped
-      // at entry, never resumed); Spark 4.1's per-file checkpoint
-      // checksum writes park every state-store commit on an async
-      // future (thread-dump evidence in OPTIMIZATION_r21.md) — disable
-      // for battery sessions; durable production checkpoints keep it
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      // local scratch checkpoints: FileSystem-based manager (File.renameTo,
-      // no per-rename shell fork — see StreamQueries.withStreamWidth)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing" +
-          ".FileSystemBasedCheckpointFileManager")
-      // trust the write-time bucket sort on read (safe: Spark still
-      // re-sorts any bucket with more than one file; Bucketing writes
-      // exactly one sorted file per bucket so SMJs stream sort-free)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      val mem = master.stripPrefix("local-cluster[").stripSuffix("]")
-        .split(",")(2).trim
-      builder
-        .config("spark.executor.memory", s"${mem}m")
-        .config("spark.executor.extraClassPath",
-          sys.props.getOrElse("java.class.path", ""))
-    }
-    val spark = builder.getOrCreate()
+    val spark = SessionBuilder.forMaster(master, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

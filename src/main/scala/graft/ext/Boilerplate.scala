@@ -47,8 +47,10 @@ object Boilerplate {
     * join-with-space + collapse + trim is byte-identical to
     * replace-then-collapse while scanning the raw HTML once instead of
     * materializing a same-length tags-to-spaces copy and re-scanning
-    * it. Measured (BoilerplateProbe, clean JVM, identical result
-    * fingerprints): 0.80 → 0.55 s at sf0.1, 3.06 → 2.80 s at sf10.
+    * it. Measured (clean JVM, identical result fingerprints): 0.80 →
+    * 0.55 s at sf0.1, 3.06 → 2.80 s at sf10 (SCALING.md "Round 11 —
+    * corrections, the composed-operator hot-key probes, and the strip
+    * re-price").
     */
   private def visibleText(block: Column): Column =
     trim(regexp_replace(

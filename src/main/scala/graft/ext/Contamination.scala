@@ -33,8 +33,8 @@ object Contamination {
     * a `transform(sequence(...), i -> concat_ws(element_at × n))` —
     * higher-order lambdas run interpreted, and the element_at/concat_ws
     * body measured ~10× slower than the zip_with form at sf0.1 (6.6 s
-    * vs 0.7 s for the bare gram explode — `tools/WinnowProbe2`). The
-    * `when` guard keeps the empty case from evaluating slice with a
+    * vs 0.7 s for the bare gram explode — SCALING.md "Deleted probes").
+    * The `when` guard keeps the empty case from evaluating slice with a
     * non-positive length, and `concat` (unlike concat_ws)
     * null-propagates exactly like the DuckDB oracle's `||`.
     */

@@ -98,9 +98,12 @@ object UrlResolve {
     UTF8String.fromString(UrlOps.resolveBase(base.toString, rel.toString))
 }
 
-/** Session-level registration of graft's native functions. Idempotent:
-  * already-registered sessions are left untouched (re-registering is
-  * harmless but warns noisily on every call).
+/** graft's native SQL functions: one (name, builder) table, read both by
+  * [[register]] (sessions built by `SessionBuilder`, and the lazy calls
+  * library code makes on sessions it did not build) and by
+  * `graft.GraftExtensions` (`spark.sql.extensions`). Registration is
+  * idempotent: already-registered sessions are left untouched
+  * (re-registering is harmless but warns noisily on every call).
   */
 object GraftFunctions {
   val UrlResolveName = "url_resolve"
@@ -115,17 +118,13 @@ object GraftFunctions {
   val QD2Name = "graft_qd2"
   val BucketIdName = "graft_bucket_id"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def put(name: String, builder: Seq[Expression] => Expression): Unit =
-      if (!registry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-    put(UrlResolveName, exprs => UrlResolve(exprs(0), exprs(1)))
-    put(UrlResolveBaseName,
-      exprs => UrlResolve(exprs(0), exprs(1), baseFallback = true))
-    put(H32Name, exprs => H32(exprs.head))
-    put(NGramsName, { exprs =>
+  /** Every graft function, by name. */
+  val Table: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    (UrlResolveName, exprs => UrlResolve(exprs(0), exprs(1))),
+    (UrlResolveBaseName,
+      exprs => UrlResolve(exprs(0), exprs(1), baseFallback = true)),
+    (H32Name, exprs => H32(exprs.head)),
+    (NGramsName, { exprs =>
       val n = exprs(1) match {
         case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
           v.toString.toInt
@@ -133,13 +132,13 @@ object GraftFunctions {
           s"$NGramsName n must be a literal, got $other")
       }
       WordNGrams(exprs(0), n)
-    })
+    }),
     // Catalyst's own bloom-filter pair (the expressions behind
     // InjectRuntimeFilter), surfaced for explicit use: build a filter
     // over a key column with bloom_agg, probe it with might_contain.
     // Both are internal-but-public classes; the analyzer wraps the
     // aggregate, codegen handles the probe.
-    put(BloomAggName, {
+    (BloomAggName, {
       case Seq(c) =>
         new org.apache.spark.sql.catalyst.expressions.aggregate
           .BloomFilterAggregate(c)
@@ -149,20 +148,20 @@ object GraftFunctions {
       case exprs =>
         new org.apache.spark.sql.catalyst.expressions.aggregate
           .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-    })
-    put(BloomMightContainName, exprs =>
+    }),
+    (BloomMightContainName, exprs =>
       org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)))
+        .BloomFilterMightContain(exprs(0), exprs(1))),
     // same name as the DuckDB builtin it mirrors
-    put(NfcName, exprs => NfcNormalize(exprs.head))
+    (NfcName, exprs => NfcNormalize(exprs.head)),
     // fused quantized-vector arithmetic (see QVec scaladoc)
-    put(QDotName, exprs => QDot(exprs(0), exprs(1)))
-    put(QNorm2Name, exprs => QNorm2(exprs.head))
-    put(QD2Name, exprs => QD2(exprs(0), exprs(1)))
+    (QDotName, exprs => QDot(exprs(0), exprs(1))),
+    (QNorm2Name, exprs => QNorm2(exprs.head)),
+    (QD2Name, exprs => QD2(exprs(0), exprs(1))),
     // the bucket id a bucketed write computes, as the write computes it
     // (`HashPartitioning.partitionIdExpression`): a sort on it satisfies
     // the writer's required ordering, so the writer adds no sort of its own
-    put(BucketIdName, { exprs =>
+    (BucketIdName, { exprs =>
       val n = exprs(1) match {
         case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
         case other => throw new IllegalArgumentException(
@@ -170,6 +169,14 @@ object GraftFunctions {
       }
       org.apache.spark.sql.catalyst.plans.physical
         .HashPartitioning(Seq(exprs(0)), n).partitionIdExpression
-    })
+    }))
+
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    Table.foreach { case (name, builder) =>
+      if (!registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

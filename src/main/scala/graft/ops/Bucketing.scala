@@ -136,10 +136,11 @@ object Bucketing {
   /** True iff the CATALOG's record of `table` declares exactly the
     * requested (key, buckets) bucket spec — the catalog-side twin of
     * [[layoutMatches]]. Without this, a re-declare at a different width
-    * in the same JVM (or via a shared durable metastore — the
-    * MetastoreProbe deployment) would short-circuit on `tableExists`
-    * and silently serve the OLD layout, defeating the exchange-free
-    * contract the disk-side SpecMarker validation protects.
+    * in the same JVM (or via a shared durable metastore — SCALING.md
+    * "Round 13 — the bucketed-layout catalog, made durable") would
+    * short-circuit on `tableExists` and silently serve the OLD layout,
+    * defeating the exchange-free contract the disk-side SpecMarker
+    * validation protects.
     */
   private def catalogSpecMatches(spark: SparkSession, table: String,
       key: String, buckets: Int): Boolean =

@@ -1196,18 +1196,20 @@ object ExtQueries {
           .write.mode("overwrite").parquet(s"$tmp/in")
         curationStagedFor.set(Some(dir))
       }
-      val stream = s.readStream
-        .schema("doc_id LONG, html STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$tmp/in")
-      val q = graft.streaming.StreamOps
-        .curationGateStream(stream, "html", Toxicity.DefaultTerms)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", s"$tmp/out")
-        .start()
-      q.awaitTermination()
+      QueryUtil.withScratchCheckpoints(s, s"$tmp/ckpt") {
+        val stream = s.readStream
+          .schema("doc_id LONG, html STRING")
+          .option("maxFilesPerTrigger", 1)
+          .parquet(s"$tmp/in")
+        graft.streaming.StreamOps
+          .curationGateStream(stream, "html", Toxicity.DefaultTerms)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", s"$tmp/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .format("parquet").option("path", s"$tmp/out")
+          .start()
+          .awaitTermination()
+      }
       s.read.parquet(s"$tmp/out").orderBy("doc_id")
     }),
 
@@ -2546,7 +2548,9 @@ object ExtQueries {
     // merges land per distributed job, with a proven guarantee that the
     // learned list is EXACTLY the sequential one — so the sequential
     // DuckDB oracle still hash-matches. BpeTrainerSpec pins equality on
-    // adversarial corpora; BpeBatchProbe prices the round-trip cut.
+    // adversarial corpora; SCALING.md "Round 14 — BPE beyond toy
+    // rounds" and "Round 15 — BPE at production-shaped depth" price
+    // the round-trip cut.
     "q_bpe_train" -> ((s, dir) => {
       val (m, t) = graft.ext.BpeTrainer.learnBpeBatched(
         docsFanned(s, dir), "doc_id", TA.tokens(col("text")),

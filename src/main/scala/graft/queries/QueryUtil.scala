@@ -53,6 +53,63 @@ object QueryUtil {
   def scratchPath(tag: String): String =
     new java.io.File(processScratch, tag).getAbsolutePath
 
+  /** Set `confs` on the session for the duration of `body`, then put
+    * back what was there before: the prior value, or no setting at all
+    * where there was none.
+    */
+  def withConfs[A](s: SparkSession, confs: (String, String)*)(
+      body: => A): A = {
+    val prior = confs.map { case (k, _) =>
+      k -> Option.when(s.sessionState.conf.contains(k))(s.conf.get(k))
+    }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
+  /** Run `body` — streams checkpointing to `ckptDir` — with the
+    * checkpoint confs only throwaway checkpoints may use. `ckptDir` must
+    * lie under [[processScratch]], which holds only per-process scratch
+    * that is wiped before reuse and never resumed across processes; a
+    * durable checkpoint (HDFS/S3, or a job's own `_checkpoint`) keeps
+    * Spark's defaults.
+    *
+    *  - Per-file checksums off. Spark 4.1 checksums every checkpoint
+    *    file write through an async ChecksumCheckpointFileManager;
+    *    thread dumps show each state-store delta-file CLOSE parked
+    *    awaiting its checksum future — the dominant blocked time in
+    *    every stateful micro-batch of the battery (OPTIMIZATION_r21.md).
+    *    Corruption detection across restarts, the feature's purpose,
+    *    protects nothing for a checkpoint that is never resumed.
+    *  - The FileSystem-based checkpoint manager. Every checkpoint-file
+    *    finalize (state-store delta close, offset/commit WAL write) goes
+    *    through the default FileContext-based manager, whose local-fs
+    *    rename resolves link status via hadoop Shell.execCommand — a
+    *    fork+exec PER RENAME (thread dumps: 12 executor threads parked in
+    *    RawLocalFileSystem.getFileLinkStatusInternal → FileUtil.readLink
+    *    → ProcessBuilder.start during one micro-batch; q_interval_join_
+    *    stream's state commits showed runMs 5983 vs cpuMs 1145 — blocked,
+    *    not computing). The FileSystem-based manager renames via
+    *    java.io.File.renameTo, atomic on a local POSIX fs with no
+    *    subprocess; on HDFS/S3 the FileContext rename is the atomic one,
+    *    which is why a durable checkpoint must never get this manager.
+    */
+  def withScratchCheckpoints[A](s: SparkSession, ckptDir: String)(
+      body: => A): A = {
+    val root = processScratch.toPath.toAbsolutePath.normalize
+    require(java.nio.file.Paths.get(ckptDir).toAbsolutePath.normalize
+      .startsWith(root),
+      s"scratch checkpoint confs are for checkpoints under $root only, " +
+        s"got: $ckptDir")
+    withConfs(s,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        ("org.apache.spark.sql.execution.streaming.checkpointing" +
+          ".FileSystemBasedCheckpointFileManager"))(body)
+  }
+
   /** `events.ts` arrives in one of two physical shapes depending on the
     * generator vintage: parquet TIMESTAMP(NANOS) (readable only as a
     * nanos long via the legacy conf — normalize with integer `div`, since

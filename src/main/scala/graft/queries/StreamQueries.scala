@@ -112,53 +112,17 @@ object StreamQueries {
     */
   private val StreamShufflePartitions = "8"
 
-  private def withStreamWidth[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    // Spark 4.1 checksums every checkpoint file write through an async
-    // ChecksumCheckpointFileManager; thread dumps show each state-store
-    // delta-file CLOSE parked awaiting its checksum future — the
-    // dominant blocked time in every stateful micro-batch here. The
-    // battery's checkpoints are per-run scratch (wiped at entry, never
-    // resumed across processes), so corruption detection over restarts
-    // — the feature's purpose — protects nothing; a production
-    // deployment with a durable checkpoint dir keeps the default.
-    // Scoped + restored like the width conf below.
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    // Every checkpoint-file finalize (state-store delta close, offset/
-    // commit WAL write) goes through the default FileContext-based
-    // manager, whose local-fs rename path resolves link status via
-    // hadoop Shell.execCommand — a fork+exec of a subprocess PER RENAME
-    // (thread dumps: 12 executor threads parked in
-    // RawLocalFileSystem.getFileLinkStatusInternal → FileUtil.readLink →
-    // ProcessBuilder.start during one micro-batch; q_interval_join_
-    // stream's state commits showed runMs 5983 vs cpuMs 1145 — blocked,
-    // not computing). The FileSystem-based manager renames via
-    // java.io.File.renameTo — atomic on a local POSIX fs, no
-    // subprocess. Scoped to the battery's LOCAL scratch checkpoints
-    // exactly like the checksum conf: a production deployment
-    // checkpointing to HDFS/S3 keeps the default manager, whose
-    // FileContext rename is the atomic one there.
-    val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val fmVal = "org.apache.spark.sql.execution.streaming.checkpointing" +
-      ".FileSystemBasedCheckpointFileManager"
-    val prev = s.conf.get(key)
-    val prevCk = s.conf.getOption(ckKey)
-    val prevFm = s.conf.getOption(fmKey)
-    s.conf.set(key, StreamShufflePartitions)
-    s.conf.set(ckKey, "false")
-    s.conf.set(fmKey, fmVal)
-    try body finally {
-      s.conf.set(key, prev)
-      prevCk match {
-        case Some(v) => s.conf.set(ckKey, v)
-        case None => s.conf.unset(ckKey)
-      }
-      prevFm match {
-        case Some(v) => s.conf.set(fmKey, v)
-        case None => s.conf.unset(fmKey)
-      }
+  /** Run one battery stream of `tag` at the stream width, with the
+    * scratch-checkpoint confs for its checkpoint under the tag's
+    * scratch dir ([[QueryUtil.withScratchCheckpoints]]).
+    */
+  private def withStreamWidth[A](s: SparkSession, tag: String)(
+      body: => A): A =
+    QueryUtil.withConfs(s,
+        "spark.sql.shuffle.partitions" -> StreamShufflePartitions) {
+      QueryUtil.withScratchCheckpoints(s,
+        QueryUtil.scratchPath(s"stream/$tag/ckpt"))(body)
     }
-  }
 
   /** Stage `df` as one parquet file, run `mk(streamIn)` to a parquet
     * sink, and return the sink contents. With `nudge` (the default), an
@@ -173,7 +137,7 @@ object StreamQueries {
   private def runFileStream(s: SparkSession, srcDir: String,
       staged: => DataFrame,
       schema: String, tag: String, nudge: Boolean = true)(
-      mk: DataFrame => DataFrame): DataFrame = withStreamWidth(s) {
+      mk: DataFrame => DataFrame): DataFrame = withStreamWidth(s, tag) {
     val dirKey = s"$srcDir|$schema|$nudge"
     val reuse = stagedFor.get(tag).contains(dirKey) &&
       stagedDirsPresent(tag, "in/b1")
@@ -215,7 +179,7 @@ object StreamQueries {
       right: => DataFrame, rightSchema: String, tag: String,
       nudge: Boolean = true)(
       mk: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    withStreamWidth(s) {
+    withStreamWidth(s, tag) {
       val dirKey = s"$srcDir|$leftSchema|$rightSchema|$nudge"
       val reuse = stagedFor.get(tag).contains(dirKey) &&
         stagedDirsPresent(tag, "l/b1", "r/b1")
@@ -259,7 +223,7 @@ object StreamQueries {
   private def runForeachBatch(s: SparkSession, srcDir: String,
       staged: => DataFrame, schema: String, splitCol: String,
       tag: String)(mk: DataFrame => DataFrame): DataFrame =
-    withStreamWidth(s) {
+    withStreamWidth(s, tag) {
       val dirKey = s"$srcDir|$schema"
       val reuse = stagedFor.get(tag).contains(dirKey) &&
         stagedDirsPresent(tag, "in/b1", "in/b2")

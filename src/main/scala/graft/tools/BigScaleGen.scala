@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{ScaleProbe, SparkEntry}
@@ -42,15 +42,7 @@ object BigScaleGen {
     val probeQueries = sys.env.get("SPARK_GRAFT_PROBE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("q_bpe_encode", "q_collocations", "q_semdedup"))
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // trust the write-time bucket sort on read (safe: Spark still
-      // re-sorts any bucket with more than one file; Bucketing writes
-      // exactly one sorted file per bucket so SMJs stream sort-free)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // --- generation (idempotent; marker pins version+factor+base) ---

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.wat.{CcIndex, WatFixture}
@@ -41,12 +40,7 @@ object CcIndexScaleProbe {
     // pressure — clean-JVM adjudication runs one leg alone
     def wantLeg(name: String): Boolean = args.lift(1).forall(_ == name)
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("ccindex-scale-probe")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(cores, appName = "ccindex-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

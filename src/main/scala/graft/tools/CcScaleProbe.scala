@@ -201,12 +201,9 @@ object CcScaleProbe {
     val docsDir = args.collectFirst {
       case d if d.startsWith("docs=") => d.stripPrefix("docs=")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("cc-scale-probe")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      appName = "cc-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val listener = new ShuffleListener
     spark.sparkContext.addSparkListener(listener)

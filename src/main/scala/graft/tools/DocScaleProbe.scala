@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Document-format throughput at fleet shape (companion to
@@ -23,11 +22,7 @@ object DocScaleProbe {
     val factor = args.lift(0).map(_.toInt).getOrElse(10)
     val base = 50000L // ≈ sf0.1 documents
     val n = base * factor
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -5,14 +5,13 @@ import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Fault-injection probe: the resilience story, EXERCISED instead of
   * configured. The reference survives flaky infrastructure via retry
   * (fetch retry ×10, `spark.task.maxFailures` 10 —
   * /root/reference/cc2dataset/spark_session_builder.py:44,
   * main.py:190-199); this engine mirrors those knobs
-  * (SessionBuilder.cluster) and unit-tests the fetch retry, but until
+  * (SessionBuilder) and unit-tests the fetch retry, but until
   * this probe nothing ever KILLED an executor mid-query and checked the
   * answer. Here: a `local-cluster[4,8,N]` session (4 separate executor
   * JVMs, real serialized shuffle), each probed query is run once clean,
@@ -65,19 +64,7 @@ object FaultProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local-cluster[4,8,4096]")
-      .config("spark.executor.memory", "4096m")
-      .config("spark.executor.extraClassPath",
-        sys.props.getOrElse("java.class.path", ""))
-      // the reference's resilience knob, mirrored from
-      // spark_session_builder.py:44 via SessionBuilder.cluster
-      .config("spark.task.maxFailures", "10")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.forMaster("local-cluster[4,8,4096]")
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =

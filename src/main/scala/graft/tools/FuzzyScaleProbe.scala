@@ -101,11 +101,7 @@ object FuzzyScaleProbe {
       .map(_.toInt).getOrElse(1)
     val candOnly = args.contains("candOnly")
     val n = 15000L * factor
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     // lookup-fixed: the R-S lookup's PRODUCTION decade — a FIXED probe

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Container-parse throughput at fleet shape: how many media files per
@@ -28,11 +27,7 @@ object MediaScaleProbe {
     val factor = args.lift(0).map(_.toInt).getOrElse(10)
     val base = 50000L // ≈ sf0.1 documents
     val n = base * factor
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

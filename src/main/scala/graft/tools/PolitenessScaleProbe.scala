@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Politeness
@@ -22,12 +21,8 @@ object PolitenessScaleProbe {
   def main(args: Array[String]): Unit = {
     val decades = args.lift(0).map(_.toInt).getOrElse(3)
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("politeness-scale-probe")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(cores,
+      appName = "politeness-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -27,28 +26,7 @@ object QueryProfile {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.SessionBuilder.ExcludedOptimizerRules)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // streaming checkpoints in this battery are per-run scratch (wiped
-      // at entry, never resumed); Spark 4.1's per-file checkpoint
-      // checksum writes park every state-store commit on an async
-      // future (thread-dump evidence in OPTIMIZATION_r21.md) — disable
-      // for battery sessions; durable production checkpoints keep it
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      // local scratch checkpoints: FileSystem-based manager (File.renameTo,
-      // no per-rename shell fork — see StreamQueries.withStreamWidth)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing" +
-          ".FileSystemBasedCheckpointFileManager")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val stageToJob = mutable.Map.empty[Int, Int]

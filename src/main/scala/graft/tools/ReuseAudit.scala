@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -47,12 +46,7 @@ object ReuseAudit {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val headLines = args.lift(1).map(_.toInt).getOrElse(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     def normalize(s: String): String = s

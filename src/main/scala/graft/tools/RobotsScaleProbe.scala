@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Robots-gate posture at frontier shape: the r16 verdict's one weak
@@ -19,11 +18,7 @@ object RobotsScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val decades = args.lift(0).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

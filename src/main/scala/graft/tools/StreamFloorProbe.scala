@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decompose the streaming battery's fixed cost: what does ONE
@@ -30,24 +29,14 @@ object StreamFloorProbe {
   def main(args: Array[String]): Unit = {
     val reps = args.lift(0).map(_.toInt).getOrElse(3)
     val width = args.lift(1).getOrElse("8") // battery stream width
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", width)
-      .config("spark.sql.session.timeZone", "UTC")
-      // mirror the battery's scratch-checkpoint session confs (r21/r22):
-      // the probe prices the floor the battery actually pays
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing" +
-          ".FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(32)
+    spark.conf.set("spark.sql.shuffle.partitions", width)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    val root = java.nio.file.Files.createTempDirectory("stream_floor")
-      .toString
+    // under the process scratch root: the battery's scratch-checkpoint
+    // confs (scoped per cycle below) are the floor this probe prices
+    val root = graft.queries.QueryUtil.scratchPath("stream_floor")
 
     // staged once: 1-row data file (+ empty nudge file staged up front,
     // modtime-bumped, for the x2 case — mirrors StreamQueries)
@@ -69,16 +58,19 @@ object StreamFloorProbe {
         xform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
         : Double = {
       n += 1
-      val t0 = System.nanoTime()
-      val stream = spark.readStream.schema("k long, ts_ms long")
-        .option("maxFilesPerTrigger", 1).parquet(s"$inDir/*")
-      val q = xform(stream).writeStream.outputMode("append")
-        .option("checkpointLocation", s"$root/ckpt$n")
-        .format("parquet").option("path", s"$root/out$n")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      (System.nanoTime() - t0) / 1e9
+      val ckpt = s"$root/ckpt$n"
+      graft.queries.QueryUtil.withScratchCheckpoints(spark, ckpt) {
+        val t0 = System.nanoTime()
+        val stream = spark.readStream.schema("k long, ts_ms long")
+          .option("maxFilesPerTrigger", 1).parquet(s"$inDir/*")
+        xform(stream).writeStream.outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .format("parquet").option("path", s"$root/out$n")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
 
     def stateful(df: org.apache.spark.sql.DataFrame) = df

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.wat.{WarcExtract, WatExtract, WatFixture}
 
@@ -32,12 +31,9 @@ object WarcScaleProbe {
   def main(args: Array[String]): Unit = {
     val factors: Seq[Int] = if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("warc-scale-probe")
-      .getOrCreate()
+    val spark = graft.SessionBuilder.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      appName = "warc-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     // session warm-up: one tiny extraction per path so the first timed

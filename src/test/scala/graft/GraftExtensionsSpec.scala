@@ -1,11 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.GraftFunctions
+
 /** spark.sql.extensions=graft.GraftExtensions must make url_resolve
-  * available in SQL without explicit registration.
+  * available in SQL without explicit registration, and must inject the
+  * same function set `GraftFunctions.register` adds. These tests build
+  * bare sessions on purpose: the extension path is the one a session
+  * that `SessionBuilder` did not build takes.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -34,5 +39,36 @@ class GraftExtensionsSpec extends AnyFunSuite {
           |""".stripMargin).collect()(0)
       assert(h.getLong(0) == h.getLong(1))
     } finally spark.stop()
+  }
+
+  /** The session's function names beyond Spark's built-ins. */
+  private def graftNames(s: SparkSession): Set[String] =
+    s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet --
+      FunctionRegistry.builtin.listFunction().map(_.funcName)
+
+  test("the extension injects exactly the functions register adds") {
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(_.stop())
+    def bareSession(confs: (String, String)*): SparkSession =
+      confs.foldLeft(SparkSession.builder()
+        .master("local[2]")
+        .appName("graft-ext-test")
+        .config("spark.ui.enabled", "false")) { case (b, (k, v)) =>
+          b.config(k, v)
+        }.getOrCreate()
+
+    val bare = bareSession()
+    val registered = try {
+      assert(graftNames(bare).isEmpty)
+      GraftFunctions.register(bare)
+      graftNames(bare)
+    } finally bare.stop()
+    val injected = {
+      val ext = bareSession("spark.sql.extensions" -> "graft.GraftExtensions")
+      try graftNames(ext) finally ext.stop()
+    }
+    assert(registered == GraftFunctions.Table.map(_._1).toSet)
+    assert(registered.size == GraftFunctions.Table.size)
+    assert(injected == registered)
   }
 }

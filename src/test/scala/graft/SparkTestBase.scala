@@ -3,22 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One session per suite; suites run sequentially (build.sbt) because the
-  * pipeline suite restarts sessions (C3 parity).
+  * pipeline suite restarts sessions (C3 parity). Tests run the product's
+  * session configuration: `SessionBuilder.local` at 4 cores.
   */
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.fresh()
 }
 
 object SparkTestBase {
-  def fresh(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // trust the write-time bucket sort on read (safe: Spark still
-    // re-sorts any bucket with more than one file; Bucketing writes
-    // exactly one sorted file per bucket so SMJs stream sort-free)
-    .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  def fresh(): SparkSession = SessionBuilder.local(4, appName = "graft-test")
 }

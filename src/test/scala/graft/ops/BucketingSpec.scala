@@ -156,8 +156,9 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
     // the catalog-side twin of the stale-disk test: the table EXISTS in
     // the catalog at 4 buckets; a re-declare at 8 must not short-circuit
     // on tableExists and silently serve the 4-bucket layout — under a
-    // shared durable metastore (the MetastoreProbe deployment) that
-    // would defeat the exchange-free contract across processes
+    // shared durable metastore (SCALING.md "Round 13 — the
+    // bucketed-layout catalog, made durable") that would defeat the
+    // exchange-free contract across processes
     val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select("l_orderkey", "l_extendedprice", "l_discount")
     Bucketing.ensureBucketed(df, "graft_spec_li_respec", "l_orderkey",
