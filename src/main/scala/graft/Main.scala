@@ -74,22 +74,27 @@ object Main {
         .getOrElse(dflt.streamThresholdBytes))
 
     val spark = factory()
-    val wats: Seq[String] = (a.get("wat_paths"), a.get("wat_index")) match {
-      case (Some(paths), _) => paths.split(',').toSeq
-      case (None, Some(idx)) =>
-        Cc2Dataset.readWatIndexFiles(spark, idx.split(',').toSeq,
-          cfg.watIndexCount, cfg.watCount, cfg.seed)
-      case (None, None) if cfg.resume.isDefined => Nil // manifest supplies them
-      case (None, None) =>
-        // reference default: discover crawl indexes via the configured
-        // protocol (s3 bucket glob, or the credential-free http listing
-        // page), then tail-slice + sample (main.py:236-250)
-        val idx = Cc2Dataset.getCcWatLinks(spark, cfg.sourceCcProtocol)
-        Cc2Dataset.readWatIndexFiles(spark, idx,
-          cfg.watIndexCount, cfg.watCount, cfg.seed)
-    }
+    // stop whichever session the run ends on (parts restart it): a
+    // context left running at JVM exit races the shutdown hooks, and a
+    // local-cluster master then relaunches an executor into a dying JVM
+    try {
+      val wats: Seq[String] = (a.get("wat_paths"), a.get("wat_index")) match {
+        case (Some(paths), _) => paths.split(',').toSeq
+        case (None, Some(idx)) =>
+          Cc2Dataset.readWatIndexFiles(spark, idx.split(',').toSeq,
+            cfg.watIndexCount, cfg.watCount, cfg.seed)
+        case (None, None) if cfg.resume.isDefined => Nil // manifest supplies them
+        case (None, None) =>
+          // reference default: discover crawl indexes via the configured
+          // protocol (s3 bucket glob, or the credential-free http listing
+          // page), then tail-slice + sample (main.py:236-250)
+          val idx = Cc2Dataset.getCcWatLinks(spark, cfg.sourceCcProtocol)
+          Cc2Dataset.readWatIndexFiles(spark, idx,
+            cfg.watIndexCount, cfg.watCount, cfg.seed)
+      }
 
-    val (jobPath, n) = Cc2Dataset.run(cfg, wats, factory)
-    println(s"""{"output":"$jobPath","rows":$n}""")
+      val (jobPath, n) = Cc2Dataset.run(cfg, wats, factory)
+      println(s"""{"output":"$jobPath","rows":$n}""")
+    } finally SparkSession.getActiveSession.getOrElse(spark).stop()
   }
 }

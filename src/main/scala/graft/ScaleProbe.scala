@@ -337,7 +337,7 @@ object ScaleProbe {
         scaled: Boolean): (Option[Double], Double, Long) = {
       def frame(): DataFrame =
         if (name == "q_wat_extract_1file" && scaled)
-          graft.wat.WatExtract.fromPathsV2(spark, scaledWat(factor),
+          graft.wat.WatExtract.fromPaths(spark, scaledWat(factor),
             "image_only").toDF()
         else SparkEntry.queries(name)(spark, dir)
       val (m0, d0, f0) = spill.snapshot()

@@ -76,12 +76,6 @@ object TextAnalysis {
   def bagFingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(distinctTokens(text))))
 
-  /** MinHash-style single fingerprint: lexicographically minimal md5 over
-    * tokens (one-permutation minhash).
-    */
-  def minWordFingerprint(text: Column): Column =
-    array_min(transform(tokens(text), w => md5(w)))
-
   /** BPE-ish token count: runs of letters, runs of digits, runs of other
     * non-space — the shape of byte-pair pre-tokenization regexes.
     */

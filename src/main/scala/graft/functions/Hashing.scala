@@ -29,13 +29,8 @@ object Hashing {
         conv(substring(md5(c), 1, 8), 16, 10).cast("long")
     }
 
-  /** Seeded variant: independent hash family member i (prefix-salted). */
-  def h32Seeded(i: Int, c: Column): Column = h32(concat(lit(s"$i|"), c))
-
   /** DuckDB oracle fragment for h32. */
   def h32Sql(expr: String): String = s"('0x'||substr(md5($expr),1,8))::BIGINT"
-
-  def h32SeededSql(i: Int, expr: String): String = h32Sql(s"'$i|' || $expr")
 
   /** Universal-hash family for MinHash: h_i(x) = (a_i * h32(x) + b_i) mod p.
     * One md5 per element; family members are cheap linear mixes. a_i is

@@ -87,14 +87,4 @@ object Dedup {
       .dropDuplicates(keys)
       .drop("__salt")
   }
-
-  /** Dedup-count audit: rows before/after dedup per key-column set, as a
-    * single aggregate (no join, no second pass).
-    */
-  def dupStats(df: DataFrame, keys: Seq[Column]): DataFrame =
-    df.groupBy(keys: _*).agg(count(lit(1)).as("copies"))
-      .agg(
-        count(lit(1)).as("distinct_keys"),
-        sum(col("copies")).as("total_rows"),
-        sum(col("copies") - lit(1)).as("removable_dups"))
 }

@@ -15,11 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object UrlOps {
 
-  /** urljoin(base, rel) with the reference's "on error return the original
-    * url" fallback (cc2dataset/main.py:107-110). Handles the cases Python's
-    * urljoin does on well-formed input: absolute rel, protocol-relative
-    * (`//host/x`), root-relative (`/x`), and path-relative.
-    */
   /** urljoin core: Some(resolved) on success, None when java.net.URI
     * rejects either side (the reference's ValueError arm). Absolute rel
     * and null/empty base are successes, not errors.
@@ -32,6 +27,11 @@ object UrlOps {
       catch { case _: Exception => None }
   }
 
+  /** urljoin(base, rel) with the reference's "on error return the original
+    * url" fallback (cc2dataset/main.py:107-110). Handles the cases Python's
+    * urljoin does on well-formed input: absolute rel, protocol-relative
+    * (`//host/x`), root-relative (`/x`), and path-relative.
+    */
   def resolveUrl(base: String, rel: String): String =
     if (rel == null) null else tryResolve(base, rel).getOrElse(rel)
 
@@ -48,20 +48,9 @@ object UrlOps {
   private val resolveUdf =
     udf((base: String, rel: String) => resolveUrl(base, rel))
 
-  private val resolveBaseUdf =
-    udf((pageUrl: String, headBase: String) => resolveBase(pageUrl, headBase))
-
   /** X1/X2: absolutize a url column against a base column; absolute urls
     * pass through without invoking the UDF.
     */
   def makeLinkAbsolute(base: Column, url: Column): Column =
     when(LinkOps.hasHttpScheme(url), url).otherwise(resolveUdf(base, url))
-
-  /** X3: effective base = urljoin(WARC-Target-URI, Head.Base) when a
-    * `<base href>` is present, else the target URI
-    * (cc2dataset/main.py:158-164).
-    */
-  def effectiveBase(targetUri: Column, headBase: Column): Column =
-    when(headBase.isNull, targetUri)
-      .otherwise(resolveBaseUdf(targetUri, headBase))
 }

@@ -266,14 +266,13 @@ object RefQueries {
         .sortWithinPartitions("uid", "page_url", "url", "alt")
     }),
 
-    // The same extraction through the DataSourceV2 `warc` source
-    // (planning-time path pruning + max_tasks batching; 16 archives
-    // batched into 8 tasks here so the batched path is the one under
-    // oracle). Same WAT-parity oracle as q_warc_extract.
+    // The same extraction with the `warc` source's max_tasks batching:
+    // 16 archives batched into 8 tasks here so the batched plan is the
+    // one under oracle. Same WAT-parity oracle as q_warc_extract.
     "q_warc_extract_dsv2" -> ((s, dir) => {
       graft.wat.WatFixture.ensureTailParquet(s)
       val warcs = graft.wat.WatFixture.ensureWarcFleet()
-      graft.wat.WarcExtract.fromDsv2(s, warcs, "image_only", maxTasks = 8)
+      graft.wat.WarcExtract.fromPaths(s, warcs, "image_only", maxTasks = 8)
         .toDF()
         .select("uid", "url", "alt", "page_url")
         .repartition(1)
@@ -301,15 +300,15 @@ object RefQueries {
     }),
 
     // Single-archive throughput at reference-WAT link volume (~400k
-    // links in one file → one task) through the DataSourceV2 `wat`
-    // source. BASELINE.md pins the reference at ~50 s per WAT per core;
-    // this is the comparable single-node number. Oracled against the
+    // links in one file → one task) through the `wat` source.
+    // BASELINE.md pins the reference at ~50 s per WAT per core; this is
+    // the comparable single-node number. Oracled against the
     // committed dump of the same seeded archive (tools/
     // wat_single.parquet, the wat_tail pattern).
     "q_wat_extract_1file" -> ((s, dir) => {
       graft.wat.WatFixture.ensureSingleParquet(s)
       val wat = graft.wat.WatFixture.ensureSingle()
-      graft.wat.WatExtract.fromPathsV2(s, wat, "image_only").toDF()
+      graft.wat.WatExtract.fromPaths(s, wat, "image_only").toDF()
         // deterministic total order for the oracle hash WITHOUT a
         // global orderBy: range-sort SAMPLES its input, which would
         // execute the whole extraction twice (measured 2x on the
@@ -321,17 +320,16 @@ object RefQueries {
         .sortWithinPartitions("uid", "cc_filename", "page_url", "url", "alt")
     }),
 
-    // Fleet-scale extraction through the DSv2 `max_tasks` batching path:
+    // Fleet-scale extraction through the `wat` source's `max_tasks` batching:
     // 64 archives capped at 16 tasks (4 archives per partition) — the
     // shape a production listing takes when archive count >> sane task
     // count. Oracled against the committed dump (tools/
-    // wat_fleet64.parquet); the golden fleet-64 md5 + batched-vs-
-    // unbatched parity in WatExtractSpec still pin the framing
-    // semantics. Benched for the per-archive amortized time.
+    // wat_fleet64.parquet); the golden fleet-64 md5 in WatExtractSpec
+    // still pins the framing semantics. Benched for the per-archive amortized time.
     "q_wat_extract_fleet64" -> ((s, dir) => {
       graft.wat.WatFixture.ensureFleet64Parquet(s)
       val wats = graft.wat.WatFixture.ensureFleet64()
-      graft.wat.WatExtract.fromPathsV2Batched(s, wats, "image_only",
+      graft.wat.WatExtract.fromPaths(s, wats, "image_only",
         maxTasks = 16).toDF()
         // deterministic total order for the oracle hash WITHOUT a
         // global orderBy: range-sort SAMPLES its input, which would

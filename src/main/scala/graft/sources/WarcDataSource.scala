@@ -1,202 +1,58 @@
 package graft.sources
 
-import java.util
-
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter, In, IsNotNull, Not, Or, StringContains, StringEndsWith, StringStartsWith}
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.wat.{WarcHtml, WatReader}
+import graft.wat.{ClosingIterator, WarcHtml, WatReader}
 
-/** DataSourceV2 `warc` format — raw-WARC HTML pages as a table, the
-  * source twin of [[WatDataSource]] for crawls whose WAT sidecars are
-  * missing or stale (the reference has no raw-WARC story at all — it
-  * reads only WAT's pre-extracted Links, cc2dataset/main.py:144-155):
+/** DataSourceV2 `warc` format — raw-WARC HTML pages as a table, for
+  * crawls whose WAT sidecars are missing or stale (the reference has no
+  * raw-WARC story at all — it reads only WAT's pre-extracted Links,
+  * cc2dataset/main.py:144-155), and the one reader of raw WARCs:
   *
   *   spark.read.format("warc").load(paths: _*)
   *     → (warc_path string, page_url string, html string)
   *     // response records with a text/html Content-Type only
   *
-  * Same scale posture as the wat source: one partition per archive up
-  * to `max_tasks`, contiguous batching above it (a 5M-archive listing
-  * must not create 5M scheduler tasks); `warc_path`-only predicates
-  * prune partitions at PLANNING time (matching archives become input
-  * partitions, the rest are never fetched); dropping the `html` column
-  * skips the body decode per record (counts and listings pay headers
-  * only); tolerated corruption surfaces as a per-scan SQL UI metric.
-  * Downstream link extraction: [[graft.wat.WarcExtract.fromDsv2]]
-  * (scanHtml per row, then the shared relational tail).
+  * Same scale posture as the wat source (the shared [[ArchiveScan]]);
+  * dropping the `html` column skips the body decode per record (counts
+  * and listings pay headers only). Downstream link extraction:
+  * [[graft.wat.WarcExtract.fromPaths]] (scanHtml per row, then the
+  * shared relational tail).
   */
-class WarcDataSource extends TableProvider with DataSourceRegister {
+class WarcDataSource extends ArchiveDataSource(WarcDataSource)
 
-  override def shortName(): String = "warc"
+object WarcDataSource extends ArchiveFormat {
+  val shortName: String = "warc"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WarcDataSource.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new WarcTable(WatDataSource.pathsFrom(properties))
-}
-
-object WarcDataSource {
   val schema: StructType = StructType(Seq(
     StructField("warc_path", StringType, nullable = false),
     StructField("page_url", StringType, nullable = true),
     StructField("html", StringType, nullable = false)))
-}
 
-class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"warc(${paths.mkString(",")})"
-  override def schema(): StructType = WarcDataSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WarcScanBuilder(paths,
-      maxTasks = options.getInt("max_tasks", WatDataSource.DefaultMaxTasks),
-      streamThresholdBytes = options.getLong("stream_threshold_bytes",
-        Long.MaxValue),
-      maxFilesPerTrigger = options.getInt("max_files_per_trigger", 0))
-}
-
-class WarcScanBuilder(paths: Seq[String],
-    maxTasks: Int = WatDataSource.DefaultMaxTasks,
-    streamThresholdBytes: Long = Long.MaxValue,
-    maxFilesPerTrigger: Int = 0)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = WarcDataSource.schema
-  private var accepted: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    val names = requiredSchema.fieldNames.toSet
-    required = StructType(WarcDataSource.schema.filter(f => names(f.name)))
-  }
-
-  private val pathOnly = ArchiveScanSupport.pathOnly("warc_path") _
-  private def eval(f: Filter, p: String): Boolean =
-    ArchiveScanSupport.eval("warc_path")(f, p)
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ours, rest) = filters.partition(pathOnly)
-    accepted = ours
-    rest
-  }
-
-  override def pushedFilters(): Array[Filter] = accepted
-
-  override def build(): Scan = {
-    val filterSnapshot = accepted
-    new WarcScan(paths.filter(p => accepted.forall(eval(_, p))), required,
-      maxTasks, streamThresholdBytes,
-      listedFilter = p => filterSnapshot.forall(eval(_, p)),
-      maxFilesPerTrigger = maxFilesPerTrigger)
-  }
-}
-
-case class WarcInputPartition(paths: Seq[String]) extends InputPartition
-
-class WarcScan(paths: Seq[String], required: StructType,
-    maxTasks: Int, streamThresholdBytes: Long = Long.MaxValue,
-    listedFilter: String => Boolean = _ => true,
-    maxFilesPerTrigger: Int = 0) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] =
-    ArchiveScanSupport.planPartitions(paths, maxTasks,
-      WarcInputPartition.apply)
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    new WarcReaderFactory(conf, required, streamThresholdBytes)
-  }
-
-  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new CorruptArchivesMetric)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    new WarcMicroBatchStream(paths, conf, required, streamThresholdBytes,
-      listedFilter, maxFilesPerTrigger)
-  }
-}
-
-/** Streaming raw-WARC ingestion: the wat stream's relist-sort-prefix
-  * offset machinery verbatim ([[WatMicroBatchStream]] — globs relisted
-  * per micro-batch, lexicographic prefix offsets, max_files_per_trigger
-  * admission control), with the warc source's partitions and reader.
-  */
-class WarcMicroBatchStream(globs: Seq[String],
-    conf: org.apache.spark.util.SerializableConfiguration,
-    required: StructType,
-    streamThresholdBytes: Long = Long.MaxValue,
-    listedFilter: String => Boolean = _ => true,
-    maxFilesPerTrigger: Int = 0)
-    extends WatMicroBatchStream(globs, conf, required, streamThresholdBytes,
-      listedFilter, maxFilesPerTrigger) {
-  override protected def mkPartition(paths: Seq[String]): InputPartition =
-    WarcInputPartition(paths)
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(conf, required, streamThresholdBytes)
-}
-
-class WarcReaderFactory(conf: org.apache.spark.util.SerializableConfiguration,
-    required: StructType,
-    streamThresholdBytes: Long = Long.MaxValue) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val partPaths = partition.asInstanceOf[WarcInputPartition].paths
-    val wantPath = required.fieldNames.contains("warc_path")
-    val wantUrl = required.fieldNames.contains("page_url")
-    val wantHtml = required.fieldNames.contains("html")
-    new PartitionReader[InternalRow] {
-      private var corrupt = 0L
-      private var active: graft.wat.ClosingIterator[graft.wat.WarcRecord] = _
-      private val it = partPaths.iterator.flatMap { p =>
-        val u = UTF8String.fromString(p)
-        val inner = WatReader.archiveRecords(p, conf.value,
-          onCorrupt = e => { corrupt += 1; WatReader.logCorruptDefault(e) },
-          inMemoryLimitBytes = streamThresholdBytes)
-        active = inner
-        inner.filter(_.warcType.equalsIgnoreCase("response"))
-          .flatMap { r =>
-            if (wantHtml)
-              // full decode, transfer/content codings undone; "" on a
-              // broken body (row kept so pruned/unpruned counts agree)
-              WarcHtml.htmlOfHttpResponse(r.payload).map(html =>
-                (u, r.headers.get("warc-target-uri"),
-                  UTF8String.fromString(html)))
-            else
-              // html pruned → header-only acceptance, no body decode;
-              // accepts exactly the rows the decode path yields
-              WarcHtml.htmlBodyStart(r.payload).map(_ =>
-                (u, r.headers.get("warc-target-uri"),
-                  null: UTF8String))
-          }
-      }
-      private var row: (UTF8String, Option[String], UTF8String) = _
-      override def next(): Boolean =
-        if (it.hasNext) { row = it.next(); true } else false
-      override def get(): InternalRow = {
-        val vals = Seq(
-          if (wantPath) Some(row._1) else None,
-          if (wantUrl)
-            Some(row._2.map(UTF8String.fromString).orNull) else None,
-          if (wantHtml) Some(row._3) else None).flatten
-        InternalRow(vals: _*)
-      }
-      override def close(): Unit = if (active != null) active.close()
-      override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        Array(CorruptArchivesTaskMetric(corrupt))
-    }
+  def decode(path: String, conf: Configuration, required: Set[String],
+      onCorrupt: Exception => Unit,
+      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+    val u = UTF8String.fromString(path)
+    val wantHtml = required("html")
+    val recs = WatReader.archiveRecords(path, conf, onCorrupt,
+      inMemoryLimitBytes)
+    new ClosingIterator(
+      recs.filter(_.warcType.equalsIgnoreCase("response")).flatMap { r =>
+        val html =
+          if (wantHtml)
+            // full decode, transfer/content codings undone; "" on a
+            // broken body (row kept so pruned/unpruned counts agree)
+            WarcHtml.htmlOfHttpResponse(r.payload).map(UTF8String.fromString)
+          else
+            // html pruned → header-only acceptance, no body decode;
+            // accepts exactly the rows the decode path yields
+            WarcHtml.htmlBodyStart(r.payload).map(_ => null: UTF8String)
+        html.map(h => Array[Any](u,
+          r.headers.get("warc-target-uri").map(UTF8String.fromString).orNull,
+          h))
+      },
+      () => recs.close())
   }
 }

@@ -1,346 +1,45 @@
 package graft.sources
 
-import java.util
-
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter, In, IsNotNull, Not, Or, StringContains, StringEndsWith, StringStartsWith}
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.wat.WatReader
+import graft.wat.{ClosingIterator, WatReader}
 
-/** DataSourceV2 `wat` format — the idiomatic Spark source for
-  * `.warc.wat.gz` archives (SURVEY.md §2.1 S1 long-term form):
+/** DataSourceV2 `wat` format — the one reader of `.warc.wat.gz`
+  * archives, in batch and in stream (SURVEY.md §2.1 S1):
   *
   *   spark.read.format("wat").load(paths: _*)
   *     → (wat_path string, payload string)   // metadata records only
   *
-  * One input partition per archive (the natural unit: one fetch, one
-  * sequential gzip stream — matching the reference's
-  * one-task-per-WAT parallelization). Registered as short name "wat" via
-  * DataSourceRegister. Downstream extraction stays fully relational
-  * (WatExtract.extract over the payload column).
+  * One input partition per archive up to `max_tasks` (the natural unit:
+  * one fetch, one sequential gzip stream — matching the reference's
+  * one-task-per-WAT parallelization), contiguous batching above it.
+  * Downstream extraction stays fully relational (WatExtract.extract over
+  * the payload column).
   */
-class WatDataSource extends TableProvider with DataSourceRegister {
+class WatDataSource extends ArchiveDataSource(WatDataSource)
 
-  override def shortName(): String = "wat"
+object WatDataSource extends ArchiveFormat {
+  val shortName: String = "wat"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WatDataSource.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new WatTable(WatDataSource.pathsFrom(properties))
-}
-
-object WatDataSource {
   val schema: StructType = StructType(Seq(
     StructField("wat_path", StringType, nullable = false),
     StructField("payload", StringType, nullable = false)))
 
-  /** Above this many archives, planInputPartitions batches several
-    * archives per partition (option `max_tasks` overrides): a 5M-archive
-    * listing must not create 5M scheduler tasks — driver-side task
-    * bookkeeping alone would dwarf the work. Below it, one archive per
-    * partition (the reference's one-task-per-WAT unit).
+  /** Metadata records of one WAT; a pruned `payload` skips the per-record
+    * UTF-8 decode (row count = metadata records either way).
     */
-  val DefaultMaxTasks: Int = 100000
-
-  /** load(p1, p2, …) arrives as a JSON array under "paths"; load(p) as
-    * "path". Parsed with Jackson — naive comma-splitting would mangle
-    * paths containing commas or JSON escapes.
-    */
-  def pathsFrom(properties: util.Map[String, String]): Seq[String] = {
-    val single = Option(properties.get("path")).toSeq
-    val multi = Option(properties.get("paths")).toSeq.flatMap { json =>
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-      import scala.jdk.CollectionConverters._
-      if (node != null && node.isArray)
-        node.elements().asScala.map(_.asText).filter(_.nonEmpty).toSeq
-      else Seq.empty
-    }
-    (single ++ multi).distinct
-  }
-}
-
-class WatTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"wat(${paths.mkString(",")})"
-  override def schema(): StructType = WatDataSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WatScanBuilder(paths,
-      maxTasks = options.getInt("max_tasks", WatDataSource.DefaultMaxTasks),
-      streamThresholdBytes = options.getLong("stream_threshold_bytes",
-        Long.MaxValue),
-      maxFilesPerTrigger = options.getInt("max_files_per_trigger", 0))
-}
-
-/** Column pruning: a projection that drops `payload` (counts,
-  * path-listing queries) skips the per-record UTF-8 payload decode —
-  * frames are still walked (row count = metadata records), but the
-  * dominant per-row cost disappears and `Explain` shows the pruned
-  * ReadSchema.
-  *
-  * Filter pushdown: `wat_path` is constant per partition, so any
-  * predicate over it alone can be decided at PLANNING time — matching
-  * archives become input partitions, the rest are never fetched. On a
-  * million-archive listing, `wat_path LIKE 'CC-MAIN-2023-50%'` turns
-  * into a partition prune instead of a full-corpus scan-and-discard.
-  */
-class WatScanBuilder(paths: Seq[String],
-    maxTasks: Int = WatDataSource.DefaultMaxTasks,
-    streamThresholdBytes: Long = Long.MaxValue,
-    maxFilesPerTrigger: Int = 0)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = WatDataSource.schema
-  private var accepted: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // preserve source field order regardless of projection order
-    val names = requiredSchema.fieldNames.toSet
-    required = StructType(WatDataSource.schema.filter(f => names(f.name)))
-  }
-
-  private val pathOnly = ArchiveScanSupport.pathOnly("wat_path") _
-  private def eval(f: Filter, p: String): Boolean =
-    ArchiveScanSupport.eval("wat_path")(f, p)
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ours, rest) = filters.partition(pathOnly)
-    accepted = ours
-    rest // payload predicates (and anything else) stay post-scan
-  }
-
-  override def pushedFilters(): Array[Filter] = accepted
-
-  override def build(): Scan = {
-    val kept = paths.filter(p => accepted.forall(eval(_, p)))
-    // streaming treats load() args as globs relisted per batch — the
-    // same predicate re-applies to each LISTED file there (filtering the
-    // glob string alone could neither prune nor admit correctly)
-    val filterSnapshot = accepted
-    new WatScan(kept, required, maxTasks, streamThresholdBytes,
-      listedFilter = p => filterSnapshot.forall(eval(_, p)),
-      maxFilesPerTrigger = maxFilesPerTrigger)
-  }
-}
-
-/** One partition = one or more whole archives (each archive is one
-  * sequential fetch + gzip stream — never split WITHIN an archive).
-  */
-case class WatInputPartition(paths: Seq[String]) extends InputPartition
-
-class WatScan(paths: Seq[String], required: StructType,
-    maxTasks: Int = WatDataSource.DefaultMaxTasks,
-    streamThresholdBytes: Long = Long.MaxValue,
-    listedFilter: String => Boolean = _ => true,
-    maxFilesPerTrigger: Int = 0) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** ≤ maxTasks archives → the reference's one-task-per-WAT unit.
-    * Above it, contiguous groups of ceil(n / maxTasks) archives share a
-    * partition: the scheduler sees at most maxTasks tasks however large
-    * the listing, and each task still processes archives strictly
-    * sequentially (the per-archive cost model is unchanged — fewer,
-    * longer tasks). Contiguous grouping keeps neighboring archives (same
-    * crawl prefix on CC layouts) in one task for S3 locality.
-    */
-  override def planInputPartitions(): Array[InputPartition] =
-    ArchiveScanSupport.planPartitions(paths, maxTasks,
-      WatInputPartition.apply)
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // capture the session Hadoop conf (S3A credentials/tuning) at planning
-    // time — executors must not fall back to a bare Configuration
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    new WatReaderFactory(conf, required, streamThresholdBytes)
-  }
-
-  /** Corrupt-archive count surfaces in the SQL UI per scan — the DSv2
-    * form of the flatMap path's error accumulator: tolerated corruption
-    * must be VISIBLE, not just logged to executor stderr.
-    */
-  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new CorruptArchivesMetric)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    new WatMicroBatchStream(paths, conf, required, streamThresholdBytes,
-      listedFilter, maxFilesPerTrigger)
-  }
-}
-
-/** Offset = how many archives of the (sorted) listing are processed. */
-case class WatOffset(n: Int)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = s"""{"n":$n}"""
-}
-
-/** Structured Streaming WAT ingestion: each `load(...)` argument is a
-  * Hadoop glob relisted per micro-batch (a literal path globs to
-  * itself), the union is LEXICOGRAPHICALLY sorted, and the offset is a
-  * prefix length of that order — each archive is processed exactly
-  * once, new arrivals ride the next batch.
-  *
-  * Ordering contract (documented, checkpoint-stable): newly landed
-  * archives must sort AFTER already-processed ones, which date-stamped
-  * CC-style layouts (`CC-MAIN-2023-50/...`) satisfy; an archive that
-  * sorts into the processed prefix is never picked up. Offsets survive
-  * restarts (prefix length + deterministic relist).
-  */
-class WatMicroBatchStream(globs: Seq[String],
-    conf: org.apache.spark.util.SerializableConfiguration,
-    required: StructType, streamThresholdBytes: Long,
-    listedFilter: String => Boolean = _ => true,
-    maxFilesPerTrigger: Int = 0)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-
-  // the listing snapshot backing the current (start, end] plan; refreshed
-  // by latestOffset so planInputPartitions slices a consistent view
-  @volatile private var known: Seq[String] = Seq.empty
-
-  private def listNow(): Seq[String] = {
-    val fromGlobs = globs.flatMap { g =>
-      val p = new org.apache.hadoop.fs.Path(g)
-      val fs = p.getFileSystem(conf.value)
-      Option(fs.globStatus(p)).map(_.toSeq.map(_.getPath.toString))
-        .getOrElse(Seq.empty)
-    }
-    fromGlobs.distinct.filter(listedFilter).sorted
-  }
-
-  override def initialOffset(): Offset = WatOffset(0)
-
-  override def latestOffset(): Offset = {
-    val now = listNow()
-    // never let the snapshot shrink below what an offset already covers
-    // (a transiently unlistable file must not shift the prefix order)
-    if (now.size >= known.size) known = now
-    WatOffset(known.size)
-  }
-
-  /** Admission control: `max_files_per_trigger` caps each micro-batch —
-    * a restart facing a 100k-archive backlog drains it in bounded
-    * batches (checkpoint progress, sink visibility, retry granularity)
-    * instead of planning one monster batch. 0 = unlimited.
-    */
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxFilesPerTrigger > 0) ReadLimit.maxFiles(maxFilesPerTrigger)
-    else ReadLimit.allAvailable()
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val unlimited = latestOffset().asInstanceOf[WatOffset]
-    limit match {
-      case mf: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        WatOffset(math.min(unlimited.n,
-          start.asInstanceOf[WatOffset].n + mf.maxFiles()))
-      case _ => unlimited
-    }
-  }
-
-  override def reportLatestOffset(): Offset = WatOffset(known.size)
-
-  /** Partition constructor — the only wat-specific piece of the
-    * offset/listing machinery, overridden by the `warc` source's
-    * stream (same relist-sort-prefix contract, different reader).
-    */
-  protected def mkPartition(paths: Seq[String]): InputPartition =
-    WatInputPartition(paths)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[WatOffset].n
-    val e = end.asInstanceOf[WatOffset].n
-    known.slice(s, e).map(p => mkPartition(Seq(p))).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WatReaderFactory(conf, required, streamThresholdBytes)
-
-  override def deserializeOffset(json: String): Offset = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val off = WatOffset(node.get("n").asInt())
-    // restart path: rebuild the listing so planInputPartitions can slice
-    if (known.size < off.n) known = listNow()
-    off
-  }
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class CorruptArchivesMetric
-    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
-  override def name(): String = "corruptArchives"
-  override def description(): String =
-    "archives with tolerated corruption (kept records read so far)"
-}
-
-case class CorruptArchivesTaskMetric(value: Long)
-    extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
-  override def name(): String = "corruptArchives"
-}
-
-class WatReaderFactory(conf: org.apache.spark.util.SerializableConfiguration,
-    required: StructType, streamThresholdBytes: Long = Long.MaxValue)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val partPaths = partition.asInstanceOf[WatInputPartition].paths
-    val wantPath = required.fieldNames.contains("wat_path")
-    val wantPayload = required.fieldNames.contains("payload")
-    new PartitionReader[InternalRow] {
-      // corrupt archives end their own iteration (records read so far
-      // are kept) and bump this task metric — aggregated per scan in the
-      // SQL UI via CorruptArchivesMetric
-      private var corrupt = 0L
-      // archives in one partition are read strictly one after another;
-      // the current archive's path rides along without re-encoding per row.
-      // `active` tracks the archive currently being decoded: the flatMap
-      // advances to the next path only after the previous iterator is
-      // exhausted (which closes its own source), so at most one is live.
-      private var active: graft.wat.ClosingIterator[graft.wat.WarcRecord] = _
-      private val it = partPaths.iterator.flatMap { p =>
-        val u = UTF8String.fromString(p)
-        val inner = WatReader.metadataRecords(p, conf.value,
-          onCorrupt = e => { corrupt += 1; WatReader.logCorruptDefault(e) },
-          inMemoryLimitBytes = streamThresholdBytes)
-        active = inner
-        inner.map(r => (u, r))
-      }
-      private var currentPath: UTF8String = _
-      private var current: UTF8String = _
-      override def next(): Boolean =
-        if (it.hasNext) {
-          val (u, rec) = it.next()
-          currentPath = u
-          if (wantPayload) current = UTF8String.fromString(rec.payloadString)
-          true
-        } else false
-      override def get(): InternalRow =
-        if (wantPath && wantPayload) InternalRow(currentPath, current)
-        else if (wantPath) InternalRow(currentPath)
-        else if (wantPayload) InternalRow(current)
-        else InternalRow.empty
-      // Spark calls close() on task end even when the scan stops early
-      // (limit pushdown, take, kill): release the in-flight archive's
-      // source — on the streaming-decode path that's a real FS/S3
-      // handle, and leaking one per early-terminated task exhausts
-      // descriptors. Exhausted iterators already closed themselves;
-      // ClosingIterator.close() is idempotent either way.
-      override def close(): Unit = if (active != null) active.close()
-      override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-        Array(CorruptArchivesTaskMetric(corrupt))
-    }
+  def decode(path: String, conf: Configuration, required: Set[String],
+      onCorrupt: Exception => Unit,
+      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+    val u = UTF8String.fromString(path)
+    val wantPayload = required("payload")
+    val recs = WatReader.metadataRecords(path, conf, onCorrupt,
+      inMemoryLimitBytes)
+    new ClosingIterator(
+      recs.map(r => Array[Any](u,
+        if (wantPayload) UTF8String.fromString(r.payloadString) else null)),
+      () => recs.close())
   }
 }

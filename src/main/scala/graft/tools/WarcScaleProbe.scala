@@ -11,7 +11,7 @@ import graft.wat.{WarcExtract, WatExtract, WatFixture}
   * parity construction); the WAT files wrap them in the JSON envelope,
   * the WARC files in real HTML inside HTTP response bodies. The probe
   * measures extraction wall (count sink, min of 2 passes) at ×1 and
-  * ×10 records per archive, both transports, flatMap and DSv2 paths.
+  * ×10 records per archive, both transports, each through its source.
   *
   * Run: sbt "runMain graft.tools.WarcScaleProbe [factor...]"
   */
@@ -36,14 +36,13 @@ object WarcScaleProbe {
       appName = "warc-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    // session warm-up: one tiny extraction per path so the first timed
+    // session warm-up: one tiny extraction per source so the first timed
     // pass doesn't absorb codegen/classload cost
     locally {
       val w = WatFixture.ensureBenchWats(1, 50, 5)
       val c = WatFixture.ensureBenchWarcs(1, 50, 5)
       WatExtract.fromPaths(spark, w, "image_only").toDF().count()
       WarcExtract.fromPaths(spark, c, "image_only").toDF().count()
-      WarcExtract.fromDsv2(spark, c, "image_only").toDF().count()
     }
 
     for (f <- factors) {
@@ -55,14 +54,10 @@ object WarcScaleProbe {
         WatExtract.fromPaths(spark, wats, "image_only").toDF().count())
       val (ct, cr) = time2(
         WarcExtract.fromPaths(spark, warcs, "image_only").toDF().count())
-      val (dt, dr) = time2(
-        WarcExtract.fromDsv2(spark, warcs, "image_only").toDF().count())
-      require(wr == cr && cr == dr,
-        s"parity broken: wat=$wr warc=$cr dsv2=$dr")
+      require(wr == cr, s"parity broken: wat=$wr warc=$cr")
       println(f"x$f%-3d ($nPages%7d pages, $wr%7d image links)  " +
         f"wat=$wt%6.2fs (${nPages / wt}%8.0f pages/s)  " +
-        f"warc=$ct%6.2fs (${nPages / ct}%8.0f pages/s)  " +
-        f"warc-dsv2=$dt%6.2fs")
+        f"warc=$ct%6.2fs (${nPages / ct}%8.0f pages/s)")
     }
     spark.stop()
   }

@@ -2,8 +2,7 @@ package graft.wat
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.DocLink
 
@@ -386,69 +385,24 @@ object WarcHtml {
     }
     -1
   }
-
-  /** All HTML pages of one WARC: response records → (target URI, head
-    * base, links). Same fault tolerance as the WAT reader: a corrupt
-    * frame ends the file, a non-HTML or header-less response is
-    * skipped.
-    */
-  def pagesOf(path: String, conf: Configuration,
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long = Long.MaxValue): ClosingIterator[PageLinks] = {
-    val ccName = path.substring(path.lastIndexOf('/') + 1)
-    val recs = WatReader.archiveRecords(path, conf, onCorrupt,
-      inMemoryLimitBytes)
-    new ClosingIterator(
-      recs.filter(_.warcType.equalsIgnoreCase("response"))
-        .flatMap { r =>
-          htmlOfHttpResponse(r.payload).map { html =>
-            val (base, links) = scanHtml(html)
-            PageLinks(ccName,
-              r.headers.getOrElse("warc-target-uri", null),
-              base.orNull, links)
-          }
-        },
-      () => recs.close())
-  }
 }
 
 /** WARC(raw HTML) → DocLink extraction: the WAT pipeline's structure —
-  * one imperative task per archive, then the SHARED relational tail —
-  * with [[WarcHtml.scanHtml]] standing where WAT's pre-extracted JSON
-  * stood. Interchangeable with [[WatExtract]] downstream by
-  * construction (both call [[WatExtract.extractLinks]]).
+  * the `warc` source decodes each archive in its own task, then the
+  * SHARED relational tail — with [[WarcHtml.scanHtml]] standing where
+  * WAT's pre-extracted JSON stood. Interchangeable with [[WatExtract]]
+  * downstream by construction (both call [[WatExtract.extractLinks]]).
   */
 object WarcExtract {
 
-  /** One partition per WARC path (the reference's parallelization
-    * unit carried over: main.py:273-274) → link frame rows.
-    */
-  def pages(spark: SparkSession, paths: Seq[String]): DataFrame =
-    pages(spark, paths,
-      spark.sparkContext.longAccumulator("graft.warc.read_errors"))
-
-  def pages(spark: SparkSession, paths: Seq[String],
-      readErrors: org.apache.spark.util.LongAccumulator,
-      streamThresholdBytes: Long = Long.MaxValue): DataFrame = {
-    import spark.implicits._
-    ArchiveTasks.perArchive(spark, paths, readErrors,
-      streamThresholdBytes)(WarcHtml.pagesOf(_, _, _, _)).toDF()
-  }
-
   /** End-to-end: WARC paths → DocLink dataset, same semantics (and
-    * same relational tail) as [[WatExtract.fromPaths]].
+    * same relational tail) as [[WatExtract.fromPaths]]. One partition
+    * per archive up to `maxTasks`, contiguous batching above it; the
+    * HTML scan runs per row in the same task that decoded the archive
+    * (no re-shuffle of page bodies).
     */
-  def fromPaths(spark: SparkSession, paths: Seq[String],
-      docType: String): Dataset[DocLink] =
-    WatExtract.extractLinks(pages(spark, paths), docType)
-
-  /** Same, through the DataSourceV2 `warc` source — planning-time
-    * partition pruning on `warc_path` predicates and `max_tasks`
-    * batching come for free; the HTML scan runs per row in the same
-    * task that decoded the archive (no re-shuffle of page bodies).
-    */
-  def fromDsv2(spark: SparkSession, paths: Seq[String], docType: String,
-      maxTasks: Int = graft.sources.WatDataSource.DefaultMaxTasks)
+  def fromPaths(spark: SparkSession, paths: Seq[String], docType: String,
+      maxTasks: Int = graft.sources.ArchiveSource.DefaultMaxTasks)
       : Dataset[DocLink] = {
     import spark.implicits._
     val linkFrame = spark.read.format("warc")

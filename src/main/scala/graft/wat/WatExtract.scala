@@ -4,18 +4,20 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{DocLink, WatEnvelope}
-import graft.ops.{LinkOps, UrlOps}
+import graft.ops.LinkOps
+import graft.sources.ArchiveSource
 
 /** WAT → DocLink extraction, two layers:
   *
-  * 1. `payloads` — the only imperative hop: one Spark task per WAT file
-  *    (the reference's parallelization unit, cc2dataset/main.py:273-274)
-  *    that fetches + frame-splits the archive and emits raw JSON strings.
+  * 1. `payloads` — the only imperative hop: the `wat` source's one task
+  *    per WAT file (the reference's parallelization unit,
+  *    cc2dataset/main.py:273-274) fetches + frame-splits the archive and
+  *    emits raw JSON strings.
   * 2. `extract` — fully relational from there: `from_json` with the
   *    envelope schema (Catalyst prunes the JSON parse to just the
   *    navigated fields), `explode` over links, Column predicates,
   *    urljoin UDF only on relative urls, builtin md5 uid. Everything
-  *    after the flatMap is optimizer-visible and codegen'd — unlike the
+  *    after the scan is optimizer-visible and codegen'd — unlike the
   *    reference, whose Python mapPartitions is opaque end-to-end
   *    (SURVEY.md §4.1).
   *
@@ -24,33 +26,23 @@ import graft.ops.{LinkOps, UrlOps}
   */
 object WatExtract {
 
-  /** One partition per WAT path → iterator of metadata-record JSON.
-    * `parallelize(paths, paths.size)` splits positionally — exactly one
-    * path per task (round-robin `repartition` would birthday-collide
-    * several archives into one task while others idle). The session's
-    * Hadoop configuration (S3A credentials/tuning) is broadcast to the
-    * executors — a bare `new Configuration()` would silently drop every
-    * spark.hadoop.* setting.
+  /** WAT paths → one `payload` row (raw JSON) per metadata record,
+    * through the `wat` source: one partition per archive up to
+    * `maxTasks` (the reference's parallelization unit,
+    * cc2dataset/main.py:273-274), contiguous batching above it. A
+    * corrupt or unfetchable archive contributes the records read before
+    * the failure, never a task abort, and counts into the scan's
+    * `corruptArchives` metric.
     */
   def payloads(spark: SparkSession, paths: Seq[String]): DataFrame =
-    payloads(spark, paths,
-      spark.sparkContext.longAccumulator("graft.wat.read_errors"))
+    read(spark, paths, Long.MaxValue, ArchiveSource.DefaultMaxTasks)
 
-  /** Variant with a caller-supplied error accumulator: every corrupt or
-    * unfetchable archive bumps it (the shard itself contributes the
-    * records read before the failure, never a task abort), so a
-    * full-crawl run can audit how many of its million shards degraded —
-    * the operational signal the reference gets from its
-    * 'A shard failed to parse' log lines.
-    */
-  def payloads(spark: SparkSession, paths: Seq[String],
-      readErrors: org.apache.spark.util.LongAccumulator,
-      streamThresholdBytes: Long = Long.MaxValue): DataFrame = {
-    import spark.implicits._
-    ArchiveTasks.perArchive(spark, paths, readErrors,
-      streamThresholdBytes)(WatReader.metadataPayloads(_, _, _, _))
-      .toDF("payload")
-  }
+  private def read(spark: SparkSession, paths: Seq[String],
+      streamThresholdBytes: Long, maxTasks: Int): DataFrame =
+    spark.read.format("wat")
+      .option("stream_threshold_bytes", streamThresholdBytes)
+      .option("max_tasks", maxTasks)
+      .load(paths: _*).select("payload")
 
   /** Relational extraction over a DataFrame with a `payload` JSON column.
     * Uses the native `url_resolve` Catalyst expression (codegen'd) rather
@@ -119,30 +111,15 @@ object WatExtract {
   /** End-to-end: WAT paths → deduplicatable DocLink dataset.
     * `streamThresholdBytes`: archives above it decode as a stream
     * instead of whole-file (WatReader.metadataRecords memory bound);
-    * the default keeps reference-parity whole-file mode.
+    * the default keeps reference-parity whole-file mode. `maxTasks`
+    * caps the task count: above it contiguous archive groups share a
+    * partition, so a million-archive listing plans a bounded task count
+    * (`ArchiveSource.DefaultMaxTasks` scaladoc).
     */
   def fromPaths(spark: SparkSession, paths: Seq[String], docType: String,
-      streamThresholdBytes: Long = Long.MaxValue): Dataset[DocLink] =
-    extract(payloads(spark, paths,
-      spark.sparkContext.longAccumulator("graft.wat.read_errors"),
-      streamThresholdBytes), docType)
-
-  /** Same via the DataSourceV2 `wat` format (graft.sources.WatDataSource):
-    * the source plans one partition per archive; extraction is identical.
-    */
-  def fromPathsV2(spark: SparkSession, paths: Seq[String], docType: String): Dataset[DocLink] =
-    extract(spark.read.format("wat").load(paths: _*).select("payload"), docType)
-
-  /** [[fromPathsV2]] with an explicit `max_tasks` cap — the fleet-scale
-    * shape: above the cap the source batches contiguous archive groups
-    * into shared partitions, so a million-archive listing plans a
-    * bounded task count instead of a task per WAT
-    * (`WatDataSource.DefaultMaxTasks` scaladoc).
-    */
-  def fromPathsV2Batched(spark: SparkSession, paths: Seq[String],
-      docType: String, maxTasks: Int): Dataset[DocLink] =
-    extract(spark.read.format("wat").option("max_tasks", maxTasks)
-      .load(paths: _*).select("payload"), docType)
+      streamThresholdBytes: Long = Long.MaxValue,
+      maxTasks: Int = ArchiveSource.DefaultMaxTasks): Dataset[DocLink] =
+    extract(read(spark, paths, streamThresholdBytes, maxTasks), docType)
 
   /** CONTINUOUS extraction: the streaming wat source (globs relisted per
     * micro-batch, each archive exactly once) through the SAME relational
@@ -154,7 +131,7 @@ object WatExtract {
   def extractStream(spark: SparkSession, globs: Seq[String],
       docType: String, options: Map[String, String] = Map.empty): Dataset[DocLink] = {
     // DataStreamReader.load takes one path; several globs ride the same
-    // "paths" JSON property the batch reader uses (WatDataSource.pathsFrom)
+    // "paths" JSON property the batch reader uses (ArchiveSource.pathsFrom)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val arr = om.createArrayNode()
     globs.foreach(arr.add)
@@ -184,9 +161,7 @@ object WatExtract {
       docType: String, maxFilesPerTrigger: Int = 0,
       fetchParallelism: Int = 0): Dataset[DocLink] = {
     import spark.implicits._
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
+    val conf = ArchiveTasks.broadcastConf(spark)
     val reader = spark.readStream.format("text")
     val withTrigger =
       if (maxFilesPerTrigger > 0)
@@ -200,13 +175,8 @@ object WatExtract {
       .filter(p => p.nonEmpty && !p.startsWith("#"))
       .repartition(par)
     val payloads = paths
-      .flatMap { p =>
-        val it = WatReader.metadataPayloads(p, confBc.value.value)
-        // same early-termination handle release as the batch path
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => it.close()))
-        it
-      }
+      .flatMap(p => ArchiveTasks.closeAtTaskEnd(
+        WatReader.metadataPayloads(p, conf.value.value)))
       .toDF("payload")
     extract(payloads, docType)
   }

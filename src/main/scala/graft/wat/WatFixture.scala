@@ -1125,21 +1125,20 @@ object WatFixture {
       WatExtract.fromPaths(spark, ensureFleet(), "image_only").toDF(),
       spark, goldenFleetContentHash("image_only"))
 
-  /** image_only extraction over the 400k-link single archive (via the
-    * same DSv2 path the query uses — the dump must witness the exact
-    * operator under oracle).
+  /** image_only extraction over the 400k-link single archive (the
+    * dump must witness the exact operator under oracle).
     */
   def ensureSingleParquet(spark: org.apache.spark.sql.SparkSession): String =
     ensureExtractDump(new java.io.File(SingleParquetPath),
-      WatExtract.fromPathsV2(spark, ensureSingle(), "image_only").toDF(),
+      WatExtract.fromPaths(spark, ensureSingle(), "image_only").toDF(),
       spark, goldenSingleContentHash("image_only"))
 
-  /** image_only extraction over the 64-archive fleet (DSv2 batched,
+  /** image_only extraction over the 64-archive fleet (batched,
     * max_tasks=16 — the q_wat_extract_fleet64 shape).
     */
   def ensureFleet64Parquet(spark: org.apache.spark.sql.SparkSession): String =
     ensureExtractDump(new java.io.File(Fleet64ParquetPath),
-      WatExtract.fromPathsV2Batched(spark, ensureFleet64(), "image_only",
+      WatExtract.fromPaths(spark, ensureFleet64(), "image_only",
         maxTasks = 16).toDF(),
       spark, goldenFleet64Hash)
 

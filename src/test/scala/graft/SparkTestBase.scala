@@ -12,4 +12,14 @@ trait SparkTestBase {
 
 object SparkTestBase {
   def fresh(): SparkSession = SessionBuilder.local(4, appName = "graft-test")
+
+  /** The `corruptArchives` metric of the archive scan in `df`'s executed
+    * plan, read after an action on `df` itself has run.
+    */
+  def corruptArchives(df: org.apache.spark.sql.Dataset[_]): Long = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec =>
+      b.metrics("corruptArchives").value
+    }.get
+  }
 }

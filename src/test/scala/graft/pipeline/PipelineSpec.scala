@@ -215,6 +215,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(n2 == 2)
   }
 
+  test("the CLI stops its session when the run ends, clean or failed") {
+    val out = new File(tmp, "out_cli_stop").getAbsolutePath
+    val clean = factory()
+    Console.withOut(new java.io.PrintStream(
+        new java.io.ByteArrayOutputStream(), true, "UTF-8")) {
+      graft.Main.main(Array("--output_path", out, "--document_type", "audio",
+        "--wat_paths", wat1))
+    }
+    assert(clean.sparkContext.isStopped)
+    // a failing run (resume requires multipart) stops it too
+    val failing = factory()
+    assert(!failing.sparkContext.isStopped)
+    intercept[IllegalArgumentException] {
+      graft.Main.main(Array("--output_path", out, "--resume", out))
+    }
+    assert(failing.sparkContext.isStopped)
+  }
+
   test("listing-page parser is total on hostile HTML and emits only well-formed index urls") {
     val rnd = new scala.util.Random(31)
     val frags = Seq("<li>", "s3://commoncrawl/crawl-data/", "CC-MAIN-",

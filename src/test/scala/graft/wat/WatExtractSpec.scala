@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.sources.{ArchivePartition, ArchiveReaderFactory, ArchiveScanBuilder, WatDataSource}
 
 /** Relational (from_json + explode + Column) extraction must agree with
   * the imperative ProcessWat on the fixture — same rows, same uids.
@@ -46,12 +47,12 @@ class WatExtractSpec extends AnyFunSuite with SparkTestBase {
       assert(hash(fleet, dt) == want, s"16-archive fleet, $dt")
   }
 
-  test("fleet64 batched extraction: 16 tasks, parity with per-archive path, pinned content") {
+  test("fleet64 batched extraction: 16 tasks, pinned content") {
     val fleet64 = WatFixture.ensureFleet64()
     assert(fleet64.size == 64)
     assert(fleet64.take(16) == WatFixture.ensureFleet(),
       "the 64-archive series must extend the 16-archive fleet value-stably")
-    val batched = WatExtract.fromPathsV2Batched(spark, fleet64,
+    val batched = WatExtract.fromPaths(spark, fleet64,
       "image_only", maxTasks = 16)
     // the raw source plans exactly max_tasks partitions (4 archives each)
     assert(spark.read.format("wat").option("max_tasks", 16)
@@ -59,12 +60,6 @@ class WatExtractSpec extends AnyFunSuite with SparkTestBase {
     val got = batched.collect().toSeq
       .map(r => (r.uid, r.url, String.valueOf(r.alt), r.cc_filename,
         r.page_url))
-    // batching must not change CONTENT — only task grouping
-    val unbatched = WatExtract.fromPaths(spark, fleet64, "image_only")
-      .collect().toSeq
-      .map(r => (r.uid, r.url, String.valueOf(r.alt), r.cc_filename,
-        r.page_url))
-    assert(got.sorted == unbatched.sorted)
     assert(WatFixture.contentHash(got) == WatFixture.goldenFleet64Hash,
       s"fleet64 content drifted: ${WatFixture.contentHash(got)}")
   }
@@ -101,11 +96,6 @@ class WatExtractSpec extends AnyFunSuite with SparkTestBase {
     assert(v2.columns.toSeq == Seq("wat_path", "payload"))
     assert(v2.count() == WatFixture.records.size - 1) // metadata only
     assert(v2.rdd.getNumPartitions == 1)
-    val viaV2 = WatExtract.fromPathsV2(spark, Seq(fixturePath), "image")
-      .collect().map(_.uid).sorted
-    val viaFlatMap = WatExtract.fromPaths(spark, Seq(fixturePath), "image")
-      .collect().map(_.uid).sorted
-    assert(viaV2.sameElements(viaFlatMap))
   }
 
   test("DSv2 wat scan prunes the payload column") {
@@ -131,16 +121,31 @@ class WatExtractSpec extends AnyFunSuite with SparkTestBase {
     assert(WatExtract.fromPaths(spark, Seq(fixturePath, f2), "audio").count() == 4)
   }
 
-  test("read-error accumulator audits corrupt shards without task aborts") {
+  test("scan metric counts corrupt shards without task aborts") {
     val good = fixturePath
     val bytes = Files.readAllBytes(new File(good).toPath)
     val cutFile = new File(tmp, "cut.warc.wat.gz")
     Files.write(cutFile.toPath, bytes.take(bytes.length - 40))
-    val acc = spark.sparkContext.longAccumulator("test.read_errors")
-    val n = WatExtract.payloads(spark,
-      Seq(good, cutFile.getAbsolutePath), acc).count()
-    assert(acc.value == 1L) // truncated shard counted, good file clean
+    val ds = WatExtract.payloads(spark, Seq(good, cutFile.getAbsolutePath))
+    val n = ds.collect().length
+    // truncated shard counted, good file clean
+    assert(SparkTestBase.corruptArchives(ds) == 1L)
     assert(n > WatFixture.records.size - 1) // cut shard still contributed
+  }
+
+  test("a path listed twice is read twice: one partition per listing") {
+    // the product samples archives with replacement — a repeat is work
+    val once = spark.read.format("wat").load(fixturePath)
+    val twice = spark.read.format("wat").load(fixturePath, fixturePath)
+    assert(twice.rdd.getNumPartitions == 2)
+    assert(twice.count() == 2 * once.count())
+    assert(WatExtract.fromPaths(spark, Seq(fixturePath, fixturePath),
+      "audio").count() == 4)
+  }
+
+  test("an empty path list reads as an empty result") {
+    assert(WatExtract.payloads(spark, Nil).count() == 0)
+    assert(WatExtract.fromPaths(spark, Nil, "image").count() == 0)
   }
 
   test("DSv2 batches archives per partition above max_tasks") {
@@ -169,12 +174,12 @@ class WatExtractSpec extends AnyFunSuite with SparkTestBase {
     val bytes = Files.readAllBytes(new File(fixturePath).toPath)
     val cut = new File(tmp, "metric_cut.warc.wat.gz")
     Files.write(cut.toPath, bytes.take(bytes.length - 40))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val reader = new graft.sources.WatReaderFactory(conf,
-      graft.sources.WatDataSource.schema)
-      .createReader(graft.sources.WatInputPartition(
-        Seq(fixturePath, cut.getAbsolutePath)))
+    val conf = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    val reader = new ArchiveReaderFactory(WatDataSource, conf,
+      WatDataSource.schema)
+      .createReader(ArchivePartition(Seq(fixturePath, cut.getAbsolutePath)))
     var rows = 0
     while (reader.next()) rows += 1
     val metric = reader.currentMetricsValues()
@@ -182,7 +187,7 @@ class WatExtractSpec extends AnyFunSuite with SparkTestBase {
     assert(metric.value == 1L) // only the truncated archive counted
     assert(rows > WatFixture.records.size - 1) // cut shard still contributed
     // and the scan declares the metric so the UI can aggregate it
-    val scan = new graft.sources.WatScanBuilder(Seq(fixturePath)).build()
+    val scan = new ArchiveScanBuilder(WatDataSource, Seq(fixturePath)).build()
     assert(scan.supportedCustomMetrics().exists(_.name == "corruptArchives"))
   }
 
