@@ -12,23 +12,26 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
-import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter, In, IsNotNull, Not, Or, StringContains, StringEndsWith, StringStartsWith}
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, In, IsNotNull, Not, Or, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.wat.{ClosingIterator, WatReader}
 
-/** What one archive format contributes to the shared archive source
-  * ([[WatDataSource]], [[WarcDataSource]]): a short name, a schema whose
-  * first column is the constant-per-archive path, and the decoder of one
-  * archive into rows. Everything else — table, planning-time path
-  * pruning, column pruning, `max_tasks` batching, streaming offsets, the
-  * per-task archive loop and its corruption count — is
-  * format-independent and written once below.
+/** What one archive format contributes to the shared archive source: a
+  * schema whose first column is the constant-per-archive path, and the
+  * decoder of one archive into rows. Everything else — table,
+  * planning-time path pruning, column pruning, `max_tasks` batching,
+  * streaming offsets, the per-task archive loop and its corruption
+  * count — is format-independent and written once below.
+  *
+  * The formats: [[WatDataSource]], [[WarcDataSource]],
+  * [[graft.wat.WetSource]], [[graft.wat.CdxjSource]],
+  * [[graft.wat.CdxSource]] (legacy CDX) and [[graft.wat.CcIndexSource]]
+  * (the cc-index walk over WARC members).
   */
 trait ArchiveFormat extends Serializable {
-  def shortName: String
   def schema: StructType
   final def pathColumn: String = schema.head.name
 
@@ -42,12 +45,11 @@ trait ArchiveFormat extends Serializable {
       inMemoryLimitBytes: Long): ClosingIterator[Array[Any]]
 }
 
-/** `spark.read.format(<shortName>)`: one concrete subclass per format,
-  * registered via DataSourceRegister.
+/** `spark.read.format(<provider class name>)`, one subclass per format;
+  * only `wat` and `warc` register a short name (DataSourceRegister).
   */
 abstract class ArchiveDataSource(format: ArchiveFormat)
-    extends TableProvider with DataSourceRegister {
-  override def shortName(): String = format.shortName
+    extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     format.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -148,7 +150,8 @@ object ArchiveSource {
 
 class ArchiveTable(format: ArchiveFormat, paths: Seq[String])
     extends Table with SupportsRead {
-  override def name(): String = s"${format.shortName}(${paths.mkString(",")})"
+  override def name(): String =
+    s"${format.getClass.getSimpleName.stripSuffix("$")}(${paths.mkString(",")})"
   override def schema(): StructType = format.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,

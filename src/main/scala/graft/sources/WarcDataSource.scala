@@ -22,10 +22,11 @@ import graft.wat.{ClosingIterator, WarcHtml, WatReader}
   * shared relational tail).
   */
 class WarcDataSource extends ArchiveDataSource(WarcDataSource)
+    with org.apache.spark.sql.sources.DataSourceRegister {
+  override def shortName(): String = "warc"
+}
 
 object WarcDataSource extends ArchiveFormat {
-  val shortName: String = "warc"
-
   val schema: StructType = StructType(Seq(
     StructField("warc_path", StringType, nullable = false),
     StructField("page_url", StringType, nullable = true),

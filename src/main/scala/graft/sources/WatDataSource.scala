@@ -19,10 +19,11 @@ import graft.wat.{ClosingIterator, WatReader}
   * the payload column).
   */
 class WatDataSource extends ArchiveDataSource(WatDataSource)
+    with org.apache.spark.sql.sources.DataSourceRegister {
+  override def shortName(): String = "wat"
+}
 
 object WatDataSource extends ArchiveFormat {
-  val shortName: String = "wat"
-
   val schema: StructType = StructType(Seq(
     StructField("wat_path", StringType, nullable = false),
     StructField("payload", StringType, nullable = false)))

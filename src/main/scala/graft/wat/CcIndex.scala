@@ -6,6 +6,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.{ArchiveDataSource, ArchiveFormat}
 
 /** The columnar-index access path: instead of scanning whole archives
   * (the reference reads entire WATs — cc2dataset/main.py:186-206), a
@@ -225,18 +229,21 @@ object CcIndex {
     * bounds a task to ~`splitBytes` of one archive even when the
     * filter selects every record of a hot file — then one imperative
     * task per region: open once, positioned reads in offset order.
-    * Records that fail to fetch or parse count into `readErrors` and
-    * drop (one bad range must not kill a 10⁶-range job).
+    * Records that fail to fetch or parse count into the
+    * `graft.ccindex.fetch_errors` accumulator and drop (one bad range
+    * must not kill a 10⁶-range job).
     */
   def fetchHtmlPages(idx: DataFrame,
       splitBytes: Long = 1L << 30,
       gapBytes: Long = 64L << 10,
       maxReadBytes: Long = 16L << 20): DataFrame = {
-    val spark = idx.sparkSession
-    fetchHtmlPages(idx,
-      spark.sparkContext.longAccumulator("graft.ccindex.read_errors"),
-      splitBytes, gapBytes, maxReadBytes)
+    fetchHtmlPages(idx, fetchErrors(idx.sparkSession), splitBytes,
+      gapBytes, maxReadBytes)
   }
+
+  /** Per-job count of the index rows a ranged fetch drops. */
+  private def fetchErrors(spark: SparkSession) =
+    spark.sparkContext.longAccumulator("graft.ccindex.fetch_errors")
 
   /** Coalesce offset-sorted `(offset, length)` ranges into read
     * groups: a range joins the current group when the seek gap from
@@ -291,9 +298,7 @@ object CcIndex {
       splitBytes: Long = 1L << 30,
       gapBytes: Long = 64L << 10,
       maxReadBytes: Long = 16L << 20): DataFrame = {
-    val spark = idx.sparkSession
-    fetchVerified[Array[Byte]](idx,
-      spark.sparkContext.longAccumulator("graft.ccindex.read_errors"),
+    fetchVerified[Array[Byte]](idx, fetchErrors(idx.sparkSession),
       splitBytes, gapBytes, maxReadBytes) { r =>
       val b = r.payload
       val s = httpBodyStart(b)
@@ -318,9 +323,7 @@ object CcIndex {
       splitBytes: Long = 1L << 30,
       gapBytes: Long = 64L << 10,
       maxReadBytes: Long = 16L << 20): DataFrame = {
-    val spark = idx.sparkSession
-    fetchVerified[(Int, String, Array[Byte])](idx,
-      spark.sparkContext.longAccumulator("graft.ccindex.read_errors"),
+    fetchVerified[(Int, String, Array[Byte])](idx, fetchErrors(idx.sparkSession),
       splitBytes, gapBytes, maxReadBytes) { r =>
       val b = r.payload
       val (status, ct, bodyStart) = httpEnvelope(b)
@@ -534,7 +537,7 @@ object CcIndex {
     * A revisit whose digest has no `response` row in `original` cannot
     * be satisfied — it counts into `unresolved` (an accumulator, read
     * after the caller's action) and drops, the same drop-and-account
-    * contract as the fetch path's `readErrors`.
+    * contract as the fetch path's error accumulator.
     */
   def resolveRevisits(idx: DataFrame, original: DataFrame): DataFrame =
     resolveRevisits(idx, original,
@@ -577,57 +580,25 @@ object CcIndex {
 
   /** Build a cc-index-shaped frame over local archive shards — the
     * fixture-side index builder (real CC publishes this table; a
-    * private crawl runs exactly this walk once per archive). One task
-    * per archive: whole-file read, [[memberSpans]] walk, one row per
-    * member with the record's target URI. The caller supplies the
-    * `mime`/`status` synthesis (the fixture's closed-form rotation).
+    * private crawl runs exactly this walk once per archive): the
+    * [[CcIndexSource]] walk, one row per response/revisit member with
+    * the record's target URI. The caller supplies the `mime`/`status`
+    * synthesis (the fixture's closed-form rotation) over the URL's doc
+    * id; revisit rows keep the `warc/revisit` mime.
     */
   def buildIndex(spark: SparkSession, paths: Seq[String],
       mimeOf: Long => String, statusOf: Long => Int): DataFrame = {
     import spark.implicits._
-    val errors =
-      spark.sparkContext.longAccumulator("graft.ccindex.build_errors")
-    ArchiveTasks.perArchive[
-        (String, String, String, Int, String, String, Long, Long)](
-        spark, paths, errors, Long.MaxValue) { (path, conf, onCorrupt, _) =>
-      WatReader.fetchAllBytes(path, conf) match {
-        case None =>
-          onCorrupt(new java.io.IOException(s"fetch failed: $path"))
-          ClosingIterator.empty
-        case Some(bytes) =>
-          val inf = new java.util.zip.Inflater(true)
-          val rows = memberSpans(bytes).iterator.flatMap {
-            case (off, len) =>
-              memberRecord(bytes, off.toInt, len.toInt, inf).flatMap { r =>
-                val url = r.headers.getOrElse("warc-target-uri", "")
-                if (url.isEmpty) None
-                else if (r.warcType.equalsIgnoreCase("response")) {
-                  val host = hostOf(url)
-                  val id = docIdOf(url)
-                  Some((url, host, mimeOf(id), statusOf(id),
-                    payloadDigest(r.payload), path, off, len))
-                } else if (r.warcType.equalsIgnoreCase("revisit")) {
-                  // crawl-time dedup: the payload lives in an EARLIER
-                  // capture; the index row carries the convention the
-                  // public table uses — mime `warc/revisit`, digest =
-                  // the record's WARC-Payload-Digest header (the
-                  // ORIGINAL payload's digest, which is what lets
-                  // resolveRevisits find the capture that has the bytes)
-                  val digest = r.headers
-                    .getOrElse("warc-payload-digest", "")
-                    .stripPrefix("sha1:")
-                  val id = docIdOf(url)
-                  if (digest.isEmpty) None
-                  else Some((url, hostOf(url), "warc/revisit",
-                    statusOf(id), digest, path, off, len))
-                } else None
-              }.iterator
-          }
-          new ClosingIterator(rows, () => inf.end())
+    walk(spark, paths)
+      .select("url", "url_host_name", "revisit", "content_digest",
+        "warc_filename", "warc_record_offset", "warc_record_length")
+      .as[(String, String, Boolean, String, String, Long, Long)]
+      .map { case (url, host, revisit, digest, file, off, len) =>
+        val id = docIdOf(url)
+        (url, host, if (revisit) "warc/revisit" else mimeOf(id), statusOf(id),
+          digest, file, off, len)
       }
-    }.toDF("url", "url_host_name", "content_mime_type", "fetch_status",
-      "content_digest", "warc_filename", "warc_record_offset",
-      "warc_record_length")
+      .toDF(IndexColumns: _*)
   }
 
   /** Index built from each record's OWN HTTP envelope (status line +
@@ -638,49 +609,21 @@ object CcIndex {
     * write → `buildIndexFromRecords` → filter relationally → ranged
     * fetch. Revisit records keep the public-index convention (mime
     * `warc/revisit`, digest from the record's `WARC-Payload-Digest`
-    * header). One task per archive, same fail-soft walk as
-    * [[buildIndex]].
+    * header). A projection of the same walk as [[buildIndex]].
     */
   def buildIndexFromRecords(spark: SparkSession, paths: Seq[String])
-      : DataFrame = {
-    import spark.implicits._
-    val errors =
-      spark.sparkContext.longAccumulator("graft.ccindex.build_errors")
-    ArchiveTasks.perArchive[
-        (String, String, String, Int, String, String, Long, Long)](
-        spark, paths, errors, Long.MaxValue) { (path, conf, onCorrupt, _) =>
-      WatReader.fetchAllBytes(path, conf) match {
-        case None =>
-          onCorrupt(new java.io.IOException(s"fetch failed: $path"))
-          ClosingIterator.empty
-        case Some(bytes) =>
-          val inf = new java.util.zip.Inflater(true)
-          val rows = memberSpans(bytes).iterator.flatMap {
-            case (off, len) =>
-              memberRecord(bytes, off.toInt, len.toInt, inf).flatMap { r =>
-                val url = r.headers.getOrElse("warc-target-uri", "")
-                if (url.isEmpty) None
-                else if (r.warcType.equalsIgnoreCase("response")) {
-                  val (status, ct, _) = httpEnvelope(r.payload)
-                  Some((url, hostOf(url), ct, status,
-                    payloadDigest(r.payload), path, off, len))
-                } else if (r.warcType.equalsIgnoreCase("revisit")) {
-                  val digest = r.headers
-                    .getOrElse("warc-payload-digest", "")
-                    .stripPrefix("sha1:")
-                  val (status, _, _) = httpEnvelope(r.payload)
-                  if (digest.isEmpty) None
-                  else Some((url, hostOf(url), "warc/revisit",
-                    status, digest, path, off, len))
-                } else None
-              }.iterator
-          }
-          new ClosingIterator(rows, () => inf.end())
-      }
-    }.toDF("url", "url_host_name", "content_mime_type", "fetch_status",
-      "content_digest", "warc_filename", "warc_record_offset",
-      "warc_record_length")
-  }
+      : DataFrame =
+    walk(spark, paths).select(IndexColumns.map(col): _*)
+
+  private val IndexColumns = Seq("url", "url_host_name",
+    "content_mime_type", "fetch_status", "content_digest", "warc_filename",
+    "warc_record_offset", "warc_record_length")
+
+  /** The [[CcIndexSource]] scan: one task per archive, its failures
+    * counted in the scan's `corruptArchives` metric.
+    */
+  private def walk(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.format(classOf[CcIndexSource].getName).load(paths: _*)
 
   /** Minimal HTTP response-envelope parse: `(status, content type,
     * body offset)`. Status is the integer after `HTTP/x.y ` (0 when
@@ -797,5 +740,64 @@ object CcIndex {
   private[wat] def docIdOf(url: String): Long = {
     val m = "doc(\\d+)\\.[a-z0-9]+$".r.findFirstMatchIn(url)
     m.map(_.group(1).toLong).getOrElse(-1L)
+  }
+}
+
+/** The cc-index walk as a format of the shared archive scan: a whole-file
+  * read and [[CcIndex.memberSpans]] walk per WARC, one row per response
+  * or revisit member with a target URI. The HTTP envelope (status, mime)
+  * is parsed only when the projection keeps it; a revisit's mime is
+  * `warc/revisit` and its digest the `WARC-Payload-Digest` header (the
+  * ORIGINAL payload's digest, which `resolveRevisits` joins on).
+  */
+class CcIndexSource extends ArchiveDataSource(CcIndexSource)
+
+object CcIndexSource extends ArchiveFormat {
+  val schema: StructType = StructType.fromDDL(
+    "warc_filename string, url string, url_host_name string, " +
+    "content_mime_type string, fetch_status int not null, " +
+    "content_digest string, warc_record_offset bigint not null, " +
+    "warc_record_length bigint not null, revisit boolean not null")
+
+  def decode(path: String, conf: Configuration, required: Set[String],
+      onCorrupt: Exception => Unit,
+      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+    def u(s: String) = UTF8String.fromString(s)
+    val wantEnvelope =
+      required("content_mime_type") || required("fetch_status")
+    WatReader.fetchAllBytes(path, conf) match {
+      case None =>
+        onCorrupt(new java.io.IOException(s"fetch failed: $path"))
+        ClosingIterator.empty
+      case Some(bytes) =>
+        val p = u(path)
+        val inf = new java.util.zip.Inflater(true)
+        val rows = CcIndex.memberSpans(bytes).iterator.flatMap {
+          case (off, len) =>
+            CcIndex.memberRecord(bytes, off.toInt, len.toInt, inf).flatMap { r =>
+              val url = r.headers.getOrElse("warc-target-uri", "")
+              val revisit = r.warcType.equalsIgnoreCase("revisit")
+              val digest =
+                if (r.warcType.equalsIgnoreCase("response"))
+                  CcIndex.payloadDigest(r.payload)
+                else if (revisit)
+                  r.headers.getOrElse("warc-payload-digest", "")
+                    .stripPrefix("sha1:")
+                else ""
+              // a response digest is never empty: this drops URI-less
+              // records, other record types and digestless revisits
+              if (url.isEmpty || digest.isEmpty) None
+              else {
+                val (status, mime, _) =
+                  if (wantEnvelope) CcIndex.httpEnvelope(r.payload)
+                  else (0, "", 0)
+                Some(Array[Any](p, u(url), u(CcIndex.hostOf(url)),
+                  u(if (revisit) "warc/revisit" else mime), status,
+                  u(digest), off, len, revisit))
+              }
+            }.iterator
+        }
+        new ClosingIterator(rows, () => inf.end())
+    }
   }
 }

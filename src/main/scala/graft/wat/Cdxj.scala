@@ -1,6 +1,13 @@
 package graft.wat
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.io.{BufferedReader, ByteArrayInputStream, IOException, InputStreamReader}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.{ArchiveDataSource, ArchiveFormat}
 
 /** CDXJ — the TEXT form of the web-archive index (pywb's CDXJ spec;
   * CC publishes the same records as `cc-index/collections/.../indexes/
@@ -77,41 +84,53 @@ object Cdxj {
     * ([[CcIndex.fetchHtmlPages]]-ready: `warc_filename` /
     * `warc_record_offset` / `warc_record_length` plus the relational
     * filter columns). Line-level error tolerance via [[parseLine]];
-    * shard-level read failures count into `readErrors`.
+    * shard-level read failures (a failed fetch, a cut gzip stream) end
+    * the shard, keep its lines read so far and count in the scan's
+    * `corruptArchives` metric.
     */
   def indexFrame(spark: SparkSession, paths: Seq[String]): DataFrame =
-    indexFrame(spark, paths,
-      spark.sparkContext.longAccumulator("graft.cdxj.read_errors"))
+    shardScan(spark, classOf[CdxjSource], paths)
 
-  def indexFrame(spark: SparkSession, paths: Seq[String],
-      readErrors: org.apache.spark.util.LongAccumulator): DataFrame = {
-    import spark.implicits._
-    ArchiveTasks.perArchive[(String, String, String, String, Int,
-        String, String, Long, Long, String, String)](
-        spark, paths, readErrors, Long.MaxValue) { (path, conf, onCorrupt, _) =>
-      WatReader.fetchAllBytes(path, conf) match {
-        case None =>
-          onCorrupt(new java.io.IOException(s"fetch failed: $path"))
-          ClosingIterator.empty
-        case Some(bytes) =>
-          val in = WatReader.decompressed(
-            new java.io.ByteArrayInputStream(bytes))
-          val reader = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in, "UTF-8"), 1 << 16)
-          val lines = Iterator.continually(reader.readLine())
-            .takeWhile(_ != null)
-          new ClosingIterator(
-            lines.flatMap(l => parseLine(l).iterator).map(r =>
-              (r.surtKey, r.timestamp, r.url, r.mime, r.status,
-                r.digest, r.filename, r.offset, r.length,
-                r.languages, r.encoding)),
-            () => reader.close())
-      }
-    }.toDF("url_surtkey", "fetch_time", "url", "content_mime_type",
-      "fetch_status", "content_digest", "warc_filename",
-      "warc_record_offset", "warc_record_length",
-      "content_languages", "content_charset")
-  }
+  private def shardScan(spark: SparkSession, provider: Class[_],
+      paths: Seq[String]): DataFrame =
+    spark.read.format(provider.getName).load(paths: _*).drop("shard_path")
+
+  /** The (shard_path, index columns…) schema both text-index formats
+    * scan into; everything after the path is the public frame.
+    */
+  private[wat] val ShardSchema: StructType = StructType.fromDDL(
+    "shard_path string, url_surtkey string, fetch_time string, " +
+    "url string, content_mime_type string, fetch_status int not null, " +
+    "content_digest string, warc_filename string, " +
+    "warc_record_offset bigint not null, " +
+    "warc_record_length bigint not null, content_languages string, " +
+    "content_charset string")
+
+  /** The lines of one index shard (gzip, zstd or plain text), fetched
+    * whole. A failed fetch or a cut compressed stream calls `onCorrupt`
+    * once and ends the shard; the lines read before it are kept.
+    */
+  private[wat] def shardLines(path: String, conf: Configuration,
+      onCorrupt: Exception => Unit): ClosingIterator[String] =
+    WatReader.fetchAllBytes(path, conf) match {
+      case None =>
+        onCorrupt(new IOException(s"fetch failed: $path"))
+        ClosingIterator.empty
+      case Some(bytes) =>
+        // opened on the first read, so a cut gzip header ends the shard
+        // through the same catch as a cut body
+        var reader: BufferedReader = null
+        val lines = Iterator.continually {
+          try {
+            if (reader == null)
+              reader = new BufferedReader(new InputStreamReader(
+                WatReader.decompressed(new ByteArrayInputStream(bytes)),
+                "UTF-8"), 1 << 16)
+            reader.readLine()
+          } catch { case e: IOException => onCorrupt(e); null }
+        }.takeWhile(_ != null)
+        new ClosingIterator(lines, () => if (reader != null) reader.close())
+    }
 
   // ------------------------------------------------------------------
   // Legacy space-separated CDX (the pre-CDXJ text form: OpenWayback /
@@ -190,7 +209,8 @@ object Cdxj {
 
   /** Legacy CDX shards → the same cc-index frame shape as
     * [[indexFrame]], ranged-fetch-ready. Header-driven field order
-    * (headerless files assume CDX-11); line-level fail-soft.
+    * (headerless files assume CDX-11); line-level fail-soft, shard-level
+    * failures as in [[indexFrame]].
     *
     * CDX-9 files carry no record length — those rows are filled with
     * the NEXT capture's offset within the same archive (the pywb
@@ -205,63 +225,27 @@ object Cdxj {
     */
   def legacyIndexFrame(spark: SparkSession, paths: Seq[String])
       : DataFrame =
-    legacyIndexFrame(spark, paths,
-      spark.sparkContext.longAccumulator("graft.cdx.read_errors"))
+    shardScan(spark, classOf[CdxSource], paths)
 
-  def legacyIndexFrame(spark: SparkSession, paths: Seq[String],
-      readErrors: org.apache.spark.util.LongAccumulator): DataFrame = {
-    import spark.implicits._
-    def tup(r: CdxjRow): (String, String, String, String, Int,
-        String, String, Long, Long, String, String) =
-      (r.surtKey, r.timestamp, r.url, r.mime, r.status, r.digest,
-        r.filename, r.offset, r.length, r.languages, r.encoding)
-    ArchiveTasks.perArchive[(String, String, String, String, Int,
-        String, String, Long, Long, String, String)](
-        spark, paths, readErrors, Long.MaxValue) { (path, conf, onCorrupt, _) =>
-      WatReader.fetchAllBytes(path, conf) match {
-        case None =>
-          onCorrupt(new java.io.IOException(s"fetch failed: $path"))
-          ClosingIterator.empty
-        case Some(bytes) =>
-          val in = WatReader.decompressed(
-            new java.io.ByteArrayInputStream(bytes))
-          val reader = new java.io.BufferedReader(
-            new java.io.InputStreamReader(in, "UTF-8"), 1 << 16)
-          val firstLine = reader.readLine()
-          val (fields, firstData) = parseCdxHeader(firstLine) match {
-            case Some(f) => (f, Iterator.empty[String])
-            case None =>
-              (DefaultCdxFields,
-                if (firstLine == null) Iterator.empty[String]
-                else Iterator.single(firstLine))
-          }
-          val lines = firstData ++ Iterator
-            .continually(reader.readLine()).takeWhile(_ != null)
-          val rows = lines.flatMap(l =>
-            parseCdxLine(l, fields).iterator)
-          if (fields.contains("S"))
-            new ClosingIterator(rows.map(tup), () => reader.close())
-          else {
-            // CDX-9 next-offset fill: materialize, group per archive,
-            // sort by offset, subtract
-            val all = try rows.toVector finally reader.close()
-            val filled = all.groupBy(_.filename).valuesIterator
-              .flatMap { g =>
-                val s = g.sortBy(_.offset)
-                s.indices.iterator.map { i =>
-                  val r = s(i)
-                  if (i + 1 < s.length)
-                    r.copy(length = s(i + 1).offset - r.offset)
-                  else r // last per archive: unknown, stays -1
-                }
-              }
-            new ClosingIterator(filled.map(tup), () => ())
-          }
+  /** Header-driven legacy CDX rows of one shard's lines. */
+  private[wat] def legacyRows(lines: Iterator[String]): Iterator[CdxjRow] = {
+    val first = if (lines.hasNext) Some(lines.next()) else None
+    val (fields, head) = first.flatMap(parseCdxHeader) match {
+      case Some(f) => (f, Iterator.empty)
+      case None    => (DefaultCdxFields, first.iterator)
+    }
+    val rows = (head ++ lines).flatMap(l => parseCdxLine(l, fields).iterator)
+    // CDX-9 next-offset fill: materialize, group per archive, sort by
+    // offset, subtract
+    if (fields.contains("S")) rows
+    else rows.toVector.groupBy(_.filename).valuesIterator.flatMap { g =>
+      val s = g.sortBy(_.offset)
+      s.indices.iterator.map { i =>
+        val r = s(i)
+        if (i + 1 < s.length) r.copy(length = s(i + 1).offset - r.offset)
+        else r // last per archive: unknown, stays -1
       }
-    }.toDF("url_surtkey", "fetch_time", "url", "content_mime_type",
-      "fetch_status", "content_digest", "warc_filename",
-      "warc_record_offset", "warc_record_length",
-      "content_languages", "content_charset")
+    }
   }
 
   /** Patch the CDX-9 `-1` tail lengths: the last capture per archive
@@ -472,3 +456,31 @@ object Cdxj {
       s""""filename": "${esc(filename)}"}"""
   }
 }
+
+/** The text-index shard formats of the shared archive scan: one row of
+  * [[Cdxj.ShardSchema]] per accepted line of [[Cdxj.shardLines]] —
+  * CDXJ ([[Cdxj.parseLine]]) or legacy CDX ([[Cdxj.legacyRows]]).
+  */
+sealed abstract class IndexShardFormat(
+    rows: Iterator[String] => Iterator[Cdxj.CdxjRow]) extends ArchiveFormat {
+  def schema: StructType = Cdxj.ShardSchema
+
+  def decode(path: String, conf: Configuration, required: Set[String],
+      onCorrupt: Exception => Unit,
+      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+    def u(s: String) = UTF8String.fromString(s)
+    val p = u(path)
+    val lines = Cdxj.shardLines(path, conf, onCorrupt)
+    new ClosingIterator(rows(lines).map(r => Array[Any](p, u(r.surtKey),
+      u(r.timestamp), u(r.url), u(r.mime), r.status, u(r.digest),
+      u(r.filename), r.offset, r.length, u(r.languages), u(r.encoding))),
+      () => lines.close())
+  }
+}
+
+class CdxjSource extends ArchiveDataSource(CdxjSource)
+object CdxjSource
+    extends IndexShardFormat(_.flatMap(l => Cdxj.parseLine(l).iterator))
+
+class CdxSource extends ArchiveDataSource(CdxSource)
+object CdxSource extends IndexShardFormat(Cdxj.legacyRows)

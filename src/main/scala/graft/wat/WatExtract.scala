@@ -161,7 +161,9 @@ object WatExtract {
       docType: String, maxFilesPerTrigger: Int = 0,
       fetchParallelism: Int = 0): Dataset[DocLink] = {
     import spark.implicits._
-    val conf = ArchiveTasks.broadcastConf(spark)
+    // the session Hadoop conf, so executors keep every spark.hadoop.*
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util
+      .SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     val reader = spark.readStream.format("text")
     val withTrigger =
       if (maxFilesPerTrigger > 0)
@@ -175,8 +177,13 @@ object WatExtract {
       .filter(p => p.nonEmpty && !p.startsWith("#"))
       .repartition(par)
     val payloads = paths
-      .flatMap(p => ArchiveTasks.closeAtTaskEnd(
-        WatReader.metadataPayloads(p, conf.value.value)))
+      .flatMap { p =>
+        val it = WatReader.metadataPayloads(p, conf.value.value)
+        // a limit/kill ends the task without exhausting the iterator
+        Option(org.apache.spark.TaskContext.get())
+          .foreach(_.addTaskCompletionListener[Unit](_ => it.close()))
+        it
+      }
       .toDF("payload")
     extract(payloads, docType)
   }

@@ -1,13 +1,15 @@
 package graft.sources
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.wat.{WarcExtract, WatFixture}
+import graft.wat.{CcIndex, Cdxj, WarcExtract, WatFixture, WetText}
 
 /** DSv2 `warc` source: schema/rows, planning-time path pruning,
-  * column pruning (html decode skipped), max_tasks batching, repeated
-  * and empty listings, and the size of what each task carries.
+  * column pruning (html decode skipped), max_tasks batching; for every
+  * archive format, repeated and empty listings and the size of what
+  * each task carries.
   */
 class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
 
@@ -64,11 +66,41 @@ class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
         s"$docType: empty extraction")
   }
 
+  /** Every archive format's public reader over one listing, with one
+    * fixture archive each: wat and warc by short name, the rest through
+    * their entry points.
+    */
+  private def readers: Seq[(String, Seq[String] => DataFrame, String)] = {
+    val sf = "/root/testdata/sf0.001"
+    Seq(
+      ("wat", (ps: Seq[String]) => spark.read.format("wat").load(ps: _*),
+        WatFixture.ensureFleet().head),
+      ("warc", (ps: Seq[String]) => spark.read.format("warc").load(ps: _*),
+        warcs.head),
+      ("wet", WetText.docs(spark, _: Seq[String]),
+        WatFixture.ensureDocWets(spark, sf).head),
+      ("cdxj", Cdxj.indexFrame(spark, _: Seq[String]),
+        WatFixture.ensureDocCdxj(spark, sf)._1.head),
+      ("cdx", Cdxj.legacyIndexFrame(spark, _: Seq[String]),
+        WatFixture.ensureDocCdxLegacy(spark, sf)._1.head),
+      ("ccindex", CcIndex.buildIndexFromRecords(spark, _: Seq[String]),
+        warcs.head))
+  }
+
   test("a path listed twice is read twice; an empty listing reads empty") {
     val twice = spark.read.format("warc").load(warcs.head, warcs.head)
     assert(twice.rdd.getNumPartitions == 2)
     assert(twice.count() == 2L * 25)
     assert(WarcExtract.fromPaths(spark, Nil, "image_only").count() == 0)
+    for ((fmt, read, path) <- readers) {
+      val once = read(Seq(path)).count()
+      val df = read(Seq(path, path))
+      assert(df.rdd.getNumPartitions == 2, fmt)
+      assert(once > 0 && df.count() == 2 * once, fmt)
+      val empty = read(Nil)
+      assert(empty.rdd.getNumPartitions == 0, fmt)
+      assert(empty.count() == 0, fmt)
+    }
   }
 
   test("reader factories stay small: the Hadoop conf rides in one " +
@@ -81,9 +113,8 @@ class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
       out.close()
       buf.size()
     }
-    val wat = WatFixture.ensureFleet().head
-    for ((fmt, path) <- Seq("wat" -> wat, "warc" -> warcs.head)) {
-      val scan = spark.read.format(fmt).load(path).queryExecution
+    for ((fmt, read, path) <- readers) {
+      val scan = read(Seq(path)).queryExecution
         .executedPlan.collectFirst { case b: BatchScanExec => b.scan }.get
       val batch = size(scan.toBatch.createReaderFactory())
       assert(batch < 8192, s"$fmt batch reader factory: $batch bytes")

@@ -511,4 +511,15 @@ class CcIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.getAs[String]("warc_filename")).distinct.length ==
       warcs.length)
   }
+
+  test("buildIndexFromRecords counts a failed fetch; other archives " +
+      "survive") {
+    val (_, warcs) =
+      WatFixture.ensureDocCcIndex(spark, "/root/testdata/sf0.001")
+    val missing = warcs.head + ".missing"
+    val alone = CcIndex.buildIndexFromRecords(spark, warcs.take(1)).count()
+    val idx = CcIndex.buildIndexFromRecords(spark, Seq(warcs.head, missing))
+    assert(alone > 0 && idx.collect().length == alone)
+    assert(SparkTestBase.corruptArchives(idx) == 1L)
+  }
 }

@@ -381,4 +381,45 @@ class CdxjSpec extends AnyFunSuite with SparkTestBase {
       .select("url_surtkey").collect().map(_.getString(0))
     assert(keys.nonEmpty && keys.sameElements(keys.sorted))
   }
+
+  test("a cut gzip shard ends at the cut: whole shards survive, the " +
+      "cut one keeps its prefix and counts once") {
+    val dir = java.nio.file.Files.createTempDirectory("cdxj-cut")
+    def shard(name: String, seed: Int): java.nio.file.Path = {
+      val rnd = new scala.util.Random(seed)
+      val bos = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      for (i <- 0 until 4000)
+        gz.write((Cdxj.formatLine(s"https://e$seed.test/p$i", "20240101000000",
+          "text/html", 200, rnd.alphanumeric.take(32).mkString,
+          s"w$seed.warc.gz", i * 1000L, 900L) + "\n").getBytes("UTF-8"))
+      gz.close()
+      java.nio.file.Files.write(dir.resolve(name), bos.toByteArray)
+    }
+    val whole = shard("whole.cdxj.gz", 1)
+    val full = shard("full.cdxj.gz", 2)
+    val bytes = java.nio.file.Files.readAllBytes(full)
+    val cut = java.nio.file.Files.write(dir.resolve("cut.cdxj.gz"),
+      bytes.take(bytes.length / 2))
+    val frame = Cdxj.indexFrame(spark, Seq(whole.toString, cut.toString))
+    val files = frame.collect().map(_.getAs[String]("warc_filename"))
+    assert(files.count(_ == "w1.warc.gz") == 4000)
+    val kept = files.count(_ == "w2.warc.gz")
+    assert(kept > 0 && kept < 4000, s"$kept rows of the cut shard")
+    assert(SparkTestBase.corruptArchives(frame) == 1L)
+    // the legacy reader shares the shard-line reader: same fault model
+    val cdxLines = (0 until 4000).map(i => Cdxj.formatCdxLine(
+      s"https://e.test/p$i", "20240101000000", "text/html", 200,
+      s"D$i", "w.warc.gz", i * 1000L, 900L))
+    val bos = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    gz.write(cdxLines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    gz.close()
+    val cdxCut = java.nio.file.Files.write(dir.resolve("cut.cdx.gz"),
+      bos.toByteArray.take(bos.size / 2))
+    val legacy = Cdxj.legacyIndexFrame(spark, Seq(cdxCut.toString))
+    val n = legacy.collect().length
+    assert(n > 0 && n < 4000, s"$n rows of the cut legacy shard")
+    assert(SparkTestBase.corruptArchives(legacy) == 1L)
+  }
 }

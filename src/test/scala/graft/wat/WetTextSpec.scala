@@ -70,6 +70,13 @@ class WetTextSpec extends AnyFunSuite with SparkTestBase {
     val docs = try it.toVector finally it.close()
     assert(docs.map(_.page_url) == Vector("https://e.test/ok"))
     assert(corrupt == 1)
+    // the Spark stage keeps the same records and counts the cut file
+    // once in its scan's corruptArchives metric
+    val frame = WetText.docs(spark, Seq(whole, f.getAbsolutePath))
+    val urls = frame.collect().map(_.getAs[String]("page_url"))
+    assert(urls.sorted.toSeq == Seq("https://e.test/cut",
+      "https://e.test/ok", "https://e.test/ok"))
+    assert(SparkTestBase.corruptArchives(frame) == 1L)
   }
 
   test("docs stage: one partition per archive, doc-WET fixture round-trip") {
@@ -89,6 +96,21 @@ class WetTextSpec extends AnyFunSuite with SparkTestBase {
       .as[(Long, String)].collect()
       .map { case (id, t) => s"https://docs.test/doc$id.html" -> t }.toMap
     assert(got == want)
+  }
+
+  test("a cc_filename predicate selects exactly that file's rows") {
+    // cc_filename is the basename; the scan's path column is the full
+    // path, so the predicate must not be decided against the path
+    val paths = WatFixture.ensureDocWets(spark, "/root/testdata/sf0.001",
+      shards = 3)
+    val name = new java.io.File(paths(1)).getName
+    val all = WetText.docs(spark, paths)
+    val filtered = all.where(col("cc_filename") === name)
+    val got = filtered.collect().map(_.toSeq).sortBy(_.toString)
+    val want = all.collect().filter(_.getString(0) == name).map(_.toSeq)
+      .sortBy(_.toString)
+    assert(got.nonEmpty && got.sameElements(want))
+    assert(got.length < all.count())
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)
