@@ -50,10 +50,10 @@ import org.apache.spark.storage.StorageLevel
   *    output, never on the raw pairs.
   *  - The driver budget bounds what one action may move to the driver
   *    (1M id pairs ≈ 16 MB, far under `spark.driver.maxResultSize`).
-  *    On 4 cores CcScaleProbe measured the driver finish ahead of the
-  *    loop at every size it ran, up to 8M contracted rows (SCALING.md
-  *    "Round 23"), so the budget is set by driver memory, not by a
-  *    speed crossover.
+  *    On 4 cores the `cc` scale scenario measured the driver finish
+  *    ahead of the loop at every size it ran, up to 8M contracted rows
+  *    (SCALING.md "Round 23"), so the budget is set by driver memory,
+  *    not by a speed crossover.
   *  - Per loop round: one equi-join (edges ⋈ labels, hash shuffle on
   *    node) + one min-aggregation (map-side combinable). Both linear in
   *    the contracted |E|.
@@ -167,7 +167,7 @@ object Clustering {
     * at 1M rows, against 0.5 s here), and on the `floors` benchmark's
     * small graphs it was no faster (SCALING.md "Round 23").
     */
-  private[graft] def driverFrame(spark: SparkSession,
+  private def driverFrame(spark: SparkSession,
       labels: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
     val sc = spark.sparkContext
@@ -286,9 +286,9 @@ object Clustering {
     val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     // persist caches DATA but every task still serializes the full
     // nested RDD lineage; past ~60 rounds that chain overflows the task
-    // deserializer's stack (StackOverflowError — surfaced by
-    // CcScaleProbe's long-path sweep, invisible on ≤6-round near-dup
-    // graphs). localCheckpoint truncates the lineage at this RDD once
+    // deserializer's stack (StackOverflowError — surfaced by the
+    // `cc` scale scenario's long-path sweep, invisible on ≤6-round
+    // near-dup graphs). localCheckpoint truncates the lineage at this RDD once
     // the round's own action materializes it, bounding serialized task
     // depth to one round. Tradeoff (the standard iterative-graph
     // posture): an executor loss can no longer recompute earlier

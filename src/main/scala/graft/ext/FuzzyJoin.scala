@@ -31,12 +31,12 @@ import org.apache.spark.sql.functions._
   *  - candidates must share a prefix gram BY VALUE AND POSITION
   *    (|Δpos| ≤ d) — the positional constraint value-only blocking
   *    discards. (Ed-Join's third filter, q-gram COUNTING, was
-  *    implemented, proven lossless, priced, and measured OUT: see
-  *    [[countFilterCond]].) Measured on sf0.1 customer (15k uniform-format names,
-  *    109-gram alphabet): value-only blocking yields 8.5M candidate
-  *    pairs, positional 6.0M for 262.5k true pairs. The honest scale
-  *    statement (probed by tools/FuzzyScaleProbe, two decades in
-  *    SCALING.md): on a BOUNDED-alphabet uniform-format corpus the
+  *    implemented, proven lossless, priced, and measured OUT: SCALING.md
+  *    "Round 13 addendum".) Measured on sf0.1 customer (15k
+  *    uniform-format names, 109-gram alphabet): value-only blocking
+  *    yields 8.5M candidate pairs, positional 6.0M for 262.5k true
+  *    pairs. The honest scale statement (SCALING.md, the fuzzy
+  *    adversary's decades): on a BOUNDED-alphabet uniform-format corpus the
   *    signature space saturates and candidates grow ~n²·c with
   *    c ≈ (avg prefix size)²/|gram×posBucket space| — an inherent
   *    floor of ANY lossless signature scheme when strings genuinely
@@ -75,24 +75,8 @@ import org.apache.spark.sql.functions._
   */
 object FuzzyJoin {
 
-  /** All (id1 < id2) pairs of `df` rows whose `strCol` values are
-    * within levenshtein distance `d`, found via positional prefix
-    * blocking and verified exactly. Output: (id1, id2, str1, str2,
-    * dist).
-    *
-    * The filter's guarantee needs a surviving gram OCCURRENCE: a
-    * string with len − q + 1 ≤ q·d occurrences can lose ALL of them to
-    * d edits and share no gram with a true match ("ab"→"ax" at q=2,
-    * d=1 shares nothing). So strings of length ≤ q(d+1)−1 bypass the
-    * filter through an exact short-string path: their partners all
-    * have length ≤ q(d+1)−1+d, a length-bounded population that
-    * equi-joins on an exploded length key (hash join, never a nested
-    * loop; at corpus scale names/URLs/titles live far above this
-    * cutoff — the short set is census noise; FuzzyJoinSpec still
-    * proves the routing).
-    */
   /** Normalized (id, s, len) projection of a caller frame. */
-  private def normalize(df: DataFrame, idCol: String,
+  private[graft] def normalize(df: DataFrame, idCol: String,
       strCol: String): DataFrame =
     df.select(col(idCol).as("id"), col(strCol).as("s"))
       .withColumn("len", length(col("s")))
@@ -156,55 +140,16 @@ object FuzzyJoin {
       .select(col("gram"), col("pos"), col("id"), col("s"), col("len"))
   }
 
-  /** Count filter (the q-gram counting bound of Gravano et al., VLDB
-    * 2001, applied in Ed-Join as the d ≥ 2 refinement): strings within
-    * edit distance d share at least max(|s|,|t|) − q + 1 − q·d
-    * positional q-grams (value-equal within ±d positions) — each edit
-    * destroys at most q gram occurrences and shifts survivors ≤ d. The
-    * expression counts, for each gram position of s, whether ANY
-    * ±d-window position of s2 carries the same gram; that per-position
-    * existence count upper-bounds the true 1-1 matching size, so
-    * requiring it to reach the bound is LOSSLESS. Vacuous (bound ≤ 0)
-    * for short strings — the OR short-circuits before the scan runs,
-    * which also keeps the inner sequence() ranges valid (bound > 0
-    * plus the candidate length filter |len−len2| ≤ d imply both
-    * strings carry grams and the j-window is non-empty).
-    *
-    * MEASURED OUT of the execution path (kept for the probes and the
-    * record): Ed-Join's count-filter trade assumes precomputed gram
-    * sets and an expensive unbanded verify. In this dataflow the grams
-    * would be recomputed per candidate through interpreted
-    * higher-order functions while the verify is a CODEGEN'D BANDED
-    * levenshtein — on the same 74.1M cached d=2 adversarial
-    * candidates the filter costs 59.8 s and kills zero (repeated
-    * digit-grams saturate the per-position existence count exactly
-    * where candidates are dense), the banded verify costs 6.4 s and
-    * resolves everything (FuzzyScaleProbe adv-d2). On natural name
-    * corpora it does prune (402→190 of 24 true, names-d2) but the
-    * verify there is already sub-second. A guard that costs 9× the
-    * thing it guards is not a filter; the probes keep the evidence.
-    * `private[graft]` so FuzzyScaleProbe can price exactly this
-    * predicate on the adversarial corpora.
-    */
-  private[graft] def countFilterCond(d: Int, q: Int)
-      : org.apache.spark.sql.Column = {
-    val bound = s"(greatest(length(s), length(s2)) - ${q - 1} - ${q * d})"
-    val cnt =
-      s"size(filter(sequence(1, length(s) - ${q - 1}), i -> " +
-        s"exists(sequence(greatest(1, i - $d), " +
-        s"least(length(s2) - ${q - 1}, i + $d)), j -> " +
-        s"substring(s, i, $q) = substring(s2, j, $q))))"
-    expr(s"$bound <= 0 OR $cnt >= $bound")
-  }
-
   /** Exact verification of a (id, id2, s, s2) candidate frame:
     * distinct, then the THRESHOLDED levenshtein — the 3-arg form
     * computes only the 2d+1-wide DP band and aborts to −1 past the
     * threshold, O(d·len) per pair instead of the full O(len²) table,
     * with identical distances for every survivor. No intermediate
     * filter sits in front of it: the banded DP IS the cheapest exact
-    * predicate available per pair (see [[countFilterCond]]'s header
-    * for the measurement that removed the q-gram count filter).
+    * predicate available per pair. Ed-Join's q-gram count filter was
+    * measured out: on 74.1M cached d=2 adversarial candidates it cost
+    * 59.8 s and pruned none, against 6.4 s for this verify (SCALING.md
+    * "Round 13 addendum").
     */
   private def verifyPairs(cands: DataFrame, d: Int, q: Int): DataFrame = {
     cands.distinct()
@@ -215,15 +160,17 @@ object FuzzyJoin {
         col("dist").cast("long").as("dist"))
   }
 
-  def selfPairs(df: DataFrame, idCol: String, strCol: String,
-      d: Int, q: Int = 2): DataFrame = {
-    require(d >= 1 && q >= 1, "d and q must be >= 1")
-    val parallelism = df.sparkSession.conf
+  /** The blocked candidate stage of [[selfPairs]]: every
+    * (id, id2, s, s2) occurrence (id < id2) whose shrunk prefixes share
+    * a gram within ±d positions, lengths within d — what the blocking
+    * hands to the verifier, before dedup. `rows` is [[normalize]]'s
+    * (id, s, len) shape; strings at or below the short-path cutoff are
+    * not in it.
+    */
+  private[graft] def selfCandidates(rows: DataFrame, d: Int,
+      q: Int): DataFrame = {
+    val parallelism = rows.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
-    val rows = normalize(df, idCol, strCol)
-    // below this, d edits can destroy every gram occurrence
-    val shortCut = q * (d + 1) - 1
-
     val grams = gramOccurrences(rows, d, q)
     // corpus gram frequencies: ≤ charset^q rows — broadcast always
     val freq = grams.groupBy("gram").agg(count(lit(1)).as("freq"))
@@ -252,11 +199,36 @@ object FuzzyJoin {
     val b = prefix.select(col("gram"), expr(s"pos div $bw").as("bk"),
       col("pos").as("pos2"), col("id").as("id2"),
       col("s").as("s2"), col("len").as("len2"))
-    val gramPairs = a.join(b.hint("shuffle_hash"), Seq("gram", "bk"))
+    a.join(b.hint("shuffle_hash"), Seq("gram", "bk"))
       .where(col("id") < col("id2") &&
         abs(col("pos") - col("pos2")) <= d &&
         abs(col("len") - col("len2")) <= d)
       .select(col("id"), col("id2"), col("s"), col("s2"))
+  }
+
+  /** All (id1 < id2) pairs of `df` rows whose `strCol` values are
+    * within levenshtein distance `d`, found via positional prefix
+    * blocking and verified exactly. Output: (id1, id2, str1, str2,
+    * dist).
+    *
+    * The filter's guarantee needs a surviving gram OCCURRENCE: a
+    * string with len − q + 1 ≤ q·d occurrences can lose ALL of them to
+    * d edits and share no gram with a true match ("ab"→"ax" at q=2,
+    * d=1 shares nothing). So strings of length ≤ q(d+1)−1 bypass the
+    * filter through an exact short-string path: their partners all
+    * have length ≤ q(d+1)−1+d, a length-bounded population that
+    * equi-joins on an exploded length key (hash join, never a nested
+    * loop; at corpus scale names/URLs/titles live far above this
+    * cutoff — the short set is census noise; FuzzyJoinSpec still
+    * proves the routing).
+    */
+  def selfPairs(df: DataFrame, idCol: String, strCol: String,
+      d: Int, q: Int = 2): DataFrame = {
+    require(d >= 1 && q >= 1, "d and q must be >= 1")
+    val rows = normalize(df, idCol, strCol)
+    // below this, d edits can destroy every gram occurrence
+    val shortCut = q * (d + 1) - 1
+    val gramPairs = selfCandidates(rows, d, q)
 
     // short-string path: len ≤ q(d+1)−1 strings can evade the gram
     // filter entirely; their partners all live within the length band

@@ -42,7 +42,7 @@ object Politeness {
     // comment). With an expensive upstream (a robots gate's join +
     // per-row matching at frontier scale) that second pass re-runs the
     // gate; persistGated swaps it for one cache write + one cached
-    // read. Probe-measured (PolitenessScaleProbe, REAL robots-gate
+    // read. Probe-measured (`politeness` scale scenario, REAL robots-gate
     // upstream, 1M/4M/16M rows): recompute wins at every decade
     // (persist reads 0.64-0.91x) — the gate's map-side re-run is
     // cheaper than caching the frontier. So recompute is the default;

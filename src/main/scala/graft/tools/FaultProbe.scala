@@ -4,8 +4,6 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, SparkListenerTaskEnd}
-
 /** Fault-injection probe: the resilience story, EXERCISED instead of
   * configured. The reference survives flaky infrastructure via retry
   * (fetch retry ×10, `spark.task.maxFailures` 10 —
@@ -30,9 +28,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, 
   * Exit code 0 only if every probed query survives hash-identical.
   */
 object FaultProbe {
-
-  @volatile private var failedTasks = 0
-  @volatile private var removedExecutors = 0
 
   /** Executor JVMs are children of this (driver) process in
     * local-cluster mode — the in-process standalone workers fork
@@ -66,12 +61,7 @@ object FaultProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.SessionBuilder.forMaster("local-cluster[4,8,4096]")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.reason != org.apache.spark.Success) failedTasks += 1
-      override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit =
-        removedExecutors += 1
-    })
+    val trace = graft.obs.QueryTrace.attach(spark)
 
     // multi-stage, several-second queries whose plans span shuffles in
     // both directions (so the lost executor's map output matters):
@@ -82,7 +72,7 @@ object FaultProbe {
       val fn = graft.SparkEntry.queries(name)
       val (cleanRows, cleanHash) = hashOf(fn(spark, sfDir))
 
-      failedTasks = 0; removedExecutors = 0
+      trace.reset()
       val killer = new Thread(() => {
         // wait until tasks of THIS run are actually on executors, then
         // SIGKILL one executor JVM (taking its shuffle files with it)
@@ -110,7 +100,9 @@ object FaultProbe {
       val (faultRows, faultHash) = hashOf(fn(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
       killer.join(1000)
-
+      graft.obs.QueryTrace.settle()
+      val failedTasks = trace.counters.failedTasks
+      val removedExecutors = trace.counters.executorsRemoved
       val injected = failedTasks > 0 || removedExecutors > 0
       val same = faultHash == cleanHash && faultRows == cleanRows
       println(f"[fault-probe] $name rows=$faultRows/$cleanRows " +

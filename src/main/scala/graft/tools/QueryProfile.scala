@@ -1,9 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-
-import scala.collection.mutable
-
 /** Per-stage empirical profiler for a named query (optimization guide
   * §1.1: find WHERE the time goes before touching anything). Runs the
   * named queries once at SPARK_GRAFT_WARM_DIR (codegen warmup), then
@@ -17,10 +13,6 @@ import scala.collection.mutable
   */
 object QueryProfile {
 
-  private final case class StageRow(jobId: Int, stageId: Int, name: String,
-      numTasks: Int, wallMs: Long, runMs: Long, cpuMs: Long,
-      shReadMB: Double, shWriteMB: Double)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
@@ -29,27 +21,7 @@ object QueryProfile {
     val spark = graft.SessionBuilder.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
-    val stageToJob = mutable.Map.empty[Int, Int]
-    val rows = mutable.ArrayBuffer.empty[StageRow]
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs += 1
-        js.stageIds.foreach(sid => stageToJob(sid) = js.jobId)
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for {
-          s <- si.submissionTime; c <- si.completionTime
-        } yield c - s).getOrElse(0L)
-        val m = si.taskMetrics
-        rows += StageRow(stageToJob.getOrElse(si.stageId, -1), si.stageId,
-          si.name.linesIterator.next().take(90), si.numTasks, wall,
-          m.executorRunTime, m.executorCpuTime / 1000000L,
-          m.shuffleReadMetrics.totalBytesRead / 1e6,
-          m.shuffleWriteMetrics.bytesWritten / 1e6)
-      }
-    }
+    val trace = graft.obs.QueryTrace.attach(spark)
 
     graft.wat.WatFixture.ensureFleet()
     graft.wat.WatFixture.ensureSingle()
@@ -63,14 +35,13 @@ object QueryProfile {
       try fn(spark, sfDir).queryExecution.toRdd.count()
       catch { case e: Throwable => () }
 
-      rows.clear(); stageToJob.clear(); jobs = 0
-      spark.sparkContext.addSparkListener(listener)
+      trace.reset()
       val t0 = System.nanoTime()
       fn(spark, sfDir).queryExecution.toRdd.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      // let the listener bus drain before reading (private API — poll)
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
+      graft.obs.QueryTrace.settle()
+      val rows = trace.stages
+      val jobs = trace.counters.jobs
 
       println(f"%n===== $name: wall=$wall%.3f s, jobs=$jobs, stages=${rows.size} =====")
       println(f"${"job"}%4s ${"stage"}%6s ${"tasks"}%5s ${"wallMs"}%7s " +
@@ -78,7 +49,8 @@ object QueryProfile {
       rows.sortBy(-_.wallMs).foreach { r =>
         println(f"${r.jobId}%4d ${r.stageId}%6d ${r.numTasks}%5d " +
           f"${r.wallMs}%7d ${r.runMs}%7d ${r.cpuMs}%7d " +
-          f"${r.shReadMB}%8.2f ${r.shWriteMB}%8.2f  ${r.name}")
+          f"${r.shuffleReadBytes / 1e6}%8.2f " +
+          f"${r.shuffleWriteBytes / 1e6}%8.2f  ${r.name}")
       }
       val totWall = rows.map(_.wallMs).sum
       println(f"stage wall sum=${totWall / 1000.0}%.3f s " +

@@ -29,7 +29,8 @@ object StreamFloorProbe {
   def main(args: Array[String]): Unit = {
     val reps = args.lift(0).map(_.toInt).getOrElse(3)
     val width = args.lift(1).getOrElse("8") // battery stream width
-    val spark = graft.SessionBuilder.local(32)
+    val (master, cpus) = graft.ScaleProbe.masterFromEnv()
+    val spark = graft.SessionBuilder.forMaster(master, cpus)
     spark.conf.set("spark.sql.shuffle.partitions", width)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
