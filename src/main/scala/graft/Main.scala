@@ -19,6 +19,14 @@ import graft.pipeline.{Cc2Config, Cc2Dataset}
   */
 object Main {
 
+  /** Every flag the CLI reads. Any other `--key` fails before a session
+    * is built, as the reference's `fire.Fire` rejects an unknown keyword
+    * argument: a misspelt flag must not run with its default.
+    */
+  val Flags: Seq[String] = Seq("output_path", "document_type", "wat_paths",
+    "wat_index", "wat_index_count", "wat_count", "multipart", "shuffle",
+    "resume", "seed", "source_cc_protocol", "master", "num_cores", "mem_gb")
+
   private def parseArgs(args: Array[String]): Map[String, String] = {
     require(args.length % 2 == 0,
       s"flags must come in --key value pairs, got: ${args.mkString(" ")}")
@@ -27,7 +35,10 @@ object Main {
         require(k.startsWith("--"), s"expected a --flag, got: $k")
         require(!v.startsWith("--"),
           s"flag $k is missing its value (next token is $v)")
-        k.stripPrefix("--") -> v
+        val key = k.stripPrefix("--")
+        require(Flags.contains(key),
+          s"unknown flag $k; accepted: ${Flags.map("--" + _).mkString(", ")}")
+        key -> v
     }.toMap
   }
 
@@ -65,13 +76,7 @@ object Main {
       sourceCcProtocol = a.getOrElse("source_cc_protocol", dflt.sourceCcProtocol),
       shuffle = a.get("shuffle").forall(_.toBoolean),
       resume = a.get("resume"),
-      seed = a.get("seed").map(_.toLong).getOrElse(42L),
-      // beyond-reference knobs: concurrent multipart parts and the
-      // big-archive streaming-decode threshold (Cc2Config scaladoc)
-      partParallelism = a.get("part_parallelism").map(_.toInt)
-        .getOrElse(dflt.partParallelism),
-      streamThresholdBytes = a.get("stream_threshold_bytes").map(_.toLong)
-        .getOrElse(dflt.streamThresholdBytes))
+      seed = a.get("seed").map(_.toLong).getOrElse(42L))
 
     val spark = factory()
     // stop whichever session the run ends on (parts restart it): a

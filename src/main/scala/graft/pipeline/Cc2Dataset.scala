@@ -14,7 +14,11 @@ import graft.ops.{Dedup, PartMerge, Shuffle}
 import graft.wat.WatExtract
 
 /** Pipeline configuration — the reference's `cc2dataset(...)` keyword
-  * surface (cc2dataset/main.py:336-349, README.md:54-68).
+  * surface (cc2dataset/main.py:336-349, README.md:54-68), plus `seed`
+  * (the sampling and in-file row order). Multipart parts run one after
+  * another with a session restart before each, as in the reference;
+  * each archive's fetch-or-stream decode is the reader's own choice
+  * (`WatReader.archiveRecords`), not a setting.
   */
 final case class Cc2Config(
     outputPath: String,
@@ -25,23 +29,7 @@ final case class Cc2Config(
     shuffle: Boolean = true,
     resume: Option[String] = None,
     seed: Long = 42L,
-    sourceCcProtocol: String = "s3",
-    /** >1 runs that many multipart parts concurrently (each in its own
-      * `SparkSession.newSession()` over the shared context) instead of
-      * the reference's strictly sequential loop. Parts are independent
-      * (disjoint inputs, disjoint output dirs), so at fleet scale this
-      * keeps the cluster busy through each part's long scheduling tail.
-      * Sequential mode (the default) keeps reference parity including
-      * the session restart between parts.
-      */
-    partParallelism: Int = 1,
-    /** Archives larger than this decode as a stream (gzip window + one
-      * record resident) instead of whole-file — the OOM guard for a
-      * 10 GiB outlier in a listing of ~1 GiB archives. Default keeps
-      * reference-parity whole-file mode (`WatReader.metadataRecords`);
-      * mirrors the DSv2 source's `stream_threshold_bytes` option.
-      */
-    streamThresholdBytes: Long = Long.MaxValue)
+    sourceCcProtocol: String = "s3")
 
 /** Top-level orchestration (C1–C5, SURVEY.md §2.10): single-part and
   * multipart jobs, `_SUCCESS`-based resume, manifest, job-id pathing, and
@@ -103,62 +91,35 @@ object Cc2Dataset {
   }
 
   /** Name prefix of the transient catalog table each output write
-    * registers (unique per write: `newSession()` parts share the catalog).
+    * registers. The name is unique per write, so two writes that share a
+    * catalog (two jobs in one application) never drop each other's table.
     */
   val OutputTablePrefix = "graft_out_"
 
   /** C1: one part end-to-end (cc2dataset/main.py:269-287). */
   def processOnePart(spark: SparkSession, watFiles: Seq[String],
-      outputPath: String, docType: String, shuffle: Boolean, seed: Long,
-      streamThresholdBytes: Long = Long.MaxValue): Long = {
-    val links = WatExtract.fromPaths(spark, watFiles, docType,
-      streamThresholdBytes)
+      outputPath: String, docType: String, shuffle: Boolean, seed: Long): Long = {
+    val links = WatExtract.fromPaths(spark, watFiles, docType)
     dedupRepartitionCount(links.toDF(), outputPath, watFiles.size, shuffle, seed)
   }
 
   /** C2: resume-aware multipart loop + merge (cc2dataset/main.py:299-329).
-    * Parts are written unshuffled; the merged output gets the global
+    * Parts run strictly one after another, each on a restarted session
+    * (C3), and are written unshuffled; the merged output gets the global
     * dedup + shuffle.
     */
   def processMultiPart(sparkFactory: () => SparkSession, watFiles: Seq[String],
       outputPath: String, docType: String, multipart: Int, shuffle: Boolean,
-      seed: Long, resume: Boolean, partParallelism: Int = 1,
-      streamThresholdBytes: Long = Long.MaxValue): Long = {
-    require(partParallelism >= 1, "partParallelism must be >= 1")
+      seed: Long, resume: Boolean): Long = {
     val chunkSize = math.ceil(watFiles.size.toDouble / multipart).toInt
     val chunks = watFiles.grouped(chunkSize).toSeq
     val startAt =
       if (resume) PartMerge.lastSuccessfulPart(sparkFactory(), outputPath) + 1
       else 0
-    val todo = chunks.zipWithIndex.drop(startAt)
-    if (partParallelism <= 1) {
-      // reference parity: strictly sequential, session restart per part
-      todo.foreach { case (chunk, i) =>
-        val spark = restartSession(sparkFactory) // C3
-        processOnePart(spark, chunk, s"$outputPath/part_$i", docType,
-          shuffle = false, seed, streamThresholdBytes)
-      }
-    } else {
-      // Parallel parts share ONE SparkContext; each gets an isolated
-      // `newSession()` (own SQL conf/temp views, shared executors) —
-      // contexts can't be restarted concurrently, so C3's restart
-      // hygiene is traded for in-flight overlap. Parts write disjoint
-      // part_<i> dirs, so completion order doesn't matter, and a
-      // failure in any part fails the whole call (Await rethrows).
-      val spark = restartSession(sparkFactory)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(partParallelism)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      try Await.result(
-        Future.traverse(todo.toList) { case (chunk, i) =>
-          Future {
-            processOnePart(spark.newSession(), chunk, s"$outputPath/part_$i",
-              docType, shuffle = false, seed, streamThresholdBytes)
-          }
-        }, Duration.Inf)
-      finally pool.shutdown()
+    chunks.zipWithIndex.drop(startAt).foreach { case (chunk, i) =>
+      val spark = restartSession(sparkFactory) // C3
+      processOnePart(spark, chunk, s"$outputPath/part_$i", docType,
+        shuffle = false, seed)
     }
     val spark = restartSession(sparkFactory)
     val all = PartMerge.unionParts(spark,
@@ -205,11 +166,10 @@ object Cc2Dataset {
     */
   def startManifestIntake(spark: SparkSession, manifestGlob: String,
       docType: String, outputPath: String,
-      maxFilesPerTrigger: Int = 0,
-      fetchParallelism: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
+      maxFilesPerTrigger: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
     startIntakeSink(
       WatExtract.extractStreamFromManifests(spark, manifestGlob, docType,
-        maxFilesPerTrigger, fetchParallelism),
+        maxFilesPerTrigger),
       outputPath)
 
   /** The batch tail over everything the intake has landed so far:
@@ -252,12 +212,10 @@ object Cc2Dataset {
     val n = config.multipart match {
       case None | Some(1) =>
         processOnePart(spark, wats, jobPath, config.documentType,
-          config.shuffle, config.seed, config.streamThresholdBytes)
+          config.shuffle, config.seed)
       case Some(m) =>
         processMultiPart(sparkFactory, wats, jobPath, config.documentType, m,
-          config.shuffle, config.seed, resume = config.resume.isDefined,
-          partParallelism = config.partParallelism,
-          streamThresholdBytes = config.streamThresholdBytes)
+          config.shuffle, config.seed, resume = config.resume.isDefined)
     }
     (jobPath, n)
   }

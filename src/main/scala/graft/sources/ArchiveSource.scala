@@ -41,8 +41,7 @@ trait ArchiveFormat extends Serializable {
     * early; the rows read before it are kept.
     */
   def decode(path: String, conf: Configuration, required: Set[String],
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]]
+      onCorrupt: Exception => Unit): ClosingIterator[Array[Any]]
 }
 
 /** `spark.read.format(<provider class name>)`, one subclass per format;
@@ -57,14 +56,14 @@ abstract class ArchiveDataSource(format: ArchiveFormat)
     new ArchiveTable(format, ArchiveSource.pathsFrom(properties))
 }
 
-/** The source options: `max_tasks` (see [[ArchiveSource.DefaultMaxTasks]]),
-  * `stream_threshold_bytes` (archives above it decode as a stream instead
-  * of whole-file, the WatReader memory bound) and `max_files_per_trigger`
-  * (streaming admission control, 0 = unlimited).
+/** The source options: `max_tasks` (see [[ArchiveSource.DefaultMaxTasks]])
+  * and `max_files_per_trigger` (streaming admission control, 0 =
+  * unlimited). Whether an archive is fetched whole or decoded as a
+  * stream is not an option: [[WatReader.archiveRecords]] decides it from
+  * the archive's length.
   */
 final case class ArchiveOptions(
     maxTasks: Int = ArchiveSource.DefaultMaxTasks,
-    streamThresholdBytes: Long = Long.MaxValue,
     maxFilesPerTrigger: Int = 0)
 
 object ArchiveSource {
@@ -159,8 +158,6 @@ class ArchiveTable(format: ArchiveFormat, paths: Seq[String])
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ArchiveScanBuilder(format, paths, ArchiveOptions(
       maxTasks = options.getInt("max_tasks", ArchiveSource.DefaultMaxTasks),
-      streamThresholdBytes =
-        options.getLong("stream_threshold_bytes", Long.MaxValue),
       maxFilesPerTrigger = options.getInt("max_files_per_trigger", 0)))
 }
 
@@ -233,7 +230,7 @@ class ArchiveScan(format: ArchiveFormat, paths: Seq[String],
     ArchiveSource.planPartitions(paths, opts.maxTasks)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArchiveReaderFactory(format, conf, required, opts.streamThresholdBytes)
+    new ArchiveReaderFactory(format, conf, required)
 
   /** Corrupt-archive count surfaces in the SQL UI per scan: tolerated
     * corruption must be VISIBLE, not just logged to executor stderr.
@@ -320,7 +317,7 @@ class ArchiveMicroBatchStream(format: ArchiveFormat, globs: Seq[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArchiveReaderFactory(format, conf, required, opts.streamThresholdBytes)
+    new ArchiveReaderFactory(format, conf, required)
 
   override def deserializeOffset(json: String): Offset = {
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
@@ -348,8 +345,7 @@ case class CorruptArchivesTaskMetric(value: Long) extends CustomTaskMetric {
   * so it stays a few hundred bytes in every task's binary.
   */
 class ArchiveReaderFactory(format: ArchiveFormat,
-    conf: Broadcast[SerializableConfiguration], required: StructType,
-    streamThresholdBytes: Long = Long.MaxValue)
+    conf: Broadcast[SerializableConfiguration], required: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val paths = partition.asInstanceOf[ArchivePartition].paths
@@ -367,8 +363,7 @@ class ArchiveReaderFactory(format: ArchiveFormat,
       private var active: ClosingIterator[Array[Any]] = _
       private val it = paths.iterator.flatMap { p =>
         active = format.decode(p, conf.value.value, wanted,
-          onCorrupt = e => { corrupt += 1; WatReader.logCorruptDefault(e) },
-          streamThresholdBytes)
+          onCorrupt = e => { corrupt += 1; WatReader.logCorruptDefault(e) })
         active
       }
       private var row: InternalRow = _

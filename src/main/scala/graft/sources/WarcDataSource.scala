@@ -33,12 +33,10 @@ object WarcDataSource extends ArchiveFormat {
     StructField("html", StringType, nullable = false)))
 
   def decode(path: String, conf: Configuration, required: Set[String],
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+      onCorrupt: Exception => Unit): ClosingIterator[Array[Any]] = {
     val u = UTF8String.fromString(path)
     val wantHtml = required("html")
-    val recs = WatReader.archiveRecords(path, conf, onCorrupt,
-      inMemoryLimitBytes)
+    val recs = WatReader.archiveRecords(path, conf, onCorrupt)
     new ClosingIterator(
       recs.filter(_.warcType.equalsIgnoreCase("response")).flatMap { r =>
         val html =

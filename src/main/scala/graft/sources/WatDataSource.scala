@@ -32,12 +32,10 @@ object WatDataSource extends ArchiveFormat {
     * UTF-8 decode (row count = metadata records either way).
     */
   def decode(path: String, conf: Configuration, required: Set[String],
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+      onCorrupt: Exception => Unit): ClosingIterator[Array[Any]] = {
     val u = UTF8String.fromString(path)
     val wantPayload = required("payload")
-    val recs = WatReader.metadataRecords(path, conf, onCorrupt,
-      inMemoryLimitBytes)
+    val recs = WatReader.metadataRecords(path, conf, onCorrupt)
     new ClosingIterator(
       recs.map(r => Array[Any](u,
         if (wantPayload) UTF8String.fromString(r.payloadString) else null)),

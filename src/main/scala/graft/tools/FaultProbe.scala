@@ -25,6 +25,8 @@ import scala.jdk.CollectionConverters._
   * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *   SPARK_SCALA_VERSION=2.13 SPARK_HOME=/opt/spark \
   *   sbt "runMain graft.tools.FaultProbe"
+  * `SPARK_GRAFT_MASTER` overrides the master; anything but a
+  * `local-cluster[n,c,m]` master fails before a session is built.
   * Exit code 0 only if every probed query survives hash-identical.
   */
 object FaultProbe {
@@ -59,7 +61,11 @@ object FaultProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.SessionBuilder.forMaster("local-cluster[4,8,4096]")
+    // it kills executor JVMs, so only a local-cluster master has any
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[4,8,4096]")
+    require(master.startsWith("local-cluster["), "FaultProbe kills executor " +
+      s"JVMs and needs a local-cluster[n,c,m] master, got: $master")
+    val spark = graft.SessionBuilder.forMaster(master)
     spark.sparkContext.setLogLevel("ERROR")
     val trace = graft.obs.QueryTrace.attach(spark)
 

@@ -10,6 +10,8 @@ package graft.tools
   * not data, is the cost.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.QueryProfile q_ann_pq_recall ..."
+  * The session's master is `SPARK_GRAFT_MASTER` (default
+  * `local[SPARK_GRAFT_CPUS]`), as for every `ScaleProbe` scenario.
   */
 object QueryProfile {
 
@@ -17,8 +19,8 @@ object QueryProfile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionBuilder.local(cpus.toInt)
+    val (master, cpus) = graft.ScaleProbe.masterFromEnv()
+    val spark = graft.SessionBuilder.forMaster(master, cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val trace = graft.obs.QueryTrace.attach(spark)

@@ -173,34 +173,23 @@ object CcIndex {
     }
   }
 
-  /** Positioned ranged read with the same ≤10-attempt retry discipline
-    * as [[WatReader.fetchAllBytes]] — `readFully(pos, …)` is the
-    * Hadoop positioned-read API (a ranged GET on S3A, `pread` on
-    * local/HDFS). None after final failure.
+  /** Positioned ranged read through [[WatReader.withRetry]], the
+    * ≤10-attempt loop of [[WatReader.fetchAllBytes]] — `readFully(pos,
+    * …)` is the Hadoop positioned-read API (a ranged GET on S3A, `pread`
+    * on local/HDFS). None after final failure.
     */
   def fetchRange(path: String, offset: Long, length: Int,
       conf: Configuration = new Configuration(),
-      attempts: Int = 10, sleepMs: Long = 1000L): Option[Array[Byte]] = {
-    var i = 0
-    while (i < attempts) {
+      attempts: Int = 10, sleepMs: Long = 1000L): Option[Array[Byte]] =
+    WatReader.withRetry(attempts, sleepMs) {
+      val p = new Path(path)
+      val in = p.getFileSystem(conf).open(p)
       try {
-        val p = new Path(path)
-        val fs = p.getFileSystem(conf)
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte](length)
-          in.readFully(offset, buf, 0, length)
-          return Some(buf)
-        } finally in.close()
-      } catch {
-        case e: InterruptedException => throw e
-        case scala.util.control.NonFatal(_) =>
-          i += 1
-          if (i < attempts) Thread.sleep(sleepMs)
-      }
+        val buf = new Array[Byte](length)
+        in.readFully(offset, buf, 0, length)
+        buf
+      } finally in.close()
     }
-    None
-  }
 
   /** Single-record ranged fetch: the index row's `(warc_filename,
     * warc_record_offset, warc_record_length)` → the one WARC record
@@ -760,8 +749,7 @@ object CcIndexSource extends ArchiveFormat {
     "warc_record_length bigint not null, revisit boolean not null")
 
   def decode(path: String, conf: Configuration, required: Set[String],
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+      onCorrupt: Exception => Unit): ClosingIterator[Array[Any]] = {
     def u(s: String) = UTF8String.fromString(s)
     val wantEnvelope =
       required("content_mime_type") || required("fetch_status")

@@ -466,8 +466,7 @@ sealed abstract class IndexShardFormat(
   def schema: StructType = Cdxj.ShardSchema
 
   def decode(path: String, conf: Configuration, required: Set[String],
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+      onCorrupt: Exception => Unit): ClosingIterator[Array[Any]] = {
     def u(s: String) = UTF8String.fromString(s)
     val p = u(path)
     val lines = Cdxj.shardLines(path, conf, onCorrupt)

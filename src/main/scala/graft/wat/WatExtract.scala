@@ -34,13 +34,9 @@ object WatExtract {
     * the failure, never a task abort, and counts into the scan's
     * `corruptArchives` metric.
     */
-  def payloads(spark: SparkSession, paths: Seq[String]): DataFrame =
-    read(spark, paths, Long.MaxValue, ArchiveSource.DefaultMaxTasks)
-
-  private def read(spark: SparkSession, paths: Seq[String],
-      streamThresholdBytes: Long, maxTasks: Int): DataFrame =
+  def payloads(spark: SparkSession, paths: Seq[String],
+      maxTasks: Int = ArchiveSource.DefaultMaxTasks): DataFrame =
     spark.read.format("wat")
-      .option("stream_threshold_bytes", streamThresholdBytes)
       .option("max_tasks", maxTasks)
       .load(paths: _*).select("payload")
 
@@ -108,18 +104,16 @@ object WatExtract {
       .as[DocLink]
   }
 
-  /** End-to-end: WAT paths → deduplicatable DocLink dataset.
-    * `streamThresholdBytes`: archives above it decode as a stream
-    * instead of whole-file (WatReader.metadataRecords memory bound);
-    * the default keeps reference-parity whole-file mode. `maxTasks`
-    * caps the task count: above it contiguous archive groups share a
-    * partition, so a million-archive listing plans a bounded task count
+  /** End-to-end: WAT paths → deduplicatable DocLink dataset. Each
+    * archive is fetched whole, or decoded as a stream when it is too long
+    * for one byte array (`WatReader.archiveRecords`). `maxTasks` caps the
+    * task count: above it contiguous archive groups share a partition,
+    * so a million-archive listing plans a bounded task count
     * (`ArchiveSource.DefaultMaxTasks` scaladoc).
     */
   def fromPaths(spark: SparkSession, paths: Seq[String], docType: String,
-      streamThresholdBytes: Long = Long.MaxValue,
       maxTasks: Int = ArchiveSource.DefaultMaxTasks): Dataset[DocLink] =
-    extract(read(spark, paths, streamThresholdBytes, maxTasks), docType)
+    extract(payloads(spark, paths, maxTasks), docType)
 
   /** CONTINUOUS extraction: the streaming wat source (globs relisted per
     * micro-batch, each archive exactly once) through the SAME relational
@@ -158,8 +152,7 @@ object WatExtract {
     * `#`-commented are ignored.
     */
   def extractStreamFromManifests(spark: SparkSession, manifestGlob: String,
-      docType: String, maxFilesPerTrigger: Int = 0,
-      fetchParallelism: Int = 0): Dataset[DocLink] = {
+      docType: String, maxFilesPerTrigger: Int = 0): Dataset[DocLink] = {
     import spark.implicits._
     // the session Hadoop conf, so executors keep every spark.hadoop.*
     val conf = spark.sparkContext.broadcast(new org.apache.spark.util
@@ -169,13 +162,10 @@ object WatExtract {
       if (maxFilesPerTrigger > 0)
         reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
       else reader
-    val par =
-      if (fetchParallelism > 0) fetchParallelism
-      else spark.sparkContext.defaultParallelism
     val paths = withTrigger.load(manifestGlob).as[String]
       .map(_.trim)
       .filter(p => p.nonEmpty && !p.startsWith("#"))
-      .repartition(par)
+      .repartition(spark.sparkContext.defaultParallelism)
     val payloads = paths
       .flatMap { p =>
         val it = WatReader.metadataPayloads(p, conf.value.value)

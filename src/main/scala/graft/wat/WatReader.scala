@@ -56,6 +56,12 @@ object ClosingIterator {
   */
 object WatReader {
 
+  /** The largest byte array the JVM allocates: an archive longer than
+    * this cannot be fetched whole, and a record payload longer than this
+    * cannot be held.
+    */
+  val MaxArrayBytes: Long = Int.MaxValue - 8
+
   /** Whole-file fetch with retry — parity with the reference's
     * fetch-into-BytesIO ≤10 attempts with 1 s sleeps
     * (cc2dataset/main.py:186-199). Whole-file reads also avoid ranged
@@ -63,26 +69,33 @@ object WatReader {
     * Returns empty on final failure (reference yields nothing).
     */
   def fetchAllBytes(path: String, conf: Configuration = new Configuration(),
-      attempts: Int = 10, sleepMs: Long = 1000L): Option[Array[Byte]] = {
+      attempts: Int = 10, sleepMs: Long = 1000L): Option[Array[Byte]] =
+    withRetry(attempts, sleepMs) {
+      val p = new Path(path)
+      val in = p.getFileSystem(conf).open(p)
+      try {
+        val out = new java.io.ByteArrayOutputStream(1 << 20)
+        val buf = new Array[Byte](1 << 16)
+        var n = in.read(buf)
+        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+        out.toByteArray
+      } finally in.close()
+    }
+
+  /** The one retry loop of every archive read: up to `attempts` tries
+    * with `sleepMs` between them, None after the last failure. A missing
+    * file ends the loop at once (no later attempt can find it). It is
+    * interrupt-transparent: a task kill (speculative execution, job
+    * cancel) interrupts the executor thread, and the loop propagates it
+    * instead of sleeping through the remaining attempts.
+    */
+  private[wat] def withRetry[A](attempts: Int, sleepMs: Long)(body: => A): Option[A] = {
     var i = 0
     while (i < attempts) {
-      try {
-        val p = new Path(path)
-        val fs = p.getFileSystem(conf)
-        val in = fs.open(p)
-        try {
-          val out = new java.io.ByteArrayOutputStream(1 << 20)
-          val buf = new Array[Byte](1 << 16)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          return Some(out.toByteArray)
-        } finally in.close()
-      } catch {
-        // interrupt-transparent: a task kill (speculative execution,
-        // job cancel) interrupts the executor thread — the retry loop
-        // must propagate immediately, not swallow the interrupt and
-        // sleep through up to 9 more attempts
+      try return Some(body)
+      catch {
         case e: InterruptedException => throw e
+        case _: java.io.FileNotFoundException => return None
         case scala.util.control.NonFatal(_) =>
           i += 1
           if (i < attempts) Thread.sleep(sleepMs)
@@ -193,65 +206,53 @@ object WatReader {
     * which is exactly what whole-file mode is for.
     */
   def openStream(path: String, conf: Configuration = new Configuration(),
-      attempts: Int = 10, sleepMs: Long = 1000L): Option[InputStream] = {
-    var i = 0
-    while (i < attempts) {
-      try {
-        val p = new Path(path)
-        return Some(p.getFileSystem(conf).open(p))
-      } catch {
-        // interrupt-transparent: a task kill (speculative execution,
-        // job cancel) interrupts the executor thread — the retry loop
-        // must propagate immediately, not swallow the interrupt and
-        // sleep through up to 9 more attempts
-        case e: InterruptedException => throw e
-        case scala.util.control.NonFatal(_) =>
-          i += 1
-          if (i < attempts) Thread.sleep(sleepMs)
-      }
+      attempts: Int = 10, sleepMs: Long = 1000L): Option[InputStream] =
+    withRetry(attempts, sleepMs) {
+      val p = new Path(path)
+      p.getFileSystem(conf).open(p): InputStream
     }
-    None
-  }
 
   /** Metadata records of one WAT file (fetch + frame parse), payload
     * bytes undecoded — callers that only need record existence (pruned
-    * DSv2 scans, counts) skip the per-record UTF-8 decode entirely.
-    *
-    * Memory bound: archives at or under `inMemoryLimitBytes` are fetched
-    * whole (reference parity — one sequential GET, in-buffer retries);
-    * anything larger is DECODED AS A STREAM, holding only the gzip
-    * window plus one record's payload at a time, so a single 10 GiB
-    * outlier in a listing of ~1 GiB archives cannot OOM its executor.
-    * The default keeps whole-file mode unconditionally (`Long.MaxValue`);
-    * the DSv2 source exposes it as `stream_threshold_bytes`.
+    * DSv2 scans, counts) skip the per-record UTF-8 decode entirely. The
+    * fetch or stream decode is [[archiveRecords]]'s.
     */
   def metadataRecords(path: String, conf: Configuration = new Configuration(),
-      onCorrupt: Exception => Unit = WatReader.logCorrupt,
-      inMemoryLimitBytes: Long = Long.MaxValue): ClosingIterator[WarcRecord] = {
-    val recs = archiveRecords(path, conf, onCorrupt, inMemoryLimitBytes)
+      onCorrupt: Exception => Unit = WatReader.logCorrupt): ClosingIterator[WarcRecord] = {
+    val recs = archiveRecords(path, conf, onCorrupt)
     new ClosingIterator(
       recs.filter(_.warcType.equalsIgnoreCase("metadata")),
       () => recs.close())
   }
 
   /** ALL records of one archive (fetch + frame walk), type-unfiltered —
-    * the shared on-ramp for the WAT path (metadata records) and the
-    * raw-WARC path (response records). Same memory bound: archives at
-    * or under `inMemoryLimitBytes` are fetched whole; larger ones
-    * decode as a stream holding only the gzip window plus one record's
-    * payload.
+    * the shared on-ramp for the WAT path (metadata records), the
+    * raw-WARC path (response records) and WET (conversion records).
+    *
+    * Memory bound, decided from the archive's own length (one
+    * `getFileStatus`): an archive that fits in one byte array
+    * ([[MaxArrayBytes]]) is fetched whole (reference parity — one
+    * sequential GET, retried as a whole); a longer one is DECODED AS A
+    * STREAM, holding only the gzip window plus one record's payload at
+    * a time, since no byte array can hold it. An unknown length fetches
+    * whole.
     */
   def archiveRecords(path: String, conf: Configuration = new Configuration(),
-      onCorrupt: Exception => Unit = WatReader.logCorrupt,
-      inMemoryLimitBytes: Long = Long.MaxValue): ClosingIterator[WarcRecord] = {
-    val size: Long =
-      if (inMemoryLimitBytes == Long.MaxValue) 0L // never probe in parity mode
-      else try {
+      onCorrupt: Exception => Unit = WatReader.logCorrupt): ClosingIterator[WarcRecord] =
+    archiveRecords(path, conf, onCorrupt, MaxArrayBytes)
+
+  /** [[archiveRecords]] with the whole-file limit as a parameter: the
+    * test seam that reaches the streaming branch with a small archive.
+    */
+  private[graft] def archiveRecords(path: String, conf: Configuration,
+      onCorrupt: Exception => Unit, wholeFileLimit: Long): ClosingIterator[WarcRecord] = {
+    val size =
+      try {
         val p = new Path(path)
         p.getFileSystem(conf).getFileStatus(p).getLen
-      } catch { case _: Exception => 0L } // unknown size → whole-file mode
+      } catch { case scala.util.control.NonFatal(_) => -1L } // unknown: whole
     val source: Option[InputStream] =
-      if (size > inMemoryLimitBytes) openStream(path, conf)
+      if (size > wholeFileLimit) openStream(path, conf)
       else fetchAllBytes(path, conf).map(new ByteArrayInputStream(_))
     source match {
       case None =>
@@ -267,9 +268,8 @@ object WatReader {
     * (cc2dataset/main.py:139-142); frame-level garbage ends the file.
     */
   def metadataPayloads(path: String, conf: Configuration = new Configuration(),
-      onCorrupt: Exception => Unit = WatReader.logCorrupt,
-      inMemoryLimitBytes: Long = Long.MaxValue): ClosingIterator[String] = {
-    val recs = metadataRecords(path, conf, onCorrupt, inMemoryLimitBytes)
+      onCorrupt: Exception => Unit = WatReader.logCorrupt): ClosingIterator[String] = {
+    val recs = metadataRecords(path, conf, onCorrupt)
     new ClosingIterator(recs.map(_.payloadString), () => recs.close())
   }
 
@@ -317,7 +317,7 @@ object WatReader {
         // corrupt/hostile lengths end the file (like frame desync) rather
         // than failing the task: len.toInt on (2^31, 2^32) would wrap
         // negative and throw NegativeArraySizeException
-        if (len < 0L || len > Int.MaxValue - 8) return None
+        if (len < 0L || len > MaxArrayBytes) return None
         val payload = new Array[Byte](len.toInt)
         var off = 0
         while (off < payload.length) {

@@ -33,11 +33,9 @@ object WetText {
     * a target URI is dropped (nothing to key the page by).
     */
   def docsOf(path: String, conf: Configuration,
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long = Long.MaxValue): ClosingIterator[WetDoc] = {
+      onCorrupt: Exception => Unit): ClosingIterator[WetDoc] = {
     val ccName = path.substring(path.lastIndexOf('/') + 1)
-    val recs = WatReader.archiveRecords(path, conf, onCorrupt,
-      inMemoryLimitBytes)
+    val recs = WatReader.archiveRecords(path, conf, onCorrupt)
     new ClosingIterator(
       recs.filter(_.warcType.equalsIgnoreCase("conversion"))
         .flatMap { r =>
@@ -69,10 +67,9 @@ object WetSource extends ArchiveFormat {
     StructType.fromDDL("wet_path string, page_url string, wet_text string")
 
   def decode(path: String, conf: Configuration, required: Set[String],
-      onCorrupt: Exception => Unit,
-      inMemoryLimitBytes: Long): ClosingIterator[Array[Any]] = {
+      onCorrupt: Exception => Unit): ClosingIterator[Array[Any]] = {
     val u = UTF8String.fromString(path)
-    val docs = WetText.docsOf(path, conf, onCorrupt, inMemoryLimitBytes)
+    val docs = WetText.docsOf(path, conf, onCorrupt)
     new ClosingIterator(
       docs.map(d => Array[Any](u, UTF8String.fromString(d.page_url),
         UTF8String.fromString(d.wet_text))),

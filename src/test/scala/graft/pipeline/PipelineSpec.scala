@@ -72,33 +72,10 @@ class PipelineSpec extends AnyFunSuite {
       Seq(wat3, wat4), factory)
     assert(n1 == n2 && n1 > 0)
     val spark = factory()
-    val a = spark.read.parquet(p1).select("uid", "url", "alt")
-      .collect().map(_.toString).sorted
-    val b = spark.read.parquet(s"$p2/merged").select("uid", "url", "alt")
-      .collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-  }
-
-  test("parallel multipart parts produce identical merged output") {
-    val wat5 = WatFixture.syntheticWat(
-      new File(tmp, "w5.warc.wat.gz").getAbsolutePath, 40, 10, seed = 15L)
-    val wat6 = WatFixture.syntheticWat(
-      new File(tmp, "w6.warc.wat.gz").getAbsolutePath, 40, 10, seed = 16L)
-    val seqOut = new File(tmp, "par_seq").getAbsolutePath
-    val parOut = new File(tmp, "par_par").getAbsolutePath
-    val (p1, n1) = Cc2Dataset.run(
-      Cc2Config(seqOut, "image", multipart = Some(2), shuffle = false),
-      Seq(wat5, wat6), factory)
-    val (p2, n2) = Cc2Dataset.run(
-      Cc2Config(parOut, "image", multipart = Some(2), shuffle = false,
-        partParallelism = 2),
-      Seq(wat5, wat6), factory)
-    assert(n1 == n2 && n1 > 0)
-    val spark = factory()
     assert(new File(s"$p2/part_0/_SUCCESS").exists())
     assert(new File(s"$p2/part_1/_SUCCESS").exists())
-    // the concurrent parts' writes share one catalog: each part still
-    // holds one file per populated bucket, and every file one bucket
+    // each part and the merge hold one file per populated bucket, every
+    // file holds one bucket, and no write leaves its catalog table behind
     val files = graft.ops.Shuffle.outputPartitions(2)
     Seq(s"$p2/part_0", s"$p2/part_1", s"$p2/merged").foreach { dir =>
       val byFile = OutputWriteSpec.fileBuckets(spark, dir, files)
@@ -107,7 +84,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(byFile.values.forall { case (named, held) => held == Set(named) }, dir)
     }
     assert(OutputWriteSpec.outputTables(spark).isEmpty)
-    val a = spark.read.parquet(s"$p1/merged").select("uid", "url", "alt")
+    val a = spark.read.parquet(p1).select("uid", "url", "alt")
       .collect().map(_.toString).sorted
     val b = spark.read.parquet(s"$p2/merged").select("uid", "url", "alt")
       .collect().map(_.toString).sorted
@@ -178,11 +155,9 @@ class PipelineSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("CLI battery: multipart(2) + parallel parts + streaming decode + resume, all via flags") {
-    // non-default knobs through the C5 surface: part_parallelism=2 (both
-    // parts in flight on one context), stream_threshold_bytes=1 (every
-    // archive over the threshold -> forced streaming decode), audio doc
-    // type. Output must be identical to whole-file sequential mode.
+  test("CLI battery: multipart(2) + resume, all via flags") {
+    // non-default knobs through the C5 surface: two parts, audio doc
+    // type, no shuffle, then a resume of the finished job
     val out = new File(tmp, "out_cli").getAbsolutePath
     def runCli(args: String*): (String, Long) = {
       val buf = new java.io.ByteArrayOutputStream()
@@ -199,9 +174,8 @@ class PipelineSpec extends AnyFunSuite {
     val (jobPath, n) = runCli(
       "--output_path", out, "--document_type", "audio",
       "--wat_paths", s"$wat1,$wat2", "--multipart", "2",
-      "--part_parallelism", "2", "--stream_threshold_bytes", "1",
       "--shuffle", "false")
-    assert(n == 2) // audio golden post-dedup, identical to whole-file mode
+    assert(n == 2) // audio golden post-dedup
     assert(new File(s"$jobPath/part_0/_SUCCESS").exists())
     assert(new File(s"$jobPath/part_1/_SUCCESS").exists())
     assert(new File(s"$jobPath/merged/_SUCCESS").exists())
@@ -209,8 +183,7 @@ class PipelineSpec extends AnyFunSuite {
     // same job path, same count (wat inputs come from the manifest)
     val (resumePath, n2) = runCli(
       "--output_path", out, "--document_type", "audio",
-      "--multipart", "2", "--resume", jobPath,
-      "--stream_threshold_bytes", "1", "--shuffle", "false")
+      "--multipart", "2", "--resume", jobPath, "--shuffle", "false")
     assert(resumePath == jobPath)
     assert(n2 == 2)
   }
@@ -231,6 +204,26 @@ class PipelineSpec extends AnyFunSuite {
       graft.Main.main(Array("--output_path", out, "--resume", out))
     }
     assert(failing.sparkContext.isStopped)
+  }
+
+  test("the CLI rejects an unknown flag before it builds a session") {
+    def rejected(): String = intercept[IllegalArgumentException] {
+      graft.Main.main(Array("--output_path", new File(tmp, "out_flag").getPath,
+        "--wat_paths", wat1, "--part_parallelism", "2"))
+    }.getMessage
+    // with a live context: Main stops any session it builds, so a context
+    // left running was never built on
+    val live = factory()
+    val msg = rejected()
+    assert(msg.contains("--part_parallelism"), msg)
+    assert(graft.Main.Flags.forall(f => msg.contains(s"--$f")), msg)
+    assert(graft.Main.Flags.size == 14)
+    assert(!live.sparkContext.isStopped)
+    // with none: the rejection leaves none behind
+    live.stop()
+    rejected()
+    assert(org.apache.spark.sql.SparkSession.getDefaultSession
+      .forall(_.sparkContext.isStopped))
   }
 
   test("listing-page parser is total on hostile HTML and emits only well-formed index urls") {

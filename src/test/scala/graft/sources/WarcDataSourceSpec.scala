@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
-import graft.wat.{CcIndex, Cdxj, WarcExtract, WatFixture, WetText}
+import graft.wat.{CcIndex, Cdxj, WarcExtract, WatFixture, WatReader, WetText}
 
 /** DSv2 `warc` source: schema/rows, planning-time path pruning,
   * column pruning (html decode skipped), max_tasks batching; for every
@@ -155,28 +155,32 @@ class WarcDataSourceSpec extends AnyFunSuite with SparkTestBase {
     assert(viaWarc.nonEmpty && viaWarc == direct,
       "WARC transport changed the boilerplate extraction")
   }
-  test("stream_threshold_bytes: archives above it decode as a stream; " +
-      "rows identical to whole-file mode") {
-    val whole = spark.read.format("warc").load(warcs: _*)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    // threshold 1 byte: EVERY archive takes the streaming-decode path
-    val streamed = spark.read.format("warc")
-      .option("stream_threshold_bytes", "1")
-      .load(warcs: _*)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(streamed.nonEmpty && streamed.toSeq == whole.toSeq)
-    // a cut archive on the streaming-decode path: counted once by the
-    // scan's metric, and the records before the cut still contribute
+  test("WARC archives decoded as a stream read the same records as " +
+      "whole-file; a cut one counts once and keeps its prefix") {
+    // through the reader's test seam: whole-file limit 0 sends EVERY
+    // archive down the streaming branch. Rows are a function of the
+    // records, so equal records (headers and payload bytes) mean equal
+    // rows.
+    val conf = spark.sparkContext.hadoopConfiguration
+    def recs(p: String, limit: Long, onCorrupt: Exception => Unit = _ => ()) =
+      WatReader.archiveRecords(p, conf, onCorrupt, wholeFileLimit = limit)
+        .toList.map(r => (r.headers, r.payload.toSeq))
+    warcs.foreach { w =>
+      val whole = recs(w, WatReader.MaxArrayBytes)
+      assert(whole.size > 25 && recs(w, 0L) == whole, w)
+    }
+    // a cut archive on the streaming branch: onCorrupt fires once, and
+    // the records before the cut are kept as a prefix
     val bytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(warcs.head))
     val cut = java.nio.file.Files.createTempFile("graft-warc-cut", ".warc.gz")
     java.nio.file.Files.write(cut, bytes.take(bytes.length - 40))
-    val cutScan = spark.read.format("warc")
-      .option("stream_threshold_bytes", "1")
-      .load(warcs(1), cut.toString)
-    val n = cutScan.collect().length
-    assert(graft.SparkTestBase.corruptArchives(cutScan) == 1L)
-    assert(n > 25) // cut shard still contributed
+    var corrupt = 0
+    val kept = recs(cut.toString, 0L, _ => corrupt += 1)
+    val full = recs(warcs.head, WatReader.MaxArrayBytes)
+    assert(corrupt == 1)
+    assert(kept.size > 1 && kept.size < full.size) // more than warcinfo
+    assert(kept == full.take(kept.size))
     // the product entry reports the same count through its scan
     val links = WarcExtract.fromPaths(spark, Seq(warcs(1), cut.toString),
       "image_only")

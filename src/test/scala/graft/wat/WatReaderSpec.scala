@@ -141,24 +141,57 @@ class WatReaderSpec extends AnyFunSuite {
     assert(gotPlain == want)
   }
 
+  // the reader's test seam: archives longer than `limit` take the
+  // streaming branch, the rest are fetched whole
+  private def metadataWithin(path: String, limit: Long,
+      conf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration(),
+      onCorrupt: Exception => Unit = _ => ()): ClosingIterator[WarcRecord] = {
+    val recs = WatReader.archiveRecords(path, conf, onCorrupt, wholeFileLimit = limit)
+    new ClosingIterator(recs.filter(_.warcType.equalsIgnoreCase("metadata")),
+      () => recs.close())
+  }
+
   test("oversized archives stream-decode under a capped buffer") {
-    // a synthetic archive well above the 1 KiB in-memory limit: the
+    // a synthetic archive well above a 1 KiB whole-file limit: the
     // streaming path must decode it record-for-record identically to
     // whole-file mode, holding only one record's payload at a time
     val big = WatFixture.syntheticWat(
       new File(tmp, "big.warc.wat.gz").getAbsolutePath, 200, 10, seed = 9L)
     assert(new File(big).length() > 1024)
     val whole = WatReader.metadataRecords(big).toList
-    val streamed = WatReader.metadataRecords(big,
-      inMemoryLimitBytes = 1024L).toList
+    val streamed = metadataWithin(big, 1024L).toList
     assert(streamed.size == whole.size && whole.size == 200)
     assert(streamed.map(_.payloadString) == whole.map(_.payloadString))
     assert(streamed.map(_.headers) == whole.map(_.headers))
-    // a small archive under the limit keeps whole-file (retrying) mode
-    val small = WatReader.metadataRecords(fixturePath,
-      inMemoryLimitBytes = 1 << 30).toList
-    assert(small.map(_.payloadString) ==
-      WatReader.metadataRecords(fixturePath).toList.map(_.payloadString))
+    // a cut archive on the streaming branch: onCorrupt fires exactly
+    // once and the records before the cut are kept, as a prefix
+    val bytes = Files.readAllBytes(new File(big).toPath)
+    val cut = new File(tmp, "big_cut.warc.wat.gz")
+    Files.write(cut.toPath, bytes.take(bytes.length / 2))
+    var corrupt = 0
+    val kept = metadataWithin(cut.getAbsolutePath, 1024L,
+      onCorrupt = _ => corrupt += 1).toList
+    assert(corrupt == 1)
+    assert(kept.nonEmpty && kept.size < whole.size)
+    assert(kept.map(_.payloadString) == whole.take(kept.size).map(_.payloadString))
+  }
+
+  test("the archive's length picks the decode: longer than the limit " +
+      "streams, within it fetches whole") {
+    // a whole-file fetch has closed its handle before the first record;
+    // the streaming decode holds it until the archive is exhausted
+    val conf = FaultyFileSystem.conf()
+    val path = FaultyFileSystem.path(fixturePath)
+    val len = new File(fixturePath).length()
+    val want = WatReader.metadataRecords(fixturePath).toList.map(_.payloadString)
+    Seq(len - 1 -> 1, len -> 0).foreach { case (limit, held) =>
+      val it = metadataWithin(path, limit, conf)
+      assert(it.hasNext)
+      assert(FaultyFileSystem.openHandles(fixturePath) == held, s"limit=$limit")
+      assert(it.toList.map(_.payloadString) == want, s"limit=$limit")
+      assert(FaultyFileSystem.openHandles(fixturePath) == 0, s"limit=$limit")
+    }
+    assert(WatReader.MaxArrayBytes == Int.MaxValue - 8)
   }
 
   test("close() releases the source of a partially-consumed iterator") {
@@ -192,30 +225,66 @@ class WatReaderSpec extends AnyFunSuite {
     assert(mp.hasNext)
     mp.next()
     mp.close() // must not throw; releases the byte-array source
-    // streaming-decode mode holds a REAL file handle — close must release
+    // the streaming decode holds a REAL file handle — close must release
     // it mid-iteration (the descriptor-exhaustion hazard this guards)
-    val ms = WatReader.metadataRecords(fixturePath, inMemoryLimitBytes = 1L)
+    val ms = metadataWithin(FaultyFileSystem.path(fixturePath), 1L,
+      FaultyFileSystem.conf())
     assert(ms.hasNext)
     ms.next()
+    assert(FaultyFileSystem.openHandles(fixturePath) == 1)
     ms.close()
+    assert(FaultyFileSystem.openHandles(fixturePath) == 0)
   }
 
-  test("fetch of a missing path retries then yields empty") {
+  test("a missing path yields empty at once, without retrying") {
+    // no later attempt can find a missing file: the 10 attempts and
+    // their 1 s sleeps would only hold the task
+    val missing = s"$tmp/nope.warc.wat.gz"
     val t0 = System.nanoTime()
-    val r = WatReader.fetchAllBytes(s"$tmp/nope.warc.wat.gz",
-      attempts = 3, sleepMs = 10)
-    assert(r.isEmpty)
-    assert((System.nanoTime() - t0) / 1e6 >= 20) // slept between attempts
+    assert(WatReader.fetchAllBytes(missing).isEmpty)
+    assert(WatReader.openStream(missing).isEmpty)
+    assert(CcIndex.fetchRange(missing, 0L, 16).isEmpty)
+    var corrupt = 0
+    assert(WatReader.metadataRecords(missing, onCorrupt = _ => corrupt += 1).isEmpty)
+    assert(corrupt == 1)
+    val ms = (System.nanoTime() - t0) / 1000000L
+    assert(ms < 900, s"took $ms ms: a missing file was retried")
   }
+
+  test("a failed open is retried, and the read succeeds once it opens") {
+    val conf = FaultyFileSystem.conf()
+    val path = FaultyFileSystem.path(fixturePath)
+    val bytes = Files.readAllBytes(new File(fixturePath).toPath)
+    FaultyFileSystem.failOpens(fixturePath, 2)
+    val t0 = System.nanoTime()
+    val got = WatReader.fetchAllBytes(path, conf, attempts = 3, sleepMs = 10)
+    assert(got.exists(_.sameElements(bytes)))
+    assert((System.nanoTime() - t0) / 1e6 >= 20) // slept between attempts
+    // the ranged read and the stream open run the same loop
+    FaultyFileSystem.failOpens(fixturePath, 2)
+    assert(CcIndex.fetchRange(path, 0L, 16, conf, attempts = 3, sleepMs = 10)
+      .exists(_.sameElements(bytes.take(16))))
+    FaultyFileSystem.failOpens(fixturePath, 2)
+    val in = WatReader.openStream(path, conf, attempts = 3, sleepMs = 10)
+    assert(in.isDefined)
+    in.get.close()
+    // one failure more than the attempts: empty, after every attempt
+    FaultyFileSystem.failOpens(fixturePath, 3)
+    assert(WatReader.fetchAllBytes(path, conf, attempts = 3, sleepMs = 10).isEmpty)
+    assert(FaultyFileSystem.openHandles(fixturePath) == 0)
+  }
+
   test("fetch retry is interrupt-transparent: a task kill propagates " +
       "immediately instead of sleeping through the remaining attempts") {
-    // a nonexistent path fails every attempt; with 1 s sleeps x 10
-    // attempts, a swallowed interrupt would hold the thread ~9 s
+    // every open fails; with 1 s sleeps x 10 attempts, a swallowed
+    // interrupt would hold the thread ~9 s
+    val local = s"$tmp/interrupt.warc.wat.gz"
+    FaultyFileSystem.failOpens(local, Int.MaxValue)
     @volatile var ended: Option[Throwable] = None
     val t = new Thread(() => {
       try {
-        WatReader.fetchAllBytes("/nonexistent/graft/interrupt.wat.gz",
-          attempts = 10, sleepMs = 1000L)
+        WatReader.fetchAllBytes(FaultyFileSystem.path(local),
+          FaultyFileSystem.conf(), attempts = 10, sleepMs = 1000L)
         ()
       } catch { case e: Throwable => ended = Some(e) }
     })
