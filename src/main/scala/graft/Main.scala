@@ -27,7 +27,7 @@ object Main {
     "wat_index", "wat_index_count", "wat_count", "multipart", "shuffle",
     "resume", "seed", "source_cc_protocol", "master", "num_cores", "mem_gb")
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
     require(args.length % 2 == 0,
       s"flags must come in --key value pairs, got: ${args.mkString(" ")}")
     args.sliding(2, 2).map {
@@ -56,27 +56,7 @@ object Main {
     val factory: () => SparkSession =
       () => SessionBuilder.forMaster(master, cores, memGb)
 
-    // absent count flags keep Cc2Config's reference-parity defaults
-    // (newest 1 index, 100 sampled WATs — README.md:54); the explicit
-    // sentinel "all" disables the cap. Mapping absent to None here would
-    // silently read every index file and shuffle millions of WAT paths.
-    val dflt = Cc2Config(outputPath = a("output_path"))
-    def countFlag(key: String, d: Option[Int]): Option[Int] =
-      a.get(key) match {
-        case None        => d
-        case Some("all") => None
-        case Some(v)     => Some(v.toInt)
-      }
-
-    val cfg = dflt.copy(
-      documentType = a.getOrElse("document_type", "image"),
-      watIndexCount = countFlag("wat_index_count", dflt.watIndexCount),
-      watCount = countFlag("wat_count", dflt.watCount),
-      multipart = a.get("multipart").map(_.toInt),
-      sourceCcProtocol = a.getOrElse("source_cc_protocol", dflt.sourceCcProtocol),
-      shuffle = a.get("shuffle").forall(_.toBoolean),
-      resume = a.get("resume"),
-      seed = a.get("seed").map(_.toLong).getOrElse(42L))
+    val cfg = config(a)
 
     val spark = factory()
     // stop whichever session the run ends on (parts restart it): a
@@ -101,5 +81,40 @@ object Main {
       val (jobPath, n) = Cc2Dataset.run(cfg, wats, factory)
       println(s"""{"output":"$jobPath","rows":$n}""")
     } finally SparkSession.getActiveSession.getOrElse(spark).stop()
+  }
+
+  /** The run's config from its parsed flags. A bad count fails here,
+    * before any session is built, and its error names the flag.
+    */
+  private[graft] def config(a: Map[String, String]): Cc2Config = {
+    // --multipart, --wat_count and --wat_index_count take a positive
+    // count: 0 would group the paths by zero, or run a "multipart" job
+    // of one part (ceil(n / 0.0) is Int.MaxValue)
+    def count(key: String, v: String): Int = {
+      val n = v.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"--$key takes a positive count, got: $v"))
+      require(n > 0, s"--$key takes a positive count, got: $v")
+      n
+    }
+    // absent count flags keep Cc2Config's reference-parity defaults
+    // (newest 1 index, 100 sampled WATs — README.md:54); the explicit
+    // sentinel "all" disables the cap. Mapping absent to None here would
+    // silently read every index file and shuffle millions of WAT paths.
+    val dflt = Cc2Config(outputPath = a("output_path"))
+    def countFlag(key: String, d: Option[Int]): Option[Int] =
+      a.get(key) match {
+        case None        => d
+        case Some("all") => None
+        case Some(v)     => Some(count(key, v))
+      }
+    dflt.copy(
+      documentType = a.getOrElse("document_type", "image"),
+      watIndexCount = countFlag("wat_index_count", dflt.watIndexCount),
+      watCount = countFlag("wat_count", dflt.watCount),
+      multipart = a.get("multipart").map(count("multipart", _)),
+      sourceCcProtocol = a.getOrElse("source_cc_protocol", dflt.sourceCcProtocol),
+      shuffle = a.get("shuffle").forall(_.toBoolean),
+      resume = a.get("resume"),
+      seed = a.get("seed").map(_.toLong).getOrElse(42L))
   }
 }

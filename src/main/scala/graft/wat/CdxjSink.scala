@@ -1,6 +1,5 @@
 package graft.wat
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
@@ -19,8 +18,9 @@ import org.apache.spark.sql.functions._
   * 100 TB posture: ONE range exchange of narrow index LINES (strings —
   * never archive bytes; the global SURT sort is the format's defining
   * property, so the exchange is the workload), then a pure
-  * per-partition imperative writer (same atomic temp+rename publish,
-  * deterministic bytes, and retry idempotence as [[WarcSink]]). The
+  * per-partition imperative writer (the same [[WarcSink.publishShard]]
+  * temp+rename publish, deterministic bytes and retry idempotence as
+  * the WARC shards; each block one [[WarcSink.gzipMember]]). The
   * `cluster.idx` is assembled driver-side from ONE ROW PER BLOCK
   * (thousands of lines per block — tens of MB of sidecar for a
   * 300M-line monthly index, the size CC itself publishes and
@@ -83,28 +83,13 @@ object CdxjSink {
       .sortWithinPartitions("value")
       .mapPartitions { it =>
         if (!it.hasNext) Iterator.empty
-        else {
-          val ctx = org.apache.spark.TaskContext.get()
-          val pid = if (ctx == null) 0 else ctx.partitionId()
-          val attempt = if (ctx == null) 0L else ctx.taskAttemptId()
-          val conf = confBc.value.value
-          val name = f"cdx-$pid%05d.gz"
-          val outPath = new Path(dir, name)
-          val tmpPath = new Path(dir, f".cdx-$pid%05d-$attempt.tmp")
-          val fs = outPath.getFileSystem(conf)
-          val out = fs.create(tmpPath, true)
-          val blockRows =
-            Seq.newBuilder[(Int, String, Long, Long)]
-          try {
+        else WarcSink.publishShard(confBc.value.value, dir, "cdx", ".gz") {
+          (pid, _, out) =>
+            val blockRows = Seq.newBuilder[(Int, String, Long, Long)]
             var off = 0L
-            val block = new scala.collection.mutable.ArrayBuffer[String](
-              blockLines)
-            def flush(): Unit = if (block.nonEmpty) {
-              val bos = new ByteArrayOutputStream()
-              val gz = new java.util.zip.GZIPOutputStream(bos)
-              block.foreach(l => gz.write((l + "\n").getBytes(UTF_8)))
-              gz.close()
-              val member = bos.toByteArray
+            it.grouped(blockLines).foreach { block =>
+              val member = WarcSink.gzipMember(
+                block.map(_ + "\n").mkString.getBytes(UTF_8))
               out.write(member)
               // the block key is the first line's `<surt> <ts>` prefix
               val head = block.head
@@ -113,21 +98,8 @@ object CdxjSink {
               val key = if (s2 > 0) head.substring(0, s2) else head
               blockRows += ((pid, key, off, member.length.toLong))
               off += member.length
-              block.clear()
             }
-            it.foreach { l =>
-              block += l
-              if (block.size >= blockLines) flush()
-            }
-            flush()
-          } finally out.close()
-          // same atomic publish as WarcSink: deterministic bytes make
-          // last-publish-wins exactly-once in content
-          fs.delete(outPath, false)
-          if (!fs.rename(tmpPath, outPath))
-            throw new java.io.IOException(
-              s"could not publish CDXJ shard $outPath")
-          blockRows.result().iterator
+            blockRows.result().iterator
         }
       }
       // one row per BLOCK — the cluster.idx's own cardinality; this
@@ -141,16 +113,11 @@ object CdxjSink {
         seq.toLong))
       sb.append('\n')
     }
-    val conf = spark.sparkContext.hadoopConfiguration
     val idxPath = new Path(dir, "cluster.idx")
-    val tmpIdx = new Path(dir, ".cluster.idx.tmp")
-    val fs = idxPath.getFileSystem(conf)
-    val out = fs.create(tmpIdx, true)
-    try out.write(sb.toString.getBytes(UTF_8)) finally out.close()
-    fs.delete(idxPath, false)
-    if (!fs.rename(tmpIdx, idxPath))
-      throw new java.io.IOException(
-        s"could not publish cluster.idx under $dir")
+    WarcSink.publish(
+      idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(dir, ".cluster.idx.tmp"), idxPath)(
+      _.write(sb.toString.getBytes(UTF_8)))
     idxPath.toString
   }
 }

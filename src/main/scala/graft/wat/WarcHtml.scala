@@ -245,9 +245,10 @@ object WarcHtml {
     if (payload.length < 16) return None
     if (!(payload(0) == 'H' && payload(1) == 'T' && payload(2) == 'T' &&
       payload(3) == 'P' && payload(4) == '/')) return None
-    val sep = indexOfCrlfCrlf(payload)
-    if (sep < 0) return None
-    val headers = new String(payload, 0, sep, UTF_8)
+    // the status-line prefix is checked above, so 0 means no terminator
+    val bodyStart = CcIndex.httpBodyStart(payload)
+    if (bodyStart == 0) return None
+    val headers = new String(payload, 0, bodyStart - 4, UTF_8)
       .toLowerCase(java.util.Locale.ROOT) // "CHUNKED" under tr-TR otherwise
     def headerValue(name: String): Option[String] = {
       val probe = "\n" + name + ":"
@@ -277,7 +278,7 @@ object WarcHtml {
       else Some(ct.substring(at + 8).takeWhile(c => c != ';' && c != ' ')
         .trim)
     }
-    Some(HttpHead(sep + 4, chunked, gzip, charset))
+    Some(HttpHead(bodyStart, chunked, gzip, charset))
   }
 
   /** Header-only acceptance check: Some(body start) iff [[parseHead]]
@@ -375,16 +376,6 @@ object WarcHtml {
             h.charset)._1
       } catch { case scala.util.control.NonFatal(_) => "" }
     }
-
-  private def indexOfCrlfCrlf(b: Array[Byte]): Int = {
-    var i = 0
-    while (i + 3 < b.length) {
-      if (b(i) == '\r' && b(i + 1) == '\n' && b(i + 2) == '\r' &&
-        b(i + 3) == '\n') return i
-      i += 1
-    }
-    -1
-  }
 }
 
 /** WARC(raw HTML) → DocLink extraction: the WAT pipeline's structure —

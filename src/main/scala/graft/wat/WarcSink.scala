@@ -1,9 +1,13 @@
 package graft.wat
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, IOException, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.zip.GZIPOutputStream
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,6 +40,13 @@ import org.apache.spark.sql.functions._
   * buffer), and the commit is write-to-temp + atomic rename keyed by
   * partition id, so a retried or speculative task republishes the same
   * shard instead of duplicating records.
+  *
+  * This object is also the package's one archive writer: the WARC
+  * record ([[warcRecord]]), the HTTP response envelope
+  * ([[httpResponse]]), the gzip member ([[gzipMember]]), the record id
+  * ([[recordId]]) and the temp-then-rename publish ([[publish]],
+  * [[publishShard]]) are written here once, and [[WatSink]],
+  * [[WetSink]], [[CdxjSink]] and [[WatFixture]] call them.
   */
 object WarcSink {
 
@@ -45,23 +56,35 @@ object WarcSink {
     * across retries, which is also what makes the shard republish
     * idempotent byte-for-byte).
     */
-  private[wat] def recordId(seed: Array[Byte]): String = {
-    val d = java.security.MessageDigest.getInstance("MD5").digest(seed)
+  private def recordId(seed: Array[Byte]): String = {
+    val d = MessageDigest.getInstance("MD5").digest(seed)
     val hex = d.map("%02x".format(_)).mkString
     s"urn:uuid:${hex.substring(0, 8)}-${hex.substring(8, 12)}-" +
       s"${hex.substring(12, 16)}-${hex.substring(16, 20)}-" +
       hex.substring(20, 32)
   }
 
-  private[wat] def recordId(url: String): String =
+  private def recordId(url: String): String =
     recordId(url.getBytes(UTF_8))
+
+  /** The record id of a capture: seeded on url ‖ 0 ‖ sha1(body), so two
+    * captures of the SAME url with different bytes (a crawl's
+    * duplicate-url reality) keep distinct ids while staying
+    * deterministic.
+    */
+  private[wat] def recordId(url: String, body: Array[Byte]): String = {
+    val seed = new ByteArrayOutputStream(url.length + 21)
+    seed.write(url.getBytes(UTF_8)); seed.write(0)
+    seed.write(MessageDigest.getInstance("SHA-1").digest(body))
+    recordId(seed.toByteArray)
+  }
 
   /** The HTTP reason phrase for the re-emitted status line — a small
     * fixed table (anything else gets the bare generic), chosen for
     * determinism, not completeness: WARC consumers key on the numeric
     * code.
     */
-  private[wat] def reasonPhrase(status: Int): String = status match {
+  private def reasonPhrase(status: Int): String = status match {
     case 200 => "OK"
     case 301 => "Moved Permanently"
     case 302 => "Found"
@@ -73,114 +96,122 @@ object WarcSink {
     case _   => "Status"
   }
 
-  /** Assemble one complete WARC record block (headers + payload +
-    * record terminator) and gzip it as its own member.
+  /** The HTTP response envelope: status line, `Content-Type` and, when
+    * there is a body, its `Content-Length` and the body itself. `None`
+    * is a revisit record's headers-only payload.
     */
-  private def gzipRecord(head: Array[Byte], payload: Array[Byte])
-      : Array[Byte] = {
-    val rec = new ByteArrayOutputStream(head.length + payload.length + 4)
-    rec.write(head); rec.write(payload)
+  private[wat] def httpResponse(status: Int, contentType: String,
+      body: Option[Array[Byte]]): Array[Byte] = {
+    val head = s"HTTP/1.1 $status ${reasonPhrase(status)}\r\n" +
+      s"Content-Type: $contentType\r\n" +
+      body.fold("")(b => s"Content-Length: ${b.length}\r\n") + "\r\n"
+    head.getBytes(UTF_8) ++ body.getOrElse(Array.emptyByteArray)
+  }
+
+  /** One WARC record, the framing every writer in this package shares:
+    * the version line, `WARC-Type`, `headers` in the caller's order,
+    * `Content-Type`, `Content-Length`, the block and the CRLF CRLF
+    * record terminator.
+    */
+  private[wat] def warcRecord(warcType: String,
+      headers: Seq[(String, String)], contentType: String,
+      block: Array[Byte]): Array[Byte] = {
+    val sb = new StringBuilder(s"WARC/1.0\r\nWARC-Type: $warcType\r\n")
+    headers.foreach { case (k, v) => sb.append(s"$k: $v\r\n") }
+    sb.append(s"Content-Type: $contentType\r\n")
+    sb.append(s"Content-Length: ${block.length}\r\n\r\n")
+    val head = sb.toString.getBytes(UTF_8)
+    val rec = new ByteArrayOutputStream(head.length + block.length + 4)
+    rec.write(head); rec.write(block)
     rec.write("\r\n\r\n".getBytes(UTF_8))
+    rec.toByteArray
+  }
+
+  /** `bytes` as one gzip member — one per WARC record (the framing
+    * [[CcIndex.memberSpans]] and the ranged fetch rely on), one per
+    * CDXJ block.
+    */
+  private[wat] def gzipMember(bytes: Array[Byte]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(rec.toByteArray); gz.close()
+    val gz = new GZIPOutputStream(bos)
+    gz.write(bytes); gz.close()
     bos.toByteArray
+  }
+
+  /** Write `tmp` through `write`, then publish it as `target`:
+    * delete-then-rename, so a retried task (which rewrites the SAME
+    * deterministic bytes) makes last-publish-wins exactly-once in
+    * content. A `write` that throws leaves no temp file behind.
+    */
+  private[wat] def publish[A](fs: FileSystem, tmp: Path, target: Path)(
+      write: OutputStream => A): A = {
+    val out = fs.create(tmp, true)
+    val result =
+      try try write(out) finally out.close()
+      catch { case e: Throwable => fs.delete(tmp, false); throw e }
+    fs.delete(target, false)
+    if (!fs.rename(tmp, target))
+      throw new IOException(s"could not publish $target")
+    result
+  }
+
+  /** [[publish]] this task's shard `$prefix-NNNNN$suffix` under `dir`
+    * (NNNNN the partition id, so a retry republishes the same name)
+    * through a temp file named for the task attempt. `write` receives
+    * the partition id, the shard's path and its stream.
+    */
+  private[wat] def publishShard[A](conf: Configuration, dir: String,
+      prefix: String, suffix: String)(
+      write: (Int, Path, OutputStream) => A): A = {
+    val ctx = TaskContext.get()
+    val pid = if (ctx == null) 0 else ctx.partitionId()
+    val attempt = if (ctx == null) 0L else ctx.taskAttemptId()
+    val target = new Path(dir, f"$prefix-$pid%05d$suffix")
+    publish(target.getFileSystem(conf),
+      new Path(dir, f".$prefix-$pid%05d-$attempt.tmp"), target)(
+      out => write(pid, target, out))
   }
 
   /** The shard's leading `warcinfo` record (application/warc-fields
     * body) — what real CC shards open with and what the engine's own
     * fixtures write; record id derived from the shard filename so the
-    * member stays deterministic per shard.
+    * record stays deterministic per shard.
     */
-  private[wat] def warcinfoMember(filename: String, warcDate: String)
-      : Array[Byte] = {
-    val body = ("software: graft-warcsink\r\n" +
-      "format: WARC File Format 1.0\r\n").getBytes(UTF_8)
-    val head = (s"WARC/1.0\r\n" +
-      s"WARC-Type: warcinfo\r\n" +
-      s"WARC-Record-ID: <${recordId(s"warcinfo:$filename")}>\r\n" +
-      s"WARC-Date: $warcDate\r\n" +
-      s"WARC-Filename: $filename\r\n" +
-      s"Content-Type: application/warc-fields\r\n" +
-      s"Content-Length: ${body.length}\r\n\r\n").getBytes(UTF_8)
-    gzipRecord(head, body)
-  }
+  private def warcinfoRecord(filename: String, warcDate: String)
+      : Array[Byte] =
+    warcRecord("warcinfo", Seq(
+      "WARC-Record-ID" -> s"<${recordId(s"warcinfo:$filename")}>",
+      "WARC-Date" -> warcDate,
+      "WARC-Filename" -> filename),
+      "application/warc-fields",
+      ("software: graft-warcsink\r\n" +
+        "format: WARC File Format 1.0\r\n").getBytes(UTF_8))
 
-  /** One record → a complete single-member gzip WARC `response` record
-    * (re-assembled HTTP envelope + WARC headers incl. the payload
-    * digest) with an arbitrary BINARY body and the record's own
-    * status/content type. The record id seeds on url + body sha1 so
-    * two captures of the SAME url with different bytes (a crawl's
-    * duplicate-url reality) keep distinct ids while staying
-    * deterministic.
+  /** One capture → a WARC `response` record: the HTTP envelope around
+    * `body` under the given status and content type, and WARC headers
+    * incl. the payload digest.
     */
-  private[wat] def responseMemberRaw(url: String, status: Int,
+  private def responseRecord(id: String, url: String, status: Int,
       contentType: String, body: Array[Byte],
       warcDate: String): Array[Byte] = {
-    val ct = if (contentType == null || contentType.isEmpty)
-      "application/octet-stream" else contentType
-    val http = (s"HTTP/1.1 $status ${reasonPhrase(status)}\r\n" +
-      s"Content-Type: $ct\r\n" +
-      s"Content-Length: ${body.length}\r\n\r\n").getBytes(UTF_8)
-    val payload = new Array[Byte](http.length + body.length)
-    System.arraycopy(http, 0, payload, 0, http.length)
-    System.arraycopy(body, 0, payload, http.length, body.length)
-    val digest = CcIndex.payloadDigest(payload)
-    val idSeed = new ByteArrayOutputStream(url.length + 21)
-    idSeed.write(url.getBytes(UTF_8)); idSeed.write(0)
-    idSeed.write(
-      java.security.MessageDigest.getInstance("SHA-1").digest(body))
-    val head = (s"WARC/1.0\r\n" +
-      s"WARC-Type: response\r\n" +
-      s"WARC-Record-ID: <${recordId(idSeed.toByteArray)}>\r\n" +
-      s"WARC-Date: $warcDate\r\n" +
-      s"WARC-Target-URI: $url\r\n" +
-      s"WARC-Payload-Digest: sha1:$digest\r\n" +
-      s"Content-Type: application/http; msgtype=response\r\n" +
-      s"Content-Length: ${payload.length}\r\n\r\n").getBytes(UTF_8)
-    gzipRecord(head, payload)
-  }
-
-  /** One page → a complete single-member gzip WARC `response` record
-    * (HTTP envelope + WARC headers incl. the payload digest). Record
-    * id stays seeded on the url alone — the historical page-corpus
-    * contract (one page per url), kept so existing shards republish
-    * byte-identically.
-    */
-  private[wat] def responseMember(url: String, html: String,
-      warcDate: String): Array[Byte] = {
-    val body = html.getBytes(UTF_8)
-    val http = (s"HTTP/1.1 200 OK\r\n" +
-      s"Content-Type: text/html; charset=UTF-8\r\n" +
-      s"Content-Length: ${body.length}\r\n\r\n").getBytes(UTF_8)
-    val payload = new Array[Byte](http.length + body.length)
-    System.arraycopy(http, 0, payload, 0, http.length)
-    System.arraycopy(body, 0, payload, http.length, body.length)
-    val digest = CcIndex.payloadDigest(payload)
-    val head = (s"WARC/1.0\r\n" +
-      s"WARC-Type: response\r\n" +
-      s"WARC-Record-ID: <${recordId(url)}>\r\n" +
-      s"WARC-Date: $warcDate\r\n" +
-      s"WARC-Target-URI: $url\r\n" +
-      s"WARC-Payload-Digest: sha1:$digest\r\n" +
-      s"Content-Type: application/http; msgtype=response\r\n" +
-      s"Content-Length: ${payload.length}\r\n\r\n").getBytes(UTF_8)
-    gzipRecord(head, payload)
+    val payload = httpResponse(status, contentType, Some(body))
+    warcRecord("response", Seq(
+      "WARC-Record-ID" -> s"<$id>",
+      "WARC-Date" -> warcDate,
+      "WARC-Target-URI" -> url,
+      "WARC-Payload-Digest" -> s"sha1:${CcIndex.payloadDigest(payload)}"),
+      "application/http; msgtype=response", payload)
   }
 
   /** The shared per-partition shard writer: warcinfo lead + one gzip
-    * member per row, write-to-temp + atomic rename keyed by partition
-    * id (a retried task rewrites the SAME deterministic bytes, so
-    * last-publish-wins is exactly-once in content). Returns the
-    * manifest rows `(path, records, bytes)` for non-empty partitions.
-    */
-  /** `member` receives (row, warcDate, shardName) — the name lets a
-    * record reference its own shard where the format calls for it.
+    * member per row, each row's record built by `record`, published
+    * through [[publishShard]]. Returns the manifest rows `(path,
+    * records, bytes)` for non-empty partitions.
     */
   private[wat] def writeShards[A](rows: org.apache.spark.sql.Dataset[A],
       dir: String, prefix: String, warcDate: String,
       suffix: String = ".warc.gz")(
-      member: (A, String, String) => Array[Byte]): DataFrame = {
+      record: A => Array[Byte]): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
     val confBc = spark.sparkContext.broadcast(
@@ -188,38 +219,19 @@ object WarcSink {
         spark.sparkContext.hadoopConfiguration))
     rows.mapPartitions { it =>
       if (!it.hasNext) Iterator.empty
-      else {
-        val ctx = org.apache.spark.TaskContext.get()
-        val pid = if (ctx == null) 0 else ctx.partitionId()
-        val attempt = if (ctx == null) 0L else ctx.taskAttemptId()
-        val conf = confBc.value.value
-        val name = f"$prefix-$pid%05d$suffix"
-        val outPath = new Path(dir, name)
-        val tmpPath = new Path(dir, f".$prefix-$pid%05d-$attempt.tmp")
-        val fs = outPath.getFileSystem(conf)
-        val out = fs.create(tmpPath, true)
-        var n = 0L
+      else Iterator.single(publishShard(confBc.value.value, dir, prefix,
+          suffix) { (_, target, out) =>
         var bytes = 0L
-        try {
-          val info = warcinfoMember(name, warcDate)
-          out.write(info)
-          bytes += info.length
-          it.foreach { row =>
-            val m = member(row, warcDate, name)
-            out.write(m)
-            n += 1
-            bytes += m.length
-          }
-        } finally out.close()
-        // atomic publish: delete-then-rename keyed by partition id —
-        // a retried task rewrites the SAME deterministic bytes, so
-        // last-publish-wins is exactly-once in content
-        fs.delete(outPath, false)
-        if (!fs.rename(tmpPath, outPath))
-          throw new java.io.IOException(
-            s"could not publish WARC shard $outPath")
-        Iterator.single((outPath.toString, n, bytes))
-      }
+        def put(rec: Array[Byte]): Unit = {
+          val m = gzipMember(rec)
+          out.write(m)
+          bytes += m.length
+        }
+        put(warcinfoRecord(target.getName, warcDate))
+        var n = 0L
+        it.foreach { row => put(record(row)); n += 1 }
+        (target.toString, n, bytes)
+      })
     }.toDF("path", "records", "bytes")
   }
 
@@ -239,10 +251,12 @@ object WarcSink {
     import spark.implicits._
     writeShards(pages
       .select(col("page_url").cast("string"), col("html").cast("string"))
-      .as[(String, String)], dir, prefix, warcDate) {
-      (row, date, _) =>
-        responseMember(if (row._1 == null) "" else row._1,
-          if (row._2 == null) "" else row._2, date)
+      .as[(String, String)], dir, prefix, warcDate) { row =>
+      // the page corpus's record id stays seeded on the url alone (one
+      // page per url), so existing shards republish byte-identically
+      val url = if (row._1 == null) "" else row._1
+      responseRecord(recordId(url), url, 200, "text/html; charset=UTF-8",
+        (if (row._2 == null) "" else row._2).getBytes(UTF_8), warcDate)
     }
   }
 
@@ -265,10 +279,12 @@ object WarcSink {
         col("content_type").cast("string"),
         col("body").cast("binary"))
       .as[(String, Int, String, Array[Byte])], dir, prefix, warcDate) {
-      (row, date, _) =>
-        responseMemberRaw(if (row._1 == null) "" else row._1, row._2,
-          row._3,
-          if (row._4 == null) Array.emptyByteArray else row._4, date)
+      row =>
+        val url = if (row._1 == null) "" else row._1
+        val body = if (row._4 == null) Array.emptyByteArray else row._4
+        responseRecord(recordId(url, body), url, row._2,
+          if (row._3 == null || row._3.isEmpty) "application/octet-stream"
+          else row._3, body, warcDate)
     }
   }
 }

@@ -1,8 +1,13 @@
 package graft.wat
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
+import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.GZIPOutputStream
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.queries.ExtQueries
 
 /** Synthetic `.warc.wat.gz` fixture mirroring the envelope shape the
   * reference navigates (FIXTURES.md §B) — zero-egress replacement for the
@@ -11,35 +16,30 @@ import java.util.zip.GZIPOutputStream
   */
 object WatFixture {
 
-  def warcRecord(warcType: String, payload: String,
-      targetUri: Option[String] = None,
-      contentType: String = "application/json"): Array[Byte] =
-    warcRecordBytes(warcType, payload.getBytes(UTF_8), targetUri,
-      contentType)
+  /** A JSON-bodied record, the shape every WAT fixture record takes. */
+  private def jsonRecord(warcType: String, json: String,
+      targetUri: Option[String] = None): Array[Byte] =
+    WarcSink.warcRecord(warcType,
+      targetUri.map("WARC-Target-URI" -> _).toSeq, "application/json",
+      json.getBytes(UTF_8))
 
-  def warcRecordBytes(warcType: String, body: Array[Byte],
-      targetUri: Option[String],
-      contentType: String,
-      extraHeaders: Seq[(String, String)] = Nil): Array[Byte] = {
-    val sb = new StringBuilder
-    sb.append("WARC/1.0\r\n")
-    sb.append(s"WARC-Type: $warcType\r\n")
-    targetUri.foreach(u => sb.append(s"WARC-Target-URI: $u\r\n"))
-    extraHeaders.foreach { case (k, v) => sb.append(s"$k: $v\r\n") }
-    sb.append(s"Content-Type: $contentType\r\n")
-    sb.append(s"Content-Length: ${body.length}\r\n")
-    sb.append("\r\n")
-    val head = sb.toString.getBytes(UTF_8)
-    val out = new ByteArrayOutputStream()
-    out.write(head); out.write(body); out.write("\r\n\r\n".getBytes(UTF_8))
-    out.toByteArray
-  }
+  /** A fixture `response` or `revisit` record: target URI, then any
+    * `extra` headers, around an HTTP message.
+    */
+  private def httpRecord(warcType: String, uri: String, http: Array[Byte],
+      extra: (String, String)*): Array[Byte] =
+    WarcSink.warcRecord(warcType, ("WARC-Target-URI" -> uri) +: extra,
+      "application/http; msgtype=response", http)
 
-  private def gzipMember(bytes: Array[Byte]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val gz = new GZIPOutputStream(bos)
-    gz.write(bytes); gz.close()
-    bos.toByteArray
+  /** Write `records` to `path` as an archive, each its own gzip member
+    * (multi-member decompression, like real CC archives).
+    */
+  private def writeArchive(path: String,
+      records: Iterator[Array[Byte]]): String = {
+    val out = new FileOutputStream(path)
+    try records.foreach(r => out.write(WarcSink.gzipMember(r)))
+    finally out.close()
+    path
   }
 
   private def envelope(pageUrl: String, headBase: Option[String],
@@ -80,9 +80,9 @@ object WatFixture {
   /** The canonical fixture records (FIXTURES.md §B). */
   def records: Seq[Array[Byte]] = Seq(
     // warcinfo record — must be filtered out by type
-    warcRecord("warcinfo", """{"software": "graft-fixture"}"""),
+    jsonRecord("warcinfo", """{"software": "graft-fixture"}"""),
     // r1: full record with Head.Base and every link kind
-    warcRecord("metadata", envelope("https://example.com/page/1",
+    jsonRecord("metadata", envelope("https://example.com/page/1",
       Some("https://example.com/base/"), Seq(
         ("IMG@/src", "img/cat.jpg", "a cat", ""),
         ("IMG@/src", "https://cdn.example.com/dog.png", "", ""),
@@ -93,35 +93,30 @@ object WatFixture {
         ("A@/href", "ftp://bad.example/file.mp3", "", "dropped by scheme filter"))),
       Some("https://example.com/page/1")),
     // r2-r4: missing-ancestor skip paths (main.py:146-153)
-    warcRecord("metadata",
+    jsonRecord("metadata",
       """{"Container": {"Filename": "f"}, "Envelope": {"Payload-Metadata": {}}}"""),
-    warcRecord("metadata",
+    jsonRecord("metadata",
       """{"Envelope": {"Payload-Metadata": {"HTTP-Response-Metadata": {}}}}"""),
-    warcRecord("metadata",
+    jsonRecord("metadata",
       """{"Envelope": {"Payload-Metadata": {"HTTP-Response-Metadata": {"HTML-Metadata": {}}}}}"""),
     // r5: malformed JSON — per-record tolerance (main.py:139-142)
-    warcRecord("metadata", """{"Envelope": {"broken..."""),
+    jsonRecord("metadata", """{"Envelope": {"broken..."""),
     // r6: no Head.Base → base = WARC-Target-URI (main.py:159)
-    warcRecord("metadata", envelope("https://nobase.example.com/dir/page.html",
+    jsonRecord("metadata", envelope("https://nobase.example.com/dir/page.html",
       None, Seq(("IMG@/src", "pic.png", "pic", ""))),
       Some("https://nobase.example.com/dir/page.html")),
     // r7: duplicate (alt, url) of r1's cat (already absolute) → dedup food
-    warcRecord("metadata", envelope("https://example.com/page/7",
+    jsonRecord("metadata", envelope("https://example.com/page/7",
       None, Seq(("IMG@/src", "https://example.com/base/img/cat.jpg", "a cat", ""))),
       Some("https://example.com/page/7")),
     // r8: text link with query string — split-on-dot rejects (main.py:56-62)
-    warcRecord("metadata", envelope("https://example.com/page/8",
+    jsonRecord("metadata", envelope("https://example.com/page/8",
       None, Seq(("A@/href", "a.pdf?x=1", "", "qs doc"))),
       Some("https://example.com/page/8"))
   )
 
   /** Write the fixture as a multi-member gzip WARC; returns the path. */
-  def write(path: String): String = {
-    val out = new FileOutputStream(path)
-    try records.foreach(r => out.write(gzipMember(r)))
-    finally out.close()
-    path
-  }
+  def write(path: String): String = writeArchive(path, records.iterator)
 
   /** Deterministic synthetic WAT of arbitrary size (seeded) — for
     * extraction throughput benchmarks. Each record carries a mix of
@@ -163,33 +158,28 @@ object WatFixture {
   def syntheticWat(path: String, nRecords: Int, linksPerRecord: Int,
       seed: Long, bloatUnits: Int = 0): String = {
     val rnd = new scala.util.Random(seed)
-    val out = new FileOutputStream(path)
-    try {
-      (0 until nRecords).foreach { r =>
-        val (page, base, links) = syntheticPageLinks(rnd, r, linksPerRecord)
-        val (respEx, htmlEx) =
-          if (bloatUnits <= 0) ("", "")
-          else {
-            val b = new scala.util.Random(seed * 31 + r) // own stream
-            val headers = (s""""Headers": {"Content-Type": "text/html; charset=UTF-8", """ +
-              s""""Server": "nginx/1.${b.nextInt(30)}", "X-Request-Id": "${b.nextLong().toHexString}", """ +
-              s""""Cache-Control": "max-age=${b.nextInt(86400)}", "Set-Cookie": "sess=${b.nextLong().toHexString}; Path=/"}, """) +
-              s""""Headers-Length": "${200 + b.nextInt(800)}", "Entity-Length": "${5000 + b.nextInt(90000)}", """
-            val metas = (0 until bloatUnits).map { i =>
-              s"""{"name": "meta-$i", "content": "${(0 until 10).map(_ => s"v${b.nextInt(1000)}").mkString(" ")}"}"""
-            }.mkString("[", ", ", "]")
-            val scripts = (0 until bloatUnits * 6).map { i =>
-              s"""{"path": "SCRIPT@/src", "url": "https://static.site${b.nextInt(100)}.test/js/app-$i-${b.nextLong().toHexString}.min.js"}"""
-            }.mkString("[", ", ", "]")
-            (headers,
-              s""""Title": "page $r ${b.nextLong().toHexString}", "Metas": $metas, "Scripts": $scripts, """)
-          }
-        out.write(gzipMember(warcRecord("metadata",
-          envelope(page, base, links, respEx, htmlEx),
-          Some(page))))
-      }
-    } finally out.close()
-    path
+    writeArchive(path, (0 until nRecords).iterator.map { r =>
+      val (page, base, links) = syntheticPageLinks(rnd, r, linksPerRecord)
+      val (respEx, htmlEx) =
+        if (bloatUnits <= 0) ("", "")
+        else {
+          val b = new scala.util.Random(seed * 31 + r) // own stream
+          val headers = (s""""Headers": {"Content-Type": "text/html; charset=UTF-8", """ +
+            s""""Server": "nginx/1.${b.nextInt(30)}", "X-Request-Id": "${b.nextLong().toHexString}", """ +
+            s""""Cache-Control": "max-age=${b.nextInt(86400)}", "Set-Cookie": "sess=${b.nextLong().toHexString}; Path=/"}, """) +
+            s""""Headers-Length": "${200 + b.nextInt(800)}", "Entity-Length": "${5000 + b.nextInt(90000)}", """
+          val metas = (0 until bloatUnits).map { i =>
+            s"""{"name": "meta-$i", "content": "${(0 until 10).map(_ => s"v${b.nextInt(1000)}").mkString(" ")}"}"""
+          }.mkString("[", ", ", "]")
+          val scripts = (0 until bloatUnits * 6).map { i =>
+            s"""{"path": "SCRIPT@/src", "url": "https://static.site${b.nextInt(100)}.test/js/app-$i-${b.nextLong().toHexString}.min.js"}"""
+          }.mkString("[", ", ", "]")
+          (headers,
+            s""""Title": "page $r ${b.nextLong().toHexString}", "Metas": $metas, "Scripts": $scripts, """)
+        }
+      jsonRecord("metadata", envelope(page, base, links, respEx, htmlEx),
+        Some(page))
+    })
   }
 
   /** HTML page carrying exactly the given WAT-shaped link tuples, in
@@ -231,21 +221,13 @@ object WatFixture {
   def syntheticWarc(path: String, nRecords: Int, linksPerRecord: Int,
       seed: Long): String = {
     val rnd = new scala.util.Random(seed)
-    val out = new FileOutputStream(path)
-    try {
-      out.write(gzipMember(warcRecord("warcinfo",
-        """{"software": "graft-fixture-warc"}""")))
-      (0 until nRecords).foreach { r =>
+    writeArchive(path, Iterator.single(jsonRecord("warcinfo",
+      """{"software": "graft-fixture-warc"}""")) ++
+      (0 until nRecords).iterator.map { r =>
         val (page, base, links) = syntheticPageLinks(rnd, r, linksPerRecord)
-        val html = pageHtml(r, base, links).getBytes(UTF_8)
-        val http = (s"HTTP/1.1 200 OK\r\n" +
-          s"Content-Type: text/html; charset=UTF-8\r\n" +
-          s"Content-Length: ${html.length}\r\n\r\n").getBytes(UTF_8)
-        out.write(gzipMember(warcRecordBytes("response", http ++ html,
-          Some(page), "application/http; msgtype=response")))
-      }
-    } finally out.close()
-    path
+        httpRecord("response", page, WarcSink.httpResponse(200,
+          HtmlType, Some(pageHtml(r, base, links).getBytes(UTF_8))))
+      })
   }
 
   /** Bump when syntheticWat generation changes — the tmp cache below is
@@ -274,30 +256,56 @@ object WatFixture {
   def ensureFleet64(): Seq[String] =
     ensureBenchWats(64, BenchFleet._2, BenchFleet._3)
 
+  /** The fixture cache's one publish step: unless `done` exists, build
+    * `target` under a unique temp name beside it, rename it into
+    * place, and accept a concurrent winner's copy. A process killed
+    * mid-generation leaves no truncated target for a later run to
+    * silently reuse, and the temp never outlives the call.
+    */
+  private def cached(target: File, done: File)(build: File => Unit)
+      : String = {
+    if (!done.exists()) {
+      val tmp = new File(target.getParentFile, target.getName +
+        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
+      try {
+        build(tmp)
+        if (!tmp.renameTo(target) && !done.exists())
+          throw new java.io.IOException(s"could not materialize $target")
+      } finally FileUtils.deleteQuietly(tmp)
+    }
+    target.getAbsolutePath
+  }
+
+  /** The cache dir `$name-v$GenVersion` under the JVM's tmpdir. */
+  private def cacheDir(name: String): File = {
+    val dir = new File(System.getProperty("java.io.tmpdir"),
+      s"$name-v$GenVersion")
+    dir.mkdirs()
+    dir
+  }
+
+  /** The content tag of a documents-table shard set
+    * ([[ensureDocShards]]), read back from its first shard's name.
+    */
+  private def docTag(warcs: Seq[String]): String =
+    new File(warcs.head).getName.stripPrefix("docs-")
+      .stripSuffix("-0.warc.gz")
+
+  private val HtmlType = "text/html; charset=UTF-8"
+  private val OctetType = "application/octet-stream"
+
   /** Idempotently materialize `n` deterministic bench WATs in tmp.
     * `bloatUnits` variants (same seeds → same link stream, fatter
     * envelopes) cache under distinct names.
     */
   def ensureBenchWats(n: Int, nRecords: Int = 500,
       linksPerRecord: Int = 20, bloatUnits: Int = 0): Seq[String] = {
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft-bench-wats-v$GenVersion")
-    dir.mkdirs()
+    val dir = cacheDir("graft-bench-wats")
     val tag = if (bloatUnits > 0) s"-b$bloatUnits" else ""
     (0 until n).map { i =>
-      val f = new java.io.File(dir, s"bench-$nRecords-$linksPerRecord-$i$tag.warc.wat.gz")
-      if (!f.exists()) {
-        // write-then-rename: a process killed mid-generation must not
-        // leave a truncated archive that a later run silently reuses
-        val tmp = new java.io.File(dir, f.getName +
-          s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-        syntheticWat(tmp.getAbsolutePath, nRecords, linksPerRecord,
-          seed = 1000L + i, bloatUnits = bloatUnits)
-        if (!tmp.renameTo(f) && !f.exists())
-          throw new java.io.IOException(s"could not materialize $f")
-        tmp.delete()
-      }
-      f.getAbsolutePath
+      val f = new File(dir, s"bench-$nRecords-$linksPerRecord-$i$tag.warc.wat.gz")
+      cached(f, f)(tmp => syntheticWat(tmp.getAbsolutePath, nRecords,
+        linksPerRecord, seed = 1000L + i, bloatUnits = bloatUnits))
     }
   }
 
@@ -313,21 +321,19 @@ object WatFixture {
     * the shards, or the Spark side would read stale pages while the
     * oracle reads fresh parquet) PLUS the shard count (a 3-shard
     * request must never reuse a 4-shard layout: the id % shards
-    * membership differs) -- and write-then-rename each missing shard
-    * through `writeShard`.
+    * membership differs) -- and write each missing shard's `records`
+    * through [[cached]].
     */
-  private def ensureDocShards(spark: org.apache.spark.sql.SparkSession,
+  private def ensureDocShards(spark: SparkSession,
       sfDir: String, shards: Int, dirName: String, suffix: String)(
-      writeShard: (FileOutputStream, Seq[(Long, String)]) => Unit)
+      records: Seq[(Long, String)] => Iterator[Array[Byte]])
       : Seq[String] = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .where(org.apache.spark.sql.functions.col("doc_id").isNotNull)
+      .where(col("doc_id").isNotNull)
       .select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1)))
       .sortBy(_._1)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"$dirName-v$GenVersion")
-    dir.mkdirs()
+    val dir = cacheDir(dirName)
     val md = java.security.MessageDigest.getInstance("MD5")
     docs.foreach { case (id, text) =>
       md.update(s"$id:$text\u0000".getBytes(UTF_8))
@@ -336,18 +342,9 @@ object WatFixture {
     val tag = sfDir.replaceAll("[^a-zA-Z0-9.]", "_") +
       s"-${docs.length}-$fp-s$shards"
     (0 until shards).map { i =>
-      val f = new java.io.File(dir, s"docs-$tag-$i$suffix")
-      if (!f.exists()) {
-        val tmp = new java.io.File(dir, f.getName +
-          s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-        val out = new FileOutputStream(tmp)
-        try writeShard(out, docs.filter(_._1 % shards == i).toSeq)
-        finally out.close()
-        if (!tmp.renameTo(f) && !f.exists())
-          throw new java.io.IOException(s"could not materialize $f")
-        tmp.delete()
-      }
-      f.getAbsolutePath
+      val f = new File(dir, s"docs-$tag-$i$suffix")
+      cached(f, f)(tmp => writeArchive(tmp.getAbsolutePath,
+        records(docs.filter(_._1 % shards == i).toSeq)))
     }
   }
 
@@ -359,22 +356,16 @@ object WatFixture {
     * DuckDB rebuilds the identical pages from the documents table, no
     * committed dump needed. Caching/sharding via [[ensureDocShards]].
     */
-  def ensureDocWarcs(spark: org.apache.spark.sql.SparkSession,
+  def ensureDocWarcs(spark: SparkSession,
       sfDir: String, shards: Int = 4): Seq[String] =
     ensureDocShards(spark, sfDir, shards, "graft-doc-warcs", ".warc.gz") {
-      (out, docs) =>
-        for ((id, text) <- docs) {
-          require(!text.contains('<') && !text.contains('&'),
-            s"doc $id text is not HTML-safe to embed raw")
-          val html = graft.queries.ExtQueries.bpHtmlFor(id, text)
-            .getBytes(UTF_8)
-          val http = (s"HTTP/1.1 200 OK\r\n" +
-            s"Content-Type: text/html; charset=UTF-8\r\n" +
-            s"Content-Length: ${html.length}\r\n\r\n").getBytes(UTF_8)
-          out.write(gzipMember(warcRecordBytes("response", http ++ html,
-            Some(s"https://docs.test/doc$id.html"),
-            "application/http; msgtype=response")))
-        }
+      _.iterator.map { case (id, text) =>
+        require(!text.contains('<') && !text.contains('&'),
+          s"doc $id text is not HTML-safe to embed raw")
+        httpRecord("response", s"https://docs.test/doc$id.html",
+          WarcSink.httpResponse(200, HtmlType,
+            Some(ExtQueries.bpHtmlFor(id, text).getBytes(UTF_8))))
+      }
     }
 
   /** WARC shards whose response bodies are the MIXED MEDIA corpus
@@ -386,18 +377,14 @@ object WatFixture {
     * shared cache tag fingerprints — bump it whenever mixedBlobFor's
     * closed forms change (the fixture-cache staleness rule).
     */
-  def ensureDocMediaWarcs(spark: org.apache.spark.sql.SparkSession,
+  def ensureDocMediaWarcs(spark: SparkSession,
       sfDir: String, shards: Int = 4): Seq[String] =
     ensureDocShards(spark, sfDir, shards, "graft-doc-media-warcs-m1",
-      ".warc.gz") { (out, docs) =>
-      for ((id, _) <- docs) {
-        val blob = graft.ext.Multimodal.mixedBlobFor(id)
-        val http = (s"HTTP/1.1 200 OK\r\n" +
-          s"Content-Type: application/octet-stream\r\n" +
-          s"Content-Length: ${blob.length}\r\n\r\n").getBytes(UTF_8)
-        out.write(gzipMember(warcRecordBytes("response", http ++ blob,
-          Some(s"https://docs.test/doc$id.bin"),
-          "application/http; msgtype=response")))
+      ".warc.gz") {
+      _.iterator.map { case (id, _) =>
+        httpRecord("response", s"https://docs.test/doc$id.bin",
+          WarcSink.httpResponse(200, OctetType,
+            Some(graft.ext.Multimodal.mixedBlobFor(id))))
       }
     }
 
@@ -410,60 +397,55 @@ object WatFixture {
     * corpus ([[ensureDocWarcs2]]); here the point is the BINARY
     * resolution path.
     */
-  def ensureDocMediaWarcs2(spark: org.apache.spark.sql.SparkSession,
+  def ensureDocMediaWarcs2(spark: SparkSession,
       sfDir: String, shards: Int = 4): Seq[String] =
     ensureDocShards(spark, sfDir, shards, "graft-doc-media-warcs2-m1",
-      ".warc.gz") { (out, docs) =>
-      for ((id, _) <- docs) {
+      ".warc.gz") {
+      _.iterator.map { case (id, _) =>
         val blob = graft.ext.Multimodal.mixedBlobFor(id)
         val uri = s"https://docs.test/doc$id.bin"
-        if (id % 9 == 2) {
-          val http = ("HTTP/1.1 200 OK\r\n" +
-            "Content-Type: application/octet-stream\r\n\r\n")
-            .getBytes(UTF_8)
-          val digest = graft.wat.CcIndex.sha1Base32(blob)
-          out.write(gzipMember(warcRecordBytes("revisit", http,
-            Some(uri), "application/http; msgtype=response",
-            Seq("WARC-Payload-Digest" -> s"sha1:$digest"))))
-        } else {
-          val http = (s"HTTP/1.1 200 OK\r\n" +
-            s"Content-Type: application/octet-stream\r\n" +
-            s"Content-Length: ${blob.length}\r\n\r\n").getBytes(UTF_8)
-          out.write(gzipMember(warcRecordBytes("response", http ++ blob,
-            Some(uri), "application/http; msgtype=response")))
-        }
+        if (id % 9 == 2)
+          httpRecord("revisit", uri,
+            WarcSink.httpResponse(200, OctetType, None),
+            "WARC-Payload-Digest" -> s"sha1:${CcIndex.sha1Base32(blob)}")
+        else
+          httpRecord("response", uri,
+            WarcSink.httpResponse(200, OctetType, Some(blob)))
       }
     }
+
+  /** cc-index parquet over a documents-table shard set: one row per
+    * response (and revisit) record, read back from the real gzip-member
+    * framing by [[CcIndex.buildIndex]], mime by `mimeOf`, and the
+    * usual `%11==3` → 404 rotation (the rows an index-side filter must
+    * EXCLUDE). Cached as `$name-<tag>.parquet`: bump `name` when the
+    * index content changes over the same shards (the staleness rule).
+    */
+  private def ensureDocIndexParquet(spark: SparkSession,
+      warcs: Seq[String], dirName: String, name: String,
+      mimeOf: Long => String): (String, Seq[String]) = {
+    val out = new File(cacheDir(dirName), s"$name-${docTag(warcs)}.parquet")
+    (cached(out, out) { tmp =>
+      CcIndex.buildIndex(spark, warcs, mimeOf = mimeOf,
+          statusOf = id => if (id % 11 == 3) 404 else 200)
+        .repartition(1)
+        .write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    }, warcs)
+  }
+
+  /** The HTML corpus's closed-form mime: `%13==5` → application/pdf. */
+  private def docMime(id: Long): String =
+    if (id % 13 == 5) "application/pdf" else "text/html"
 
   /** cc-index parquet over the crawl-2 media shards
     * ([[ensureDocMediaWarcs2]]): per-family mimes for the re-captured
     * responses, `warc/revisit` rows (digest = the original blob's)
     * for the `%9==2` captures, the usual `%11==3` → 404 rotation.
     */
-  def ensureDocMediaCcIndex2(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (String, Seq[String]) = {
-    val warcs = ensureDocMediaWarcs2(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-media-ccindex2-v$GenVersion")
-    dir.mkdirs()
-    val out = new java.io.File(dir, s"midx1-$tag.parquet")
-    if (!out.exists()) {
-      val tmp = new java.io.File(dir, out.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-      graft.wat.CcIndex.buildIndex(spark, warcs,
-          mimeOf = mediaMime,
-          statusOf = id => if (id % 11 == 3) 404 else 200)
-        .repartition(1)
-        .write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      if (!tmp.renameTo(out) && !out.exists())
-        throw new java.io.IOException(s"could not materialize $out")
-      if (tmp.exists())
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    }
-    (out.getAbsolutePath, warcs)
-  }
+  def ensureDocMediaCcIndex2(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (String, Seq[String]) =
+    ensureDocIndexParquet(spark, ensureDocMediaWarcs2(spark, sfDir, shards),
+      "graft-doc-media-ccindex2", "midx1", mediaMime)
 
   /** The mixed corpus's per-family canonical mime — what CC's own
     * detector would put in the index's mime column; the closed form
@@ -490,32 +472,12 @@ object WatFixture {
     * a format-targeted extraction filters on), the usual %11==3 → 404
     * rotation (the rows a media extraction must never fetch).
     */
-  def ensureDocMediaCcIndex(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (String, Seq[String]) = {
-    val warcs = ensureDocMediaWarcs(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-media-ccindex-v$GenVersion")
-    dir.mkdirs()
+  def ensureDocMediaCcIndex(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (String, Seq[String]) =
     // midx2: bumped when the octet-stream mime column became the
     // per-family closed form (same shards, different index content)
-    val out = new java.io.File(dir, s"midx2-$tag.parquet")
-    if (!out.exists()) {
-      val tmp = new java.io.File(dir, out.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-      graft.wat.CcIndex.buildIndex(spark, warcs,
-          mimeOf = mediaMime,
-          statusOf = id => if (id % 11 == 3) 404 else 200)
-        .repartition(1)
-        .write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      if (!tmp.renameTo(out) && !out.exists())
-        throw new java.io.IOException(s"could not materialize $out")
-      if (tmp.exists())
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    }
-    (out.getAbsolutePath, warcs)
-  }
+    ensureDocIndexParquet(spark, ensureDocMediaWarcs(spark, sfDir, shards),
+      "graft-doc-media-ccindex", "midx2", mediaMime)
 
   /** The documents table framed as WET shards: one warcinfo header
     * record per shard (CC writes one; the reader must skip it), then
@@ -525,33 +487,33 @@ object WatFixture {
     * HTTP envelope). Same cache-key discipline via the shared
     * scaffold.
     */
-  def ensureDocWets(spark: org.apache.spark.sql.SparkSession,
+  def ensureDocWets(spark: SparkSession,
       sfDir: String, shards: Int = 4): Seq[String] =
     ensureDocShards(spark, sfDir, shards, "graft-doc-wets",
-      ".warc.wet.gz") { (out, docs) =>
-      out.write(gzipMember(warcRecordBytes("warcinfo",
-        "software: graft-wet-fixture\r\n".getBytes(UTF_8), None,
-        "application/warc-fields")))
-      for ((id, text) <- docs) {
-        // the q_wet_extract oracle claims the round trip is LOSSLESS,
-        // but the reader decodes via Charsets.decode -- a leading BOM
-        // would be stripped and a '<meta charset=>' in the first KiB
-        // would hijack detection. Fail LOUD if the corpus ever gains
-        // sniff-unsafe text (the warc twin guards its own invariant
-        // the same way).
-        require(!text.startsWith("\uFEFF") && !text.contains('<'),
-          s"doc $id text is not charset-sniff-safe to embed raw")
-        out.write(gzipMember(warcRecordBytes("conversion",
-          text.getBytes(UTF_8),
-          Some(s"https://docs.test/doc$id.html"), "text/plain")))
-      }
+      ".warc.wet.gz") { docs =>
+      Iterator.single(WarcSink.warcRecord("warcinfo", Nil,
+        "application/warc-fields",
+        "software: graft-wet-fixture\r\n".getBytes(UTF_8))) ++
+        docs.iterator.map { case (id, text) =>
+          // the q_wet_extract oracle claims the round trip is LOSSLESS,
+          // but the reader decodes via Charsets.decode -- a leading BOM
+          // would be stripped and a '<meta charset=>' in the first KiB
+          // would hijack detection. Fail LOUD if the corpus ever gains
+          // sniff-unsafe text (the warc twin guards its own invariant
+          // the same way).
+          require(!text.startsWith("\uFEFF") && !text.contains('<'),
+            s"doc $id text is not charset-sniff-safe to embed raw")
+          WarcSink.warcRecord("conversion",
+            Seq("WARC-Target-URI" -> s"https://docs.test/doc$id.html"),
+            "text/plain", text.getBytes(UTF_8))
+        }
     }
 
   /** cc-index-shaped parquet over the [[ensureDocWarcs]] shards: one
     * row per response record with the PUBLIC cc-index columns (url,
     * url_host_name, content_mime_type, fetch_status, warc_filename,
     * warc_record_offset, warc_record_length), offsets/lengths read
-    * back from the real gzip-member framing ([[graft.wat.CcIndex
+    * back from the real gzip-member framing ([[CcIndex
     * .memberSpans]]), mime/status synthesized in closed form from the
     * doc id (`%13==5` → application/pdf, `%11==3` → 404 — the rows an
     * index-side filter must EXCLUDE, so the ranged-fetch query proves
@@ -559,30 +521,43 @@ object WatFixture {
     * shards' content-fingerprint tag: same docs + same shard count →
     * same archives → same index.
     */
-  def ensureDocCcIndex(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (String, Seq[String]) = {
-    val warcs = ensureDocWarcs(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-ccindex-v$GenVersion")
-    dir.mkdirs()
-    val out = new java.io.File(dir, s"idx3-$tag.parquet")
-    if (!out.exists()) {
-      val tmp = new java.io.File(dir, out.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-      graft.wat.CcIndex.buildIndex(spark, warcs,
-          mimeOf = id =>
-            if (id % 13 == 5) "application/pdf" else "text/html",
-          statusOf = id => if (id % 11 == 3) 404 else 200)
+  def ensureDocCcIndex(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (String, Seq[String]) =
+    ensureDocIndexParquet(spark, ensureDocWarcs(spark, sfDir, shards),
+      "graft-doc-ccindex", "idx3", docMime)
+
+  /** [[ensureDocCcIndex]] written as crawl partitions
+    * (`crawl=…/subset=warc`, a `_SUCCESS_PART` marker once complete):
+    * `crawls` gets the index with the public `content_languages`
+    * column (closed form by id%3: eng / eng,fra / deu), the same index
+    * with ids `%7==0` carrying an altered digest ("changed" content),
+    * and the doc id column, and returns the rows with their `crawl`.
+    */
+  private def ensureDocCcIndexCrawls(spark: SparkSession, sfDir: String,
+      shards: Int, dirName: String, name: String)(
+      crawls: (DataFrame, DataFrame, Column) => DataFrame)
+      : (String, Seq[String]) = {
+    val (idxPath, warcs) = ensureDocCcIndex(spark, sfDir, shards)
+    val out = new File(cacheDir(dirName), s"$name-${docTag(warcs)}")
+    (cached(out, new File(out, "_SUCCESS_PART")) { tmp =>
+      val id = regexp_extract(col("url"), "doc(\\d+)\\.html$", 1)
+        .cast("long")
+      val base = spark.read.parquet(idxPath)
+        .withColumn("content_languages",
+          when(id % 3 === 0, "eng")
+            .when(id % 3 === 1, "eng,fra")
+            .otherwise("deu"))
+      val changed = base.withColumn("content_digest",
+        when(id % 7 === 0, concat(col("content_digest"), lit("-old")))
+          .otherwise(col("content_digest")))
+      crawls(base, changed, id)
+        .withColumn("subset", lit("warc"))
         .repartition(1)
-        .write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      if (!tmp.renameTo(out) && !out.exists())
-        throw new java.io.IOException(s"could not materialize $out")
-      if (tmp.exists())
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    }
-    (out.getAbsolutePath, warcs)
+        .write.mode("overwrite").partitionBy("crawl", "subset")
+        .parquet(tmp.getAbsolutePath)
+      java.nio.file.Files.write(new File(tmp, "_SUCCESS_PART").toPath,
+        Array.emptyByteArray)
+    }, warcs)
   }
 
   /** The cc-index in the PUBLIC table's directory layout:
@@ -595,53 +570,17 @@ object WatFixture {
     * query must STATICALLY prune to exactly its two crawl partitions —
     * the layout exists so a spec can pin that.
     */
-  def ensureDocCcIndexPartitioned(
-      spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (String, Seq[String]) = {
-    import org.apache.spark.sql.functions._
-    val (idxPath, warcs) = ensureDocCcIndex(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-ccindex-part-v$GenVersion")
-    dir.mkdirs()
-    val out = new java.io.File(dir, s"pidx1-$tag")
-    if (!new java.io.File(out, "_SUCCESS_PART").exists()) {
-      val tmp = new java.io.File(dir, out.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-      val id = regexp_extract(col("url"), "doc(\\d+)\\.html$", 1)
-        .cast("long")
-      val base = spark.read.parquet(idxPath)
-        .withColumn("content_languages",
-          when(id % 3 === 0, "eng")
-            .when(id % 3 === 1, "eng,fra")
-            .otherwise("deu"))
-      val prev = base.where(id % 5 =!= 0)
-        .withColumn("content_digest",
-          when(id % 7 === 0, concat(col("content_digest"), lit("-old")))
-            .otherwise(col("content_digest")))
-        .withColumn("crawl", lit("CC-TEST-2024-01"))
-      val cur = base.withColumn("crawl", lit("CC-TEST-2024-02"))
-      prev.unionByName(cur)
-        .withColumn("subset", lit("warc"))
-        .repartition(1)
-        .write.mode("overwrite").partitionBy("crawl", "subset")
-        .parquet(tmp.getAbsolutePath)
-      java.nio.file.Files.write(
-        new java.io.File(tmp, "_SUCCESS_PART").toPath,
-        Array.emptyByteArray)
-      if (!tmp.renameTo(out) &&
-          !new java.io.File(out, "_SUCCESS_PART").exists())
-        throw new java.io.IOException(s"could not materialize $out")
-      if (tmp.exists() && !tmp.getCanonicalPath.equals(out.getCanonicalPath))
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  def ensureDocCcIndexPartitioned(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (String, Seq[String]) =
+    ensureDocCcIndexCrawls(spark, sfDir, shards, "graft-doc-ccindex-part",
+      "pidx1") { (base, changed, id) =>
+      changed.where(id % 5 =!= 0).withColumn("crawl", lit("CC-TEST-2024-01"))
+        .unionByName(base.withColumn("crawl", lit("CC-TEST-2024-02")))
     }
-    (out.getAbsolutePath, warcs)
-  }
 
   /** The cc-index across FOUR crawl partitions — the shape an
     * incremental consumer's "what's new since the last K crawls" query
-    * runs against ([[graft.wat.CcIndex.deltaAgainstHistory]]):
+    * runs against ([[CcIndex.deltaAgainstHistory]]):
     *
     *  - `crawl=CC-TEST-2024-04`: the CURRENT full index;
     *  - `crawl=CC-TEST-2024-02/03`: the history window — ids `%6==1`
@@ -655,50 +594,16 @@ object WatFixture {
     *    from the delta: the pruning is semantically load-bearing, not
     *    just an IO win.
     */
-  def ensureDocCcIndexMultiCrawl(
-      spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (String, Seq[String]) = {
-    import org.apache.spark.sql.functions._
-    val (idxPath, warcs) = ensureDocCcIndex(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-ccindex-kpart-v$GenVersion")
-    dir.mkdirs()
-    val out = new java.io.File(dir, s"kidx1-$tag")
-    if (!new java.io.File(out, "_SUCCESS_PART").exists()) {
-      val tmp = new java.io.File(dir, out.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-      val id = regexp_extract(col("url"), "doc(\\d+)\\.html$", 1)
-        .cast("long")
-      val base = spark.read.parquet(idxPath)
-        .withColumn("content_languages",
-          when(id % 3 === 0, "eng")
-            .when(id % 3 === 1, "eng,fra")
-            .otherwise("deu"))
-      val hist = base.where(id % 6 =!= 1)
-        .withColumn("content_digest",
-          when(id % 7 === 0, concat(col("content_digest"), lit("-old")))
-            .otherwise(col("content_digest")))
-      val all = base.withColumn("crawl", lit("CC-TEST-2024-01"))
+  def ensureDocCcIndexMultiCrawl(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (String, Seq[String]) =
+    ensureDocCcIndexCrawls(spark, sfDir, shards,
+      "graft-doc-ccindex-kpart", "kidx1") { (base, changed, id) =>
+      val hist = changed.where(id % 6 =!= 1)
+      base.withColumn("crawl", lit("CC-TEST-2024-01"))
         .unionByName(hist.withColumn("crawl", lit("CC-TEST-2024-02")))
         .unionByName(hist.withColumn("crawl", lit("CC-TEST-2024-03")))
         .unionByName(base.withColumn("crawl", lit("CC-TEST-2024-04")))
-      all.withColumn("subset", lit("warc"))
-        .repartition(1)
-        .write.mode("overwrite").partitionBy("crawl", "subset")
-        .parquet(tmp.getAbsolutePath)
-      java.nio.file.Files.write(
-        new java.io.File(tmp, "_SUCCESS_PART").toPath,
-        Array.emptyByteArray)
-      if (!tmp.renameTo(out) &&
-          !new java.io.File(out, "_SUCCESS_PART").exists())
-        throw new java.io.IOException(s"could not materialize $out")
-      if (tmp.exists() && !tmp.getCanonicalPath.equals(out.getCanonicalPath))
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
     }
-    (out.getAbsolutePath, warcs)
-  }
 
   /** Second-crawl WARC shards over the SAME documents — the crawl-time
     * dedup shape real CC archives have: ids `%9==2` are captured as
@@ -709,7 +614,7 @@ object WatFixture {
     * digest-keyed resolution against the crawl-1 index finds the
     * capture that holds the bytes.
     */
-  def ensureDocWarcs2(spark: org.apache.spark.sql.SparkSession,
+  def ensureDocWarcs2(spark: SparkSession,
       sfDir: String, shards: Int = 4): Seq[String] = {
     // the full text map (lazy: only materialized when shards actually
     // regenerate) — CROSS-URL revisits ((id/9)%3==1, stepped by the
@@ -717,16 +622,15 @@ object WatFixture {
     // doc's content, whose text lives in another shard
     lazy val textOf: Map[Long, String] = spark.read
       .parquet(s"$sfDir/documents.parquet")
-      .where(org.apache.spark.sql.functions.col("doc_id").isNotNull)
+      .where(col("doc_id").isNotNull)
       .select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     ensureDocShards(spark, sfDir, shards, "graft-doc-warcs2b",
-      ".warc.gz") { (out, docs) =>
-      for ((id, text) <- docs) {
+      ".warc.gz") {
+      _.iterator.map { case (id, text) =>
         require(!text.contains('<') && !text.contains('&'),
           s"doc $id text is not HTML-safe to embed raw")
-        val html = graft.queries.ExtQueries.bpHtmlFor(id, text)
-          .getBytes(UTF_8)
+        val html = ExtQueries.bpHtmlFor(id, text).getBytes(UTF_8)
         val uri = s"https://docs.test/doc$id.html"
         if (id % 9 == 2) {
           // identical-payload-digest revisit: HTTP headers only, no
@@ -739,22 +643,13 @@ object WatFixture {
             else id
           val refHtml =
             if (ref == id) html
-            else graft.queries.ExtQueries.bpHtmlFor(ref, textOf(ref))
-              .getBytes(UTF_8)
-          val http = ("HTTP/1.1 200 OK\r\n" +
-            "Content-Type: text/html; charset=UTF-8\r\n\r\n")
-            .getBytes(UTF_8)
-          val digest = graft.wat.CcIndex.sha1Base32(refHtml)
-          out.write(gzipMember(warcRecordBytes("revisit", http,
-            Some(uri), "application/http; msgtype=response",
-            Seq("WARC-Payload-Digest" -> s"sha1:$digest"))))
-        } else {
-          val http = (s"HTTP/1.1 200 OK\r\n" +
-            s"Content-Type: text/html; charset=UTF-8\r\n" +
-            s"Content-Length: ${html.length}\r\n\r\n").getBytes(UTF_8)
-          out.write(gzipMember(warcRecordBytes("response", http ++ html,
-            Some(uri), "application/http; msgtype=response")))
-        }
+            else ExtQueries.bpHtmlFor(ref, textOf(ref)).getBytes(UTF_8)
+          httpRecord("revisit", uri,
+            WarcSink.httpResponse(200, HtmlType, None),
+            "WARC-Payload-Digest" -> s"sha1:${CcIndex.sha1Base32(refHtml)}")
+        } else
+          httpRecord("response", uri,
+            WarcSink.httpResponse(200, HtmlType, Some(html)))
       }
     }
   }
@@ -763,35 +658,14 @@ object WatFixture {
     * same closed-form mime/status rotation, plus `warc/revisit` rows
     * for the `%9==2` captures (digest = the original payload's, from
     * the record's WARC-Payload-Digest header — the public-index
-    * convention [[graft.wat.CcIndex.buildIndex]] implements).
+    * convention [[CcIndex.buildIndex]] implements).
     */
-  def ensureDocCcIndex2(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (String, Seq[String]) = {
-    val warcs = ensureDocWarcs2(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-ccindex2-v$GenVersion")
-    dir.mkdirs()
+  def ensureDocCcIndex2(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (String, Seq[String]) =
     // idx4: bumped when cross-url revisit digests landed (same docs
     // tag, different warc content — the staleness rule)
-    val out = new java.io.File(dir, s"idx4-$tag.parquet")
-    if (!out.exists()) {
-      val tmp = new java.io.File(dir, out.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-      graft.wat.CcIndex.buildIndex(spark, warcs,
-          mimeOf = id =>
-            if (id % 13 == 5) "application/pdf" else "text/html",
-          statusOf = id => if (id % 11 == 3) 404 else 200)
-        .repartition(1)
-        .write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      if (!tmp.renameTo(out) && !out.exists())
-        throw new java.io.IOException(s"could not materialize $out")
-      if (tmp.exists())
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    }
-    (out.getAbsolutePath, warcs)
-  }
+    ensureDocIndexParquet(spark, ensureDocWarcs2(spark, sfDir, shards),
+      "graft-doc-ccindex2", "idx4", docMime)
 
   /** Closed-form `content_languages` value by doc id — shared by the
     * partitioned parquet index and the CDXJ JSON `languages` field so
@@ -804,6 +678,53 @@ object WatFixture {
       case _ => "deu"
     }
 
+  /** A doc's deterministic 14-digit capture timestamp. */
+  private def docTimestamp(id: Long): String =
+    f"20240101${id % 24}%02d${id % 60}%02d${(id * 7) % 60}%02d"
+
+  /** The CDXJ line of one [[ensureDocCcIndex]] row: its locator, the
+    * doc's timestamp, and languages/encoding in the JSON block (the
+    * fields CC's real CDXJ carries).
+    */
+  private def docCdxjLine(r: Row): String = {
+    val url = r.getAs[String]("url")
+    val id = CcIndex.docIdOf(url)
+    Cdxj.formatLine(url, docTimestamp(id),
+      r.getAs[String]("content_mime_type"),
+      r.getAs[Int]("fetch_status"),
+      r.getAs[String]("content_digest"),
+      r.getAs[String]("warc_filename"),
+      r.getAs[Long]("warc_record_offset"),
+      r.getAs[Long]("warc_record_length"),
+      languages = docLangs(id), encoding = "UTF-8")
+  }
+
+  /** A text index over the SAME captures as [[ensureDocCcIndex]]: one
+    * gzip file per warc shard, `header` then one `line` per capture in
+    * the shard, lines sorted (the format's seekability contract), each
+    * file cached as `$name-<tag>-<i>$suffix`.
+    */
+  private def ensureDocIndexText(spark: SparkSession, sfDir: String,
+      shards: Int, dirName: String, name: String, suffix: String,
+      header: String)(line: Row => String): (Seq[String], Seq[String]) = {
+    val (idxPath, warcs) = ensureDocCcIndex(spark, sfDir, shards)
+    val dir = cacheDir(dirName)
+    val files = (0 until shards).map(i =>
+      new File(dir, s"$name-${docTag(warcs)}-$i$suffix"))
+    if (files.exists(!_.exists())) {
+      val rows = spark.read.parquet(idxPath).collect()
+        .map(r => (r.getAs[String]("warc_filename"), line(r)))
+        .groupBy(_._1)
+      for ((warcPath, f) <- warcs.zip(files)) cached(f, f) { tmp =>
+        val text = header + rows.getOrElse(warcPath, Array.empty)
+          .map(_._2).sorted.map(_ + "\n").mkString
+        java.nio.file.Files.write(tmp.toPath,
+          WarcSink.gzipMember(text.getBytes(UTF_8)))
+      }
+    }
+    (files.map(_.getAbsolutePath), warcs)
+  }
+
   /** CDXJ text shards over the SAME captures as [[ensureDocCcIndex]]:
     * one `.cdxj.gz` per warc shard, lines SURT-SORTED within the
     * shard (the format's seekability contract), offsets/lengths the
@@ -812,54 +733,10 @@ object WatFixture {
     * real CDXJ carries). Timestamp is a deterministic 14-digit stamp
     * from the doc id. Same cache-tag discipline.
     */
-  def ensureDocCdxj(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (Seq[String], Seq[String]) = {
-    val (idxPath, warcs) = ensureDocCcIndex(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-cdxj-v$GenVersion")
-    dir.mkdirs()
-    val missing = (0 until shards).exists(i =>
-      !new java.io.File(dir, s"docs4-$tag-$i.cdxj.gz").exists())
-    if (missing) {
-      val rows = spark.read.parquet(idxPath).collect().map { r =>
-        val url = r.getAs[String]("url")
-        val id = graft.wat.CcIndex.docIdOf(url)
-        val ts = f"20240101${id % 24}%02d${id % 60}%02d${(id * 7) % 60}%02d"
-        (r.getAs[String]("warc_filename"),
-          Cdxj.formatLine(url, ts,
-            r.getAs[String]("content_mime_type"),
-            r.getAs[Int]("fetch_status"),
-            r.getAs[String]("content_digest"),
-            r.getAs[String]("warc_filename"),
-            r.getAs[Long]("warc_record_offset"),
-            r.getAs[Long]("warc_record_length"),
-            languages = docLangs(id), encoding = "UTF-8"))
-      }.groupBy(_._1)
-      for ((warcPath, i) <- warcs.zipWithIndex) {
-        val f = new java.io.File(dir, s"docs4-$tag-$i.cdxj.gz")
-        if (!f.exists()) {
-          val tmp = new java.io.File(dir, f.getName +
-            s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-          val out = new FileOutputStream(tmp)
-          try {
-            val gz = new GZIPOutputStream(out)
-            for (line <- rows.getOrElse(warcPath, Array.empty)
-                .map(_._2).sorted)
-              gz.write((line + "\n").getBytes(UTF_8))
-            gz.close()
-          } finally out.close()
-          if (!tmp.renameTo(f) && !f.exists())
-            throw new java.io.IOException(s"could not materialize $f")
-          tmp.delete()
-        }
-      }
-    }
-    ((0 until shards).map(i =>
-      new java.io.File(dir, s"docs4-$tag-$i.cdxj.gz").getAbsolutePath),
-      warcs)
-  }
+  def ensureDocCdxj(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (Seq[String], Seq[String]) =
+    ensureDocIndexText(spark, sfDir, shards, "graft-doc-cdxj", "docs4",
+      ".cdxj.gz", header = "")(docCdxjLine)
 
   /** The SAME captures as [[ensureDocCdxj]] in the LEGACY
     * space-separated CDX-11 form (` CDX N b a m s k r M S V g` header
@@ -867,105 +744,54 @@ object WatFixture {
     * the ecosystem's older archives (pywb/OpenWayback) publish. One
     * `.cdx.gz` per warc shard, same cache-tag discipline.
     */
-  def ensureDocCdxLegacy(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, shards: Int = 4): (Seq[String], Seq[String]) = {
-    val (idxPath, warcs) = ensureDocCcIndex(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-cdx-legacy-v$GenVersion")
-    dir.mkdirs()
-    val missing = (0 until shards).exists(i =>
-      !new java.io.File(dir, s"docs1-$tag-$i.cdx.gz").exists())
-    if (missing) {
-      val rows = spark.read.parquet(idxPath).collect().map { r =>
-        val url = r.getAs[String]("url")
-        val id = graft.wat.CcIndex.docIdOf(url)
-        val ts = f"20240101${id % 24}%02d${id % 60}%02d${(id * 7) % 60}%02d"
-        (r.getAs[String]("warc_filename"),
-          Cdxj.formatCdxLine(url, ts,
-            r.getAs[String]("content_mime_type"),
-            r.getAs[Int]("fetch_status"),
-            r.getAs[String]("content_digest"),
-            r.getAs[String]("warc_filename"),
-            r.getAs[Long]("warc_record_offset"),
-            r.getAs[Long]("warc_record_length")))
-      }.groupBy(_._1)
-      for ((warcPath, i) <- warcs.zipWithIndex) {
-        val f = new java.io.File(dir, s"docs1-$tag-$i.cdx.gz")
-        if (!f.exists()) {
-          val tmp = new java.io.File(dir, f.getName +
-            s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-          val out = new FileOutputStream(tmp)
-          try {
-            val gz = new GZIPOutputStream(out)
-            gz.write(" CDX N b a m s k r M S V g\n".getBytes(UTF_8))
-            for (line <- rows.getOrElse(warcPath, Array.empty)
-                .map(_._2).sorted)
-              gz.write((line + "\n").getBytes(UTF_8))
-            gz.close()
-          } finally out.close()
-          if (!tmp.renameTo(f) && !f.exists())
-            throw new java.io.IOException(s"could not materialize $f")
-          tmp.delete()
-        }
-      }
+  def ensureDocCdxLegacy(spark: SparkSession,
+      sfDir: String, shards: Int = 4): (Seq[String], Seq[String]) =
+    ensureDocIndexText(spark, sfDir, shards, "graft-doc-cdx-legacy",
+      "docs1", ".cdx.gz", header = " CDX N b a m s k r M S V g\n") { r =>
+      val url = r.getAs[String]("url")
+      Cdxj.formatCdxLine(url, docTimestamp(CcIndex.docIdOf(url)),
+        r.getAs[String]("content_mime_type"),
+        r.getAs[Int]("fetch_status"),
+        r.getAs[String]("content_digest"),
+        r.getAs[String]("warc_filename"),
+        r.getAs[Long]("warc_record_offset"),
+        r.getAs[Long]("warc_record_length"))
     }
-    ((0 until shards).map(i =>
-      new java.io.File(dir, s"docs1-$tag-$i.cdx.gz").getAbsolutePath),
-      warcs)
-  }
 
   /** The CDXJ index in CC's CLUSTERED publication shape: the whole
     * line set globally SURT-sorted, split into `shards` contiguous
     * `cdx-NNNNN.gz` files, each written as independent gzip members of
     * ≤ `blockLines` lines, plus the `cluster.idx` sidecar (one line
     * per block: first key + shard + offset + compressed length) — the
-    * secondary index [[graft.wat.Cdxj.lookupPrefix]] binary-searches.
+    * secondary index [[Cdxj.lookupPrefix]] binary-searches.
     * Returns (cluster.idx path, shard dir, shard paths).
     */
-  def ensureDocCdxjClustered(spark: org.apache.spark.sql.SparkSession,
+  def ensureDocCdxjClustered(spark: SparkSession,
       sfDir: String, shards: Int = 4, blockLines: Int = 16)
       : (String, String, Seq[String]) = {
     val (idxPath, warcs) = ensureDocCcIndex(spark, sfDir, shards)
-    val first = new java.io.File(warcs.head).getName
-    val tag = first.stripPrefix("docs-").stripSuffix("-0.warc.gz")
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft-doc-cdxj-cluster-v$GenVersion")
-    val root = new java.io.File(dir, s"clu2-$tag-b$blockLines")
-    val clusterIdx = new java.io.File(root, "cluster.idx")
+    val root = new File(cacheDir("graft-doc-cdxj-cluster"),
+      s"clu2-${docTag(warcs)}-b$blockLines")
+    val clusterIdx = new File(root, "cluster.idx")
     val shardNames = (0 until shards).map(i => f"cdx-$i%05d.gz")
-    if (!clusterIdx.exists()) {
-      val tmp = new java.io.File(dir, root.getName +
-        s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
+    cached(root, clusterIdx) { tmp =>
       tmp.mkdirs()
-      val lines = spark.read.parquet(idxPath).collect().map { r =>
-        val url = r.getAs[String]("url")
-        val id = graft.wat.CcIndex.docIdOf(url)
-        val ts = f"20240101${id % 24}%02d${id % 60}%02d${(id * 7) % 60}%02d"
-        Cdxj.formatLine(url, ts,
-          r.getAs[String]("content_mime_type"),
-          r.getAs[Int]("fetch_status"),
-          r.getAs[String]("content_digest"),
-          r.getAs[String]("warc_filename"),
-          r.getAs[Long]("warc_record_offset"),
-          r.getAs[Long]("warc_record_length"),
-          languages = docLangs(id), encoding = "UTF-8")
-      }.sorted // GLOBAL surt order — shard i covers a contiguous range
+      // GLOBAL surt order — shard i covers a contiguous range
+      val lines = spark.read.parquet(idxPath).collect().map(docCdxjLine)
+        .sorted
       val perShard = (lines.length + shards - 1) / shards
       val idxLines = Seq.newBuilder[String]
       var seq = 0L
       for ((name, i) <- shardNames.zipWithIndex) {
         val shardLines =
           lines.slice(i * perShard, math.min((i + 1) * perShard, lines.length))
-        val f = new java.io.File(tmp, name)
-        val out = new FileOutputStream(f)
+        val out = new FileOutputStream(new File(tmp, name))
         try {
           var off = 0L
           for (block <- shardLines.grouped(blockLines)) {
             // one INDEPENDENT gzip member per block — the unit a
             // ranged read can decompress on its own
-            val member = gzipMember(
+            val member = WarcSink.gzipMember(
               block.map(_ + "\n").mkString.getBytes(UTF_8))
             out.write(member)
             val key = block.head.split(' ').take(2).mkString(" ")
@@ -976,36 +802,20 @@ object WatFixture {
           }
         } finally out.close()
       }
-      val iw = new FileOutputStream(new java.io.File(tmp, "cluster.idx"))
-      try iw.write(idxLines.result().mkString("\n").getBytes(UTF_8))
-      finally iw.close()
-      if (!tmp.renameTo(root) && !clusterIdx.exists())
-        throw new java.io.IOException(s"could not materialize $root")
-      if (tmp.exists() && !tmp.getCanonicalPath.equals(root.getCanonicalPath))
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+      java.nio.file.Files.write(new File(tmp, "cluster.idx").toPath,
+        idxLines.result().mkString("\n").getBytes(UTF_8))
     }
     (clusterIdx.getAbsolutePath, root.getAbsolutePath,
-      shardNames.map(n => new java.io.File(root, n).getAbsolutePath))
+      shardNames.map(n => new File(root, n).getAbsolutePath))
   }
 
   def ensureBenchWarcs(n: Int, nRecords: Int = 500,
       linksPerRecord: Int = 20): Seq[String] = {
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft-bench-warcs-v$GenVersion")
-    dir.mkdirs()
+    val dir = cacheDir("graft-bench-warcs")
     (0 until n).map { i =>
-      val f = new java.io.File(dir,
-        s"bench-$nRecords-$linksPerRecord-$i.warc.gz")
-      if (!f.exists()) {
-        val tmp = new java.io.File(dir, f.getName +
-          s".tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}-${System.nanoTime()}")
-        syntheticWarc(tmp.getAbsolutePath, nRecords, linksPerRecord,
-          seed = 1000L + i)
-        if (!tmp.renameTo(f) && !f.exists())
-          throw new java.io.IOException(s"could not materialize $f")
-        tmp.delete()
-      }
-      f.getAbsolutePath
+      val f = new File(dir, s"bench-$nRecords-$linksPerRecord-$i.warc.gz")
+      cached(f, f)(tmp => syntheticWarc(tmp.getAbsolutePath, nRecords,
+        linksPerRecord, seed = 1000L + i))
     }
   }
 
@@ -1024,33 +834,33 @@ object WatFixture {
     * env) → nearest ancestor of cwd containing build.sbt (the repo
     * marker) → cwd as the last resort.
     */
-  private[graft] def repoRoot: java.io.File =
+  private[graft] def repoRoot: File =
     sys.props.get("graft.repo.root")
       .orElse(sys.env.get("GRAFT_REPO_ROOT"))
-      .map(new java.io.File(_))
+      .map(new File(_))
       .orElse {
-        Iterator.iterate(new java.io.File(".").getCanonicalFile)(_.getParentFile)
+        Iterator.iterate(new File(".").getCanonicalFile)(_.getParentFile)
           .takeWhile(_ != null)
-          .find(d => new java.io.File(d, "build.sbt").isFile)
+          .find(d => new File(d, "build.sbt").isFile)
       }
-      .getOrElse(new java.io.File(".").getCanonicalFile)
+      .getOrElse(new File(".").getCanonicalFile)
 
   val TailParquetPath: String =
-    new java.io.File(new java.io.File(repoRoot, "tools"), "wat_tail.parquet")
+    new File(new File(repoRoot, "tools"), "wat_tail.parquet")
       .getAbsolutePath
 
   /** Committed dump of the single-archive (~400k-link) extraction —
     * the oracle table for q_wat_extract_1file, same bridge as the tail.
     */
   val SingleParquetPath: String =
-    new java.io.File(new java.io.File(repoRoot, "tools"), "wat_single.parquet")
+    new File(new File(repoRoot, "tools"), "wat_single.parquet")
       .getAbsolutePath
 
   /** Committed dump of the 64-archive batched-fleet extraction — the
     * oracle table for q_wat_extract_fleet64.
     */
   val Fleet64ParquetPath: String =
-    new java.io.File(new java.io.File(repoRoot, "tools"), "wat_fleet64.parquet")
+    new File(new File(repoRoot, "tools"), "wat_fleet64.parquet")
       .getAbsolutePath
 
   /** Idempotently materialize a committed one-file dump of `df`,
@@ -1067,16 +877,14 @@ object WatFixture {
     * they were pinned from the handcrafted fixture and are re-asserted
     * by WatExtractSpec every suite run.
     */
-  private[wat] def ensureExtractDump(target: java.io.File,
-      df: => org.apache.spark.sql.DataFrame,
-      spark: org.apache.spark.sql.SparkSession,
-      goldenMd5: String): String = synchronized {
-    if (!target.exists()) {
+  private[wat] def ensureExtractDump(target: File, df: => DataFrame,
+      spark: SparkSession, goldenMd5: String): String = synchronized {
+    cached(target, target) { stage =>
       val tmp = java.nio.file.Files.createTempDirectory("wat-dump").toFile
       // finally, not success-path-only: the failure throws below would
       // otherwise leak the temp dir per failed regeneration
       try {
-        val outDir = new java.io.File(tmp, "p")
+        val outDir = new File(tmp, "p")
         df.orderBy("uid", "cc_filename", "page_url", "url", "alt")
           .coalesce(1).write.mode("overwrite")
           .parquet(outDir.getAbsolutePath)
@@ -1085,9 +893,6 @@ object WatFixture {
           .getOrElse(throw new java.io.IOException(
             s"no parquet part written under $outDir"))
         Option(target.getParentFile).foreach(_.mkdirs())
-        // write-then-rename, same crash-safety story as ensureBenchWats
-        val stage = new java.io.File(target.getParentFile,
-          target.getName + s".tmp-${System.nanoTime()}")
         // validate the regenerated dump BEFORE publishing it: read the
         // staged file back and compare its full-content md5 to the
         // extraction-independent golden pin
@@ -1098,46 +903,34 @@ object WatFixture {
             .collect().toSeq.map(r => (r.getString(0), r.getString(1),
               String.valueOf(r.getString(2)), r.getString(3),
               r.getString(4))))
-        if (got != goldenMd5) {
-          stage.delete()
+        if (got != goldenMd5)
           throw new IllegalStateException(
             s"regenerated ${target.getName} fails golden validation: " +
               s"content md5 $got != pinned $goldenMd5 — refusing to " +
               "serve a self-referential oracle table")
-        }
-        if (!stage.renameTo(target) && !target.exists())
-          throw new java.io.IOException(s"could not materialize $target")
-        stage.delete()
-      } finally {
-        def rmr(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmr))
-          f.delete()
-        }
-        rmr(tmp)
-      }
+      } finally FileUtils.deleteQuietly(tmp)
     }
-    target.getAbsolutePath
   }
 
   /** image_only extraction over the deterministic 16-archive fleet. */
-  def ensureTailParquet(spark: org.apache.spark.sql.SparkSession): String =
-    ensureExtractDump(new java.io.File(TailParquetPath),
+  def ensureTailParquet(spark: SparkSession): String =
+    ensureExtractDump(new File(TailParquetPath),
       WatExtract.fromPaths(spark, ensureFleet(), "image_only").toDF(),
       spark, goldenFleetContentHash("image_only"))
 
   /** image_only extraction over the 400k-link single archive (the
     * dump must witness the exact operator under oracle).
     */
-  def ensureSingleParquet(spark: org.apache.spark.sql.SparkSession): String =
-    ensureExtractDump(new java.io.File(SingleParquetPath),
+  def ensureSingleParquet(spark: SparkSession): String =
+    ensureExtractDump(new File(SingleParquetPath),
       WatExtract.fromPaths(spark, ensureSingle(), "image_only").toDF(),
       spark, goldenSingleContentHash("image_only"))
 
   /** image_only extraction over the 64-archive fleet (batched,
     * max_tasks=16 — the q_wat_extract_fleet64 shape).
     */
-  def ensureFleet64Parquet(spark: org.apache.spark.sql.SparkSession): String =
-    ensureExtractDump(new java.io.File(Fleet64ParquetPath),
+  def ensureFleet64Parquet(spark: SparkSession): String =
+    ensureExtractDump(new File(Fleet64ParquetPath),
       WatExtract.fromPaths(spark, ensureFleet64(), "image_only",
         maxTasks = 16).toDF(),
       spark, goldenFleet64Hash)
@@ -1147,27 +940,26 @@ object WatFixture {
     * output dataset actually takes as the pipeline grows columns.
     */
   val EvoShardsPath: String =
-    new java.io.File(new java.io.File(repoRoot, "tools"), "evo_shards")
+    new File(new File(repoRoot, "tools"), "evo_shards")
       .getAbsolutePath
 
   /** Idempotently materialize [[EvoShardsPath]]/era{1,2}: deterministic
     * halves of the committed tail parquet (split on the uid hex prefix)
     * with era-1 columns pruned. Self-healing like the tail itself.
     */
-  def ensureEvoShards(spark: org.apache.spark.sql.SparkSession): String =
+  def ensureEvoShards(spark: SparkSession): String =
     synchronized {
-      import org.apache.spark.sql.functions.col
-      val root = new java.io.File(EvoShardsPath)
-      val done = new java.io.File(root, "_EVO_OK")
+      val root = new File(EvoShardsPath)
+      val done = new File(root, "_EVO_OK")
       if (!done.exists()) {
         val tail = spark.read.parquet(ensureTailParquet(spark))
         tail.where(col("uid") < "8").select("uid", "url")
           .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(root, "era1").getAbsolutePath)
+          .parquet(new File(root, "era1").getAbsolutePath)
         tail.where(col("uid") >= "8")
           .select("uid", "url", "alt", "page_url")
           .coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(root, "era2").getAbsolutePath)
+          .parquet(new File(root, "era2").getAbsolutePath)
         java.nio.file.Files.write(done.toPath, Array.emptyByteArray)
       }
       EvoShardsPath

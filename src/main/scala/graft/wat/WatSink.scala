@@ -1,6 +1,5 @@
 package graft.wat
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.DataFrame
@@ -79,32 +78,17 @@ object WatSink {
       s"""{"HTML-Metadata": {$baseJson"Links": $linkJson}}}}}"""
   }
 
-  /** One page → a single-member gzip WARC `metadata` record holding
-    * its envelope JSON.
-    */
-  private[wat] def metadataMember(sourceArchive: String, pageUrl: String,
+  /** One page → a WARC `metadata` record holding its envelope JSON. */
+  private def metadataRecord(sourceArchive: String, pageUrl: String,
       html: String, warcDate: String): Array[Byte] = {
     val (base, links) = WarcHtml.scanHtml(html)
     val body = envelopeJson(sourceArchive, pageUrl, base, links)
       .getBytes(UTF_8)
-    val idSeed = new ByteArrayOutputStream(pageUrl.length + 21)
-    idSeed.write(pageUrl.getBytes(UTF_8)); idSeed.write(0)
-    idSeed.write(
-      java.security.MessageDigest.getInstance("SHA-1").digest(body))
-    val head = (s"WARC/1.0\r\n" +
-      s"WARC-Type: metadata\r\n" +
-      s"WARC-Record-ID: <${WarcSink.recordId(idSeed.toByteArray)}>\r\n" +
-      s"WARC-Date: $warcDate\r\n" +
-      s"WARC-Target-URI: $pageUrl\r\n" +
-      s"Content-Type: application/json\r\n" +
-      s"Content-Length: ${body.length}\r\n\r\n").getBytes(UTF_8)
-    val rec = new ByteArrayOutputStream(head.length + body.length + 4)
-    rec.write(head); rec.write(body)
-    rec.write("\r\n\r\n".getBytes(UTF_8))
-    val bos = new ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(rec.toByteArray); gz.close()
-    bos.toByteArray
+    WarcSink.warcRecord("metadata", Seq(
+      "WARC-Record-ID" -> s"<${WarcSink.recordId(pageUrl, body)}>",
+      "WARC-Date" -> warcDate,
+      "WARC-Target-URI" -> pageUrl),
+      "application/json", body)
   }
 
   /** Write `(cc_filename, page_url, html)` rows as WAT metadata
@@ -124,11 +108,10 @@ object WatSink {
       .select(col("cc_filename").cast("string"),
         col("page_url").cast("string"), col("html").cast("string"))
       .as[(String, String, String)], dir, prefix, warcDate,
-      suffix = ".warc.wat.gz") {
-      (row, date, _) =>
-        metadataMember(if (row._1 == null) "" else row._1,
-          if (row._2 == null) "" else row._2,
-          if (row._3 == null) "" else row._3, date)
+      suffix = ".warc.wat.gz") { row =>
+      metadataRecord(if (row._1 == null) "" else row._1,
+        if (row._2 == null) "" else row._2,
+        if (row._3 == null) "" else row._3, warcDate)
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft.wat
 
-import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.DataFrame
@@ -21,34 +20,20 @@ import org.apache.spark.sql.functions._
   */
 object WetSink {
 
-  /** One page's text → a single-member gzip WARC `conversion` record.
-    * The payload is the raw UTF-8 text (the WET convention — no HTTP
-    * envelope); `WARC-Block-Digest` carries its sha1-base32 like real
-    * WET shards do.
+  /** One page's text → a WARC `conversion` record. The payload is the
+    * raw UTF-8 text (the WET convention — no HTTP envelope);
+    * `WARC-Block-Digest` carries its sha1-base32 like real WET shards
+    * do.
     */
-  private[wat] def conversionMember(url: String, text: String,
+  private def conversionRecord(url: String, text: String,
       warcDate: String): Array[Byte] = {
     val body = text.getBytes(UTF_8)
-    val digest = CcIndex.sha1Base32(body)
-    val idSeed = new ByteArrayOutputStream(url.length + 21)
-    idSeed.write(url.getBytes(UTF_8)); idSeed.write(0)
-    idSeed.write(
-      java.security.MessageDigest.getInstance("SHA-1").digest(body))
-    val head = (s"WARC/1.0\r\n" +
-      s"WARC-Type: conversion\r\n" +
-      s"WARC-Record-ID: <${WarcSink.recordId(idSeed.toByteArray)}>\r\n" +
-      s"WARC-Date: $warcDate\r\n" +
-      s"WARC-Target-URI: $url\r\n" +
-      s"WARC-Block-Digest: sha1:$digest\r\n" +
-      s"Content-Type: text/plain\r\n" +
-      s"Content-Length: ${body.length}\r\n\r\n").getBytes(UTF_8)
-    val rec = new ByteArrayOutputStream(head.length + body.length + 4)
-    rec.write(head); rec.write(body)
-    rec.write("\r\n\r\n".getBytes(UTF_8))
-    val bos = new ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(rec.toByteArray); gz.close()
-    bos.toByteArray
+    WarcSink.warcRecord("conversion", Seq(
+      "WARC-Record-ID" -> s"<${WarcSink.recordId(url, body)}>",
+      "WARC-Date" -> warcDate,
+      "WARC-Target-URI" -> url,
+      "WARC-Block-Digest" -> s"sha1:${CcIndex.sha1Base32(body)}"),
+      "text/plain", body)
   }
 
   /** Write `(page_url, wet_text)` rows as WET conversion shards under
@@ -69,10 +54,9 @@ object WetSink {
       .select(col("page_url").cast("string"),
         col("wet_text").cast("string"))
       .as[(String, String)], dir, prefix, warcDate,
-      suffix = ".warc.wet.gz") {
-      (row, date, _) =>
-        conversionMember(if (row._1 == null) "" else row._1,
-          if (row._2 == null) "" else row._2, date)
+      suffix = ".warc.wet.gz") { row =>
+      conversionRecord(if (row._1 == null) "" else row._1,
+        if (row._2 == null) "" else row._2, warcDate)
     }
   }
 }

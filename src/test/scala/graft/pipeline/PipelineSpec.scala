@@ -226,6 +226,69 @@ class PipelineSpec extends AnyFunSuite {
       .forall(_.sparkContext.isStopped))
   }
 
+  test("the CLI rejects a non-positive count flag before it builds a session") {
+    def args(flags: String*): Array[String] = Array("--output_path",
+      new File(tmp, "out_counts").getPath, "--wat_paths", wat1) ++ flags
+    def rejected(flags: String*): String =
+      intercept[IllegalArgumentException](graft.Main.main(args(flags: _*)))
+        .getMessage
+    val live = factory()
+    for ((flag, v) <- Seq("multipart" -> "0", "multipart" -> "-1",
+        "multipart" -> "all", "wat_count" -> "0", "wat_count" -> "x",
+        "wat_index_count" -> "-2")) {
+      val msg = rejected(s"--$flag", v)
+      assert(msg.contains(s"--$flag") && msg.contains(v), msg)
+    }
+    // a zero count is rejected by name, not met later as grouped(0)
+    val msg = rejected("--wat_count", "0", "--multipart", "2")
+    assert(msg.contains("--wat_count"), msg)
+    assert(!live.sparkContext.isStopped)
+    live.stop()
+    // `all` stays the uncapped sentinel for the two counts
+    val cfg = graft.Main.config(graft.Main.parseArgs(
+      args("--wat_count", "all", "--wat_index_count", "all",
+        "--multipart", "3")))
+    assert(cfg.watCount.isEmpty && cfg.watIndexCount.isEmpty)
+    assert(cfg.multipart.contains(3))
+  }
+
+  test("resume after a crash mid-job rewrites only the unfinished parts") {
+    val wats = (0 until 3).map(i => WatFixture.syntheticWat(
+      new File(tmp, s"crash$i.warc.wat.gz").getAbsolutePath, 30, 8,
+      seed = 40L + i))
+    val cfg = Cc2Config(new File(tmp, "out_crash").getAbsolutePath,
+      "image", multipart = Some(3), shuffle = true)
+    val (jobPath, n) = Cc2Dataset.run(cfg, wats, factory)
+    // per merged bucket (the id its file name carries): rows in file order
+    def bucketRows(): Map[Int, Seq[String]] = {
+      val spark = factory()
+      OutputWriteSpec.partFiles(s"$jobPath/merged").map { f =>
+        OutputWriteSpec.bucketOf(f) -> spark.read.parquet(f.getAbsolutePath)
+          .collect().map(_.toString).toSeq
+      }.toMap
+    }
+    def stamps(dir: String): Seq[(String, Long)] =
+      new File(dir).listFiles().toSeq.map(f => (f.getName, f.lastModified))
+        .sorted
+    val clean = bucketRows()
+    assert(clean.nonEmpty && clean.values.map(_.size).sum == n)
+    val part0 = stamps(s"$jobPath/part_0")
+    // the crash: part_1 never committed, part_2 and the merge never ran
+    def rmr(f: File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete()
+    }
+    assert(new File(s"$jobPath/part_1/_SUCCESS").delete())
+    rmr(new File(s"$jobPath/part_2"))
+    rmr(new File(s"$jobPath/merged"))
+    val (jobPath2, n2) = Cc2Dataset.run(
+      cfg.copy(resume = Some(jobPath)), Nil, factory)
+    assert(jobPath2 == jobPath && n2 == n)
+    assert(stamps(s"$jobPath/part_0") == part0)
+    assert(new File(s"$jobPath/part_1/_SUCCESS").exists())
+    assert(new File(s"$jobPath/part_2/_SUCCESS").exists())
+    assert(bucketRows() == clean)
+  }
+
   test("listing-page parser is total on hostile HTML and emits only well-formed index urls") {
     val rnd = new scala.util.Random(31)
     val frags = Seq("<li>", "s3://commoncrawl/crawl-data/", "CC-MAIN-",

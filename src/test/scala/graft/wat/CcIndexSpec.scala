@@ -106,8 +106,9 @@ class CcIndexSpec extends AnyFunSuite with SparkTestBase {
 
   test("recordAt fetches exactly the member's record by (offset, length)") {
     val recs = (0 until 5).map { i =>
-      gz(WatFixture.warcRecord("response", s"payload-$i",
-        Some(s"https://e.test/p$i"), "application/http; msgtype=response"))
+      gz(WarcSink.warcRecord("response",
+        Seq("WARC-Target-URI" -> s"https://e.test/p$i"),
+        "application/http; msgtype=response", s"payload-$i".getBytes(UTF_8)))
     }
     val f = java.io.File.createTempFile("ccindex-recordat", ".warc.gz")
     f.deleteOnExit()
@@ -122,8 +123,9 @@ class CcIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(r.payloadString == "payload-3")
     // a non-gzip member (zstd frame / plain bytes) takes the sniffing
     // fallback: same record either way
-    val plain = WatFixture.warcRecord("response", "plain-rec",
-      Some("https://e.test/plain"), "application/http; msgtype=response")
+    val plain = WarcSink.warcRecord("response",
+      Seq("WARC-Target-URI" -> "https://e.test/plain"),
+      "application/http; msgtype=response", "plain-rec".getBytes(UTF_8))
     val inf = new java.util.zip.Inflater(true)
     try {
       val viaFallback = CcIndex.memberRecord(plain, 0, plain.length, inf)

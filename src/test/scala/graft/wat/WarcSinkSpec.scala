@@ -77,6 +77,23 @@ class WarcSinkSpec extends AnyFunSuite with SparkTestBase {
         "retry idempotence and golden checks both rest on this")
   }
 
+  test("a shard write that throws fails the job and leaves no temp file") {
+    import spark.implicits._
+    val dir = tmpDir("warc-throw")
+    val rows = spark.sparkContext.parallelize(1 to 5, 1).toDS()
+    val e = intercept[org.apache.spark.SparkException] {
+      WarcSink.writeShards(rows, dir.getAbsolutePath, "boom",
+          "2024-01-01T00:00:00Z") { i =>
+        if (i == 3) throw new IllegalStateException("third row")
+        WarcSink.warcRecord("resource", Nil, "text/plain",
+          s"row $i".getBytes("UTF-8"))
+      }.collect()
+    }
+    assert(e.getMessage.contains("third row"), e.getMessage)
+    // neither the attempt's temp (nor its checksum) nor a shard remains
+    assert(dir.list().isEmpty, dir.list().mkString(", "))
+  }
+
   test("writeRecords: binary bodies round-trip byte-for-byte with " +
       "their own status and content type") {
     import spark.implicits._

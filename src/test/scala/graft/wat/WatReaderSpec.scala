@@ -45,7 +45,8 @@ class WatReaderSpec extends AnyFunSuite {
     assert(recs.size == WatFixture.records.size) // garbage ends iteration, no throw
 
     // corrupt Content-Length must end the file, not kill the task
-    val hostile = WatFixture.warcRecord("metadata", "{}")
+    val hostile = WarcSink.warcRecord("metadata", Nil, "application/json",
+      "{}".getBytes("UTF-8"))
     val corrupted = new String(hostile, "ISO-8859-1")
       .replaceFirst("Content-Length: \\d+", "Content-Length: 3000000000")
       .getBytes("ISO-8859-1")

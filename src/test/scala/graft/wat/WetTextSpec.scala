@@ -27,20 +27,19 @@ class WetTextSpec extends AnyFunSuite with SparkTestBase {
 
   test("conversion records read; warcinfo and URI-less records skip") {
     val path = writeWet(Seq(
-      WatFixture.warcRecordBytes("warcinfo",
-        "software: x\r\n".getBytes("UTF-8"), None,
-        "application/warc-fields"),
-      WatFixture.warcRecordBytes("conversion",
-        "extracted text one".getBytes("UTF-8"),
-        Some("https://e.test/1"), "text/plain"),
+      WarcSink.warcRecord("warcinfo", Nil, "application/warc-fields",
+        "software: x\r\n".getBytes("UTF-8")),
+      WarcSink.warcRecord("conversion",
+        Seq("WARC-Target-URI" -> "https://e.test/1"), "text/plain",
+        "extracted text one".getBytes("UTF-8")),
       // a conversion record with NO target URI contributes nothing
-      WatFixture.warcRecordBytes("conversion",
-        "orphan".getBytes("UTF-8"), None, "text/plain"),
+      WarcSink.warcRecord("conversion", Nil, "text/plain",
+        "orphan".getBytes("UTF-8")),
       // BOM'd UTF-8 payload decodes clean (Charsets.decode)
-      WatFixture.warcRecordBytes("conversion",
+      WarcSink.warcRecord("conversion",
+        Seq("WARC-Target-URI" -> "https://e.test/2"), "text/plain",
         Array[Byte](0xef.toByte, 0xbb.toByte, 0xbf.toByte) ++
-          "bom café".getBytes("UTF-8"),
-        Some("https://e.test/2"), "text/plain")))
+          "bom café".getBytes("UTF-8"))))
     val it = WetText.docsOf(path, spark.sparkContext.hadoopConfiguration,
       _ => ())
     val docs = try it.toVector finally it.close()
@@ -53,11 +52,12 @@ class WetTextSpec extends AnyFunSuite with SparkTestBase {
     // the established WAT/WARC fault model: a member CUT mid-stream
     // reports corrupt and ends the file, records before it survive
     val whole = writeWet(Seq(
-      WatFixture.warcRecordBytes("conversion",
-        "ok".getBytes("UTF-8"), Some("https://e.test/ok"), "text/plain"),
-      WatFixture.warcRecordBytes("conversion",
-        ("pad " * 200).getBytes("UTF-8"),
-        Some("https://e.test/cut"), "text/plain")))
+      WarcSink.warcRecord("conversion",
+        Seq("WARC-Target-URI" -> "https://e.test/ok"), "text/plain",
+        "ok".getBytes("UTF-8")),
+      WarcSink.warcRecord("conversion",
+        Seq("WARC-Target-URI" -> "https://e.test/cut"), "text/plain",
+        ("pad " * 200).getBytes("UTF-8"))))
     val bytes = java.nio.file.Files.readAllBytes(
       new java.io.File(whole).toPath)
     val f = java.io.File.createTempFile("graft-wet-corrupt", ".warc.wet.gz")
