@@ -53,7 +53,10 @@ object SessionBuilder {
     // trust the write-time bucket sort on read (safe: Spark still
     // re-sorts any bucket with more than one file; Bucketing writes
     // exactly one sorted file per bucket so SMJs stream sort-free)
-    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+    // `file:` sets permissions in-process instead of forking `chmod`
+    // once per file and directory written (GraftLocalFileSystem)
+    GraftLocalFileSystem.SparkImpl)
 
   private val LocalN = raw"local\[\s*([0-9]+|\*)\s*(?:,\s*[0-9]+\s*)?\]".r
   private val LocalCluster =

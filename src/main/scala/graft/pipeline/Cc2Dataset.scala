@@ -197,6 +197,8 @@ object Cc2Dataset {
       sparkFactory: () => SparkSession): (String, Long) = {
     require(config.resume.isEmpty || config.multipart.isDefined,
       "resume requires multipart") // main.py:352-353
+    require(config.multipart.forall(_ > 0),
+      s"multipart must be positive, got: ${config.multipart.get}")
     val jobPath = config.resume.getOrElse {
       val jobId = LocalDateTime.now()
         .format(DateTimeFormatter.ofPattern("yyyy-MM-dd-HH-mm-ss"))

@@ -95,6 +95,15 @@ object QueryUtil {
     *    java.io.File.renameTo, atomic on a local POSIX fs with no
     *    subprocess; on HDFS/S3 the FileContext rename is the atomic one,
     *    which is why a durable checkpoint must never get this manager.
+    *    This manager also writes through the session's `file:`
+    *    filesystem ([[graft.GraftLocalFileSystem]]), which sets each new
+    *    file's permissions without forking `chmod`. The FileContext
+    *    manager does not: a FileContext resolves `file:` through
+    *    `org.apache.hadoop.fs.local.RawLocalFs`, which builds a stock
+    *    `RawLocalFileSystem` of its own, so it still forks `chmod` per
+    *    create and `readlink` (`FileUtil.readLink`) per rename. That
+    *    path, and Spark's `rm -rf` in
+    *    `JavaUtils.deleteRecursivelyUsingUnixNative`, are left as is.
     */
   def withScratchCheckpoints[A](s: SparkSession, ckptDir: String)(
       body: => A): A = {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.GraftLocalFileSystem
 import graft.sources.{ArchiveDataSource, ArchiveFormat}
 
 /** The columnar-index access path: instead of scanning whole archives
@@ -179,7 +180,7 @@ object CcIndex {
     * on local/HDFS). None after final failure.
     */
   def fetchRange(path: String, offset: Long, length: Int,
-      conf: Configuration = new Configuration(),
+      conf: Configuration = GraftLocalFileSystem.conf(),
       attempts: Int = 10, sleepMs: Long = 1000L): Option[Array[Byte]] =
     WatReader.withRetry(attempts, sleepMs) {
       val p = new Path(path)
@@ -196,7 +197,7 @@ object CcIndex {
     * inside that gzip member. None on fetch failure or frame garbage.
     */
   def recordAt(path: String, offset: Long, length: Long,
-      conf: Configuration = new Configuration(),
+      conf: Configuration = GraftLocalFileSystem.conf(),
       onCorrupt: Exception => Unit = WatReader.logCorruptDefault)
       : Option[WarcRecord] = {
     if (length <= 0 || length > Int.MaxValue) return None

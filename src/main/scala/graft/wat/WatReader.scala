@@ -7,6 +7,8 @@ import java.util.zip.GZIPInputStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
+import graft.GraftLocalFileSystem
+
 /** One WARC record: parsed header map + raw payload bytes. */
 final case class WarcRecord(headers: Map[String, String], payload: Array[Byte]) {
   def warcType: String = headers.getOrElse("warc-type", "")
@@ -68,7 +70,7 @@ object WatReader {
     * remote GETs, the reference's own S3 throughput fix (HISTORY.md:23).
     * Returns empty on final failure (reference yields nothing).
     */
-  def fetchAllBytes(path: String, conf: Configuration = new Configuration(),
+  def fetchAllBytes(path: String, conf: Configuration = GraftLocalFileSystem.conf(),
       attempts: Int = 10, sleepMs: Long = 1000L): Option[Array[Byte]] =
     withRetry(attempts, sleepMs) {
       val p = new Path(path)
@@ -205,7 +207,7 @@ object WatReader {
     * a partially-read remote stream cannot be resumed without re-reading,
     * which is exactly what whole-file mode is for.
     */
-  def openStream(path: String, conf: Configuration = new Configuration(),
+  def openStream(path: String, conf: Configuration = GraftLocalFileSystem.conf(),
       attempts: Int = 10, sleepMs: Long = 1000L): Option[InputStream] =
     withRetry(attempts, sleepMs) {
       val p = new Path(path)
@@ -217,7 +219,7 @@ object WatReader {
     * DSv2 scans, counts) skip the per-record UTF-8 decode entirely. The
     * fetch or stream decode is [[archiveRecords]]'s.
     */
-  def metadataRecords(path: String, conf: Configuration = new Configuration(),
+  def metadataRecords(path: String, conf: Configuration = GraftLocalFileSystem.conf(),
       onCorrupt: Exception => Unit = WatReader.logCorrupt): ClosingIterator[WarcRecord] = {
     val recs = archiveRecords(path, conf, onCorrupt)
     new ClosingIterator(
@@ -237,7 +239,7 @@ object WatReader {
     * a time, since no byte array can hold it. An unknown length fetches
     * whole.
     */
-  def archiveRecords(path: String, conf: Configuration = new Configuration(),
+  def archiveRecords(path: String, conf: Configuration = GraftLocalFileSystem.conf(),
       onCorrupt: Exception => Unit = WatReader.logCorrupt): ClosingIterator[WarcRecord] =
     archiveRecords(path, conf, onCorrupt, MaxArrayBytes)
 
@@ -267,7 +269,7 @@ object WatReader {
     * Per-record error tolerance lives in the JSON layer downstream
     * (cc2dataset/main.py:139-142); frame-level garbage ends the file.
     */
-  def metadataPayloads(path: String, conf: Configuration = new Configuration(),
+  def metadataPayloads(path: String, conf: Configuration = GraftLocalFileSystem.conf(),
       onCorrupt: Exception => Unit = WatReader.logCorrupt): ClosingIterator[String] = {
     val recs = metadataRecords(path, conf, onCorrupt)
     new ClosingIterator(recs.map(_.payloadString), () => recs.close())

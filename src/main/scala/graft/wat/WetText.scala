@@ -30,17 +30,20 @@ object WetText {
 
   /** All conversion records of one WET file. Non-conversion records
     * (warcinfo headers CC writes first) are skipped; a record without
-    * a target URI is dropped (nothing to key the page by).
+    * a target URI is dropped (nothing to key the page by). With `text`
+    * false the body is not decoded and `wet_text` is null.
     */
   def docsOf(path: String, conf: Configuration,
-      onCorrupt: Exception => Unit): ClosingIterator[WetDoc] = {
+      onCorrupt: Exception => Unit,
+      text: Boolean = true): ClosingIterator[WetDoc] = {
     val ccName = path.substring(path.lastIndexOf('/') + 1)
     val recs = WatReader.archiveRecords(path, conf, onCorrupt)
     new ClosingIterator(
       recs.filter(_.warcType.equalsIgnoreCase("conversion"))
         .flatMap { r =>
           r.headers.get("warc-target-uri").map { uri =>
-            WetDoc(ccName, uri, graft.ext.Charsets.decode(r.payload)._1)
+            WetDoc(ccName, uri,
+              if (text) graft.ext.Charsets.decode(r.payload)._1 else null)
           }
         },
       () => recs.close())
@@ -66,10 +69,14 @@ object WetSource extends ArchiveFormat {
   val schema: StructType =
     StructType.fromDDL("wet_path string, page_url string, wet_text string")
 
+  /** A pruned `wet_text` skips the body decode (row count = conversion
+    * records with a target URI either way).
+    */
   def decode(path: String, conf: Configuration, required: Set[String],
       onCorrupt: Exception => Unit): ClosingIterator[Array[Any]] = {
     val u = UTF8String.fromString(path)
-    val docs = WetText.docsOf(path, conf, onCorrupt)
+    val docs =
+      WetText.docsOf(path, conf, onCorrupt, text = required("wet_text"))
     new ClosingIterator(
       docs.map(d => Array[Any](u, UTF8String.fromString(d.page_url),
         UTF8String.fromString(d.wet_text))),

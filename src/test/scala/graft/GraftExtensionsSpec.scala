@@ -10,9 +10,14 @@ import graft.functions.GraftFunctions
   * available in SQL without explicit registration, and must inject the
   * same function set `GraftFunctions.register` adds. These tests build
   * bare sessions on purpose: the extension path is the one a session
-  * that `SessionBuilder` did not build takes.
+  * that `SessionBuilder` did not build takes. Each still names the
+  * `file:` filesystem: Hadoop caches one per JVM, so a bare session's
+  * first `file:` lookup would fix Hadoop's stock class for every suite
+  * after it.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
+
+  private val LocalFs = GraftLocalFileSystem.SparkImpl
 
   test("extensions injector registers url_resolve for SQL") {
     SparkSession.getActiveSession.foreach(_.stop())
@@ -21,6 +26,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .appName("graft-ext-test")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs._1, LocalFs._2)
       .getOrCreate()
     try {
       val got = spark.sql(
@@ -53,7 +59,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
       confs.foldLeft(SparkSession.builder()
         .master("local[2]")
         .appName("graft-ext-test")
-        .config("spark.ui.enabled", "false")) { case (b, (k, v)) =>
+        .config("spark.ui.enabled", "false")
+        .config(LocalFs._1, LocalFs._2)) { case (b, (k, v)) =>
           b.config(k, v)
         }.getOrCreate()
 

@@ -1,11 +1,15 @@
 package graft.pipeline
 
 import java.io.File
+import java.net.URI
 import java.nio.file.Files
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{GraftLocalFileSystem, ProcessStarts, SparkTestBase}
 import graft.ops.PartMerge
 import graft.wat.WatFixture
 
@@ -352,6 +356,49 @@ class PipelineSpec extends AnyFunSuite {
       Cc2Dataset.run(Cc2Config(outputPath = "/tmp/x", resume = Some("/tmp/x")),
         Nil, factory)
     }
+  }
+
+  test("an API caller's non-positive multipart is rejected before any write") {
+    for (m <- Seq(0, -1)) {
+      val out = new File(tmp, s"out_multipart$m")
+      val msg = intercept[IllegalArgumentException] {
+        Cc2Dataset.run(Cc2Config(outputPath = out.getAbsolutePath,
+          multipart = Some(m)), Seq(wat1), factory)
+      }.getMessage
+      assert(msg.contains("multipart") && msg.contains(m.toString), msg)
+      assert(!out.exists(), s"multipart=$m wrote $out")
+    }
+  }
+
+  test("a single-part run forks no chmod: the session's file: filesystem " +
+      "sets permissions in-process") {
+    // Hadoop caches one `file:` filesystem per JVM: the session's conf
+    // must resolve the graft class, not a stock one an earlier lookup
+    // with a bare conf fixed
+    val local = FileSystem.get(
+      URI.create("file:///"), factory().sparkContext.hadoopConfiguration)
+    assert(local.getClass == classOf[GraftLocalFileSystem])
+    // enough image links to fill most of the write's 256 buckets
+    val wat = WatFixture.syntheticWat(
+      new File(tmp, "forks.warc.wat.gz").getAbsolutePath, 300, 8, seed = 7L)
+    val out = new File(tmp, "out_forks").getAbsolutePath
+    val probe = new File(tmp, "chmod_probe")
+    assert(probe.createNewFile())
+    val ((jobPath, n), commands) = ProcessStarts.during {
+      val r = Cc2Dataset.run(Cc2Config(outputPath = out), Seq(wat), factory)
+      // the recording sees a stock setPermission's fork, if it makes one
+      val stock = new RawLocalFileSystem()
+      stock.initialize(URI.create("file:///"), new Configuration())
+      stock.setPermission(new Path(probe.getPath),
+        new FsPermission(Integer.parseInt("640", 8).toShort))
+      r
+    }
+    assert(n > 0)
+    val parquet = new File(jobPath).list().count(_.endsWith(".parquet"))
+    assert(parquet > 200) // each with a .crc sidecar
+    val chmods = ProcessStarts.chmods(commands)
+    assert(chmods.size == ProcessStarts.StockChmods, chmods)
+    assert(chmods.forall(_.endsWith(probe.getName)), chmods)
   }
 
   test("index discovery: read, tail-slice, sample with replacement") {

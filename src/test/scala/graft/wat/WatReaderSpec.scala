@@ -145,7 +145,7 @@ class WatReaderSpec extends AnyFunSuite {
   // the reader's test seam: archives longer than `limit` take the
   // streaming branch, the rest are fetched whole
   private def metadataWithin(path: String, limit: Long,
-      conf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration(),
+      conf: org.apache.hadoop.conf.Configuration = graft.GraftLocalFileSystem.conf(),
       onCorrupt: Exception => Unit = _ => ()): ClosingIterator[WarcRecord] = {
     val recs = WatReader.archiveRecords(path, conf, onCorrupt, wholeFileLimit = limit)
     new ClosingIterator(recs.filter(_.warcType.equalsIgnoreCase("metadata")),

@@ -48,6 +48,39 @@ class WetTextSpec extends AnyFunSuite with SparkTestBase {
       ("https://e.test/2", "bom café")))
   }
 
+  test("a select without wet_text skips the body decode, keeps every row") {
+    val path = writeWet(Seq(
+      WarcSink.warcRecord("conversion",
+        Seq("WARC-Target-URI" -> "https://e.test/1"), "text/plain",
+        "one".getBytes("UTF-8")),
+      WarcSink.warcRecord("conversion", Nil, "text/plain",
+        "orphan".getBytes("UTF-8")),
+      WarcSink.warcRecord("conversion",
+        Seq("WARC-Target-URI" -> "https://e.test/2"), "text/plain",
+        "two".getBytes("UTF-8"))))
+    val frame = spark.read.format(classOf[WetSource].getName).load(path)
+    val urls = frame.select("page_url")
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val scanned = urls.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.output.map(_.name)
+    }.get
+    assert(!scanned.contains("wet_text"), scanned)
+    assert(urls.collect().map(_.getString(0)).toSeq ==
+      Seq("https://e.test/1", "https://e.test/2"))
+    assert(frame.count() == 2)
+    // the decoder itself: the pruned column is left null, not decoded
+    val conf = spark.sparkContext.hadoopConfiguration
+    def rows(required: Set[String]) = {
+      val it = WetSource.decode(path, conf, required, _ => ())
+      try it.toVector.map(_.toSeq) finally it.close()
+    }
+    val pruned = rows(Set("wet_path", "page_url"))
+    assert(pruned.map(_(2)) == Vector(null, null))
+    assert(pruned.map(_.take(2)) ==
+      rows(WetSource.schema.fieldNames.toSet).map(_.take(2)))
+    assert(rows(Set("wet_text")).map(_(2).toString) == Vector("one", "two"))
+  }
+
   test("a truncated frame ends the file; prior records survive") {
     // the established WAT/WARC fault model: a member CUT mid-stream
     // reports corrupt and ends the file, records before it survive
